@@ -315,12 +315,6 @@ NP_SUB = "(SELECT np FROM u_params)"
 NT_SUB = "(SELECT nt FROM u_params)"
 
 
-def alias_base_values_sql() -> str:
-    """Render the PERSONS head as a VALUES relation (DuckDB oracle)."""
-    rows = ", ".join(f"({i}, '{a}')" for i, a in enumerate(PERSONS))
-    return f"(VALUES {rows}) AS alias_base(pid, alias)"
-
-
 def duckdb_prelude() -> str:
     """CTE prelude giving DuckDB `alias_base`/`u_params`/`alias_full`/
     `alias_dict`/`transcripts` — the oracle-side universe chain."""

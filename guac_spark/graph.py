@@ -242,22 +242,14 @@ def filter_edges_spec(
     return out
 
 
-def page_edges(edges: DataFrame, after: str | None, first: int) -> DataFrame:
-    """Keyset pagination over edges, cursor = edge_id — the *List verb
-    variant (backends.go:37-62 *List methods return edges with pageInfo;
-    same no-OFFSET keyset discipline as page_vertices)."""
-    out = edges
-    if after is not None:
-        out = out.filter(F.col("edge_id") > after)
-    return out.orderBy("edge_id").limit(first)
-
-
 def page_edges_connection(
     edges: DataFrame, after: str | None, first: int
 ) -> DataFrame:
     """Connection-shaped edge page: rows + totalCount + pageInfo, empty
     pages keep the metadata as a sentinel row (same contract as
-    page_vertices_connection)."""
+    page_vertices_connection). Keyset pagination, cursor = edge_id — the
+    *List verb variant (backends.go:37-62 *List methods return edges
+    with pageInfo)."""
     total = edges.agg(F.count("*").cast("long").alias("total_count"))
     filtered = edges
     if after is not None:

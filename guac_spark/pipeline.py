@@ -12,12 +12,21 @@ Shuffle budget at scale (the plan we would want on 1000 executors):
   * head linking: broadcast join, no shuffle of the mention stream.
   * tail linking: shuffles only DISTINCT unmatched surfaces (tiny).
   * CC: iterates over the same_as edge set only (≪ corpus), salted min-agg.
-  * triples/vertices/edges dedup: one hash-partitioned shuffle each on the
-    dedup key — unavoidable and key-uniform (ids are sha2 hashes).
+  * transcripts, mentions_linked and triples are written bucketed on
+    conv_id, so the mention stream and the triples dedup and vertices
+    turn-ref dedup run with no exchange at all.
+  * vertices entity arm / edges dedup: one hash-partitioned shuffle each
+    on the dedup key — unavoidable and key-uniform (ids are sha2 hashes).
+
+The bucket count is sized to the input (`conv_buckets`): the files of
+every bucketed write and the tasks of every stage downstream of one
+scale with it, so sizing it to the corpus keeps a small build's cost in
+proportion to its data.
 """
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
 
@@ -27,10 +36,25 @@ from pyspark.sql import functions as F
 from . import assemble, cc, corpus, extract, link
 from .warehouse import Warehouse
 
-# bucket count for the mentions_linked snapshot — fixed so every
-# parallelism level reads the identical layout (scaling runs compare
-# byte-identical inputs)
-N_BUCKETS = 64
+# conv_id bucket count of the transcripts, mentions_linked and triples
+# snapshots: one bucket per TURNS_PER_BUCKET input turns, clamped to
+# [1, MAX_BUCKETS]. It is derived from the input's footer row count
+# alone — never from cores or a setting — so every parallelism level
+# writes the identical layout (scaling runs compare byte-identical
+# snapshots), while a small corpus does not pay MAX_BUCKETS files and
+# tasks per bucketed stage. In a sweep on a 4-vCPU host (warm full
+# builds) 64 buckets was 1.5-2.3x slower than the best count at 1k, 10k
+# and 100k turns; 8192 turns per bucket lands in the fast range at all
+# three sizes and reaches 64 buckets at 512k turns.
+TURNS_PER_BUCKET = 8_192
+MAX_BUCKETS = 64
+
+
+def conv_buckets(turns: int) -> int:
+    """Bucket count for a corpus of `turns` turns (monotone, in
+    [1, MAX_BUCKETS])."""
+    return min(MAX_BUCKETS, max(1, math.ceil(turns / TURNS_PER_BUCKET)))
+
 
 # engine schema version, recorded in the warehouse commit log: resuming a
 # warehouse written by a different version is refused instead of producing
@@ -110,6 +134,15 @@ def run_pipeline(
                 "resume=False (or a fresh warehouse_root) to rebuild"
             )
     wh.set_meta("schema_version", SCHEMA_VERSION)
+    n_events = corpus._events_rows(sf_dir)
+    # the bucket count is stamped next to the universe params; a resume
+    # reuses the stamp, so stages it still has to run write the layout
+    # the committed ones have even if the rule changed in between
+    n_buckets = wh.get_meta("conv_buckets") if resume else None
+    if n_buckets is None:
+        n_buckets = conv_buckets(n_events)
+        wh.set_meta("conv_buckets", n_buckets)
+    bucket_by = (n_buckets, ["conv_id"])
     res = PipelineResult()
     t0 = time.time()
     if engine == "auto":
@@ -134,7 +167,7 @@ def run_pipeline(
     # incremental maintenance path) can pin them.
     def _build_adict() -> DataFrame:
         df = corpus.alias_dict(spark, sf_dir)
-        np_, nt = corpus.universe(corpus._events_rows(sf_dir))
+        np_, nt = corpus.universe(n_events)
         wh.set_meta("universe", {"np": np_, "nt": nt})
         return df
 
@@ -186,7 +219,7 @@ def run_pipeline(
             stage,
             "transcripts",
             lambda: corpus.transcripts(spark, sf_dir),
-            bucket_by=(N_BUCKETS, ["conv_id"]),
+            bucket_by=bucket_by,
         )
         adict = fa.result()
         transcripts = ft.result()
@@ -216,9 +249,7 @@ def run_pipeline(
     # that the equivalences stage was dominated by the full-table read
     # did not survive measurement — LSH dominates it). Numbers in
     # NOTES_r5.md / BENCH.md.
-    linked = stage(
-        "mentions_linked", build_linked, bucket_by=(N_BUCKETS, ["conv_id"])
-    )
+    linked = stage("mentions_linked", build_linked, bucket_by=bucket_by)
 
     def build_links() -> DataFrame:
         tail = link.link_tail(link.unmatched_surfaces(linked), adict)
@@ -274,7 +305,7 @@ def run_pipeline(
             linked, mapping,
             broadcast_mapping=n_mapped <= MAPPING_BROADCAST_LIMIT,
         ),
-        bucket_by=(N_BUCKETS, ["conv_id"]),
+        bucket_by=bucket_by,
     )
 
     # vertices and edges both derive from the committed triples snapshot

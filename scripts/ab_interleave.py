@@ -7,8 +7,15 @@ every ref runs from its own clean worktree, legs strictly interleaved
     python scripts/ab_interleave.py --refs c7a2a48 4a6ce39 HEAD \
         --runs 3 --cpus 4 --repl 256
 
-Prints one JSON line: per-ref raw pipeline seconds + turns/sec, medians,
-and each ref's throughput ratio vs the first ref.
+--trees takes source directories instead of refs (e.g. a `git archive`
+export of the parent next to the working tree), and --sf-dir runs an
+existing corpus instead of a replica:
+
+    python scripts/ab_interleave.py --trees ../parent . \
+        --runs 5 --cpus 4 --sf-dir <corpus dir, e.g. sf0.1>
+
+Prints one JSON line: per-leg raw pipeline seconds + turns/sec, medians,
+and each leg's throughput ratio vs the first.
 """
 
 from __future__ import annotations
@@ -59,45 +66,54 @@ def run_leg(tree: str, cpus: int, sf_dir: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--refs", nargs="+", required=True,
-                    help="git refs, first is the comparison baseline")
+    legs_src = ap.add_mutually_exclusive_group(required=True)
+    legs_src.add_argument("--refs", nargs="+",
+                          help="git refs, first is the comparison baseline")
+    legs_src.add_argument("--trees", nargs="+",
+                          help="source directories, first is the baseline")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=4)
     ap.add_argument("--repl", type=int, default=256)
+    ap.add_argument("--sf-dir", help="existing corpus; skips replication")
     args = ap.parse_args()
 
-    sf = prepare_replica(args.repl)
-    trees = {r: worktree(r) for r in args.refs}
-    legs: dict[str, list] = {r: [] for r in args.refs}
+    sf = args.sf_dir or prepare_replica(args.repl)
+    if args.trees:
+        trees = {t: os.path.abspath(t) for t in args.trees}
+    else:
+        trees = {r: worktree(r) for r in args.refs}
+    names = list(trees)
+    legs: dict[str, list] = {r: [] for r in names}
     for i in range(args.runs):
-        for r in args.refs:
+        for r in names:
             print(f"run {i + 1}/{args.runs} [{r}]...",
                   file=sys.stderr, flush=True)
             legs[r].append(run_leg(trees[r], args.cpus, sf))
 
     meds = {
         r: statistics.median(d["turns_per_sec"] for d in legs[r])
-        for r in args.refs
+        for r in names
     }
-    base = args.refs[0]
+    base = names[0]
     print(json.dumps({
-        "refs": args.refs,
-        "repl": args.repl,
+        "refs": names,
+        "sf_dir": sf,
+        "repl": 1 if args.sf_dir else args.repl,
         "cpus": args.cpus,
         "runs": args.runs,
         "turns": legs[base][0]["turns"],
         "pipeline_sec_runs": {
-            r: [d["value"] for d in legs[r]] for r in args.refs
+            r: [d["value"] for d in legs[r]] for r in names
         },
         "turns_per_sec_runs": {
-            r: [d["turns_per_sec"] for d in legs[r]] for r in args.refs
+            r: [d["turns_per_sec"] for d in legs[r]] for r in names
         },
         "median_turns_per_sec": meds,
         "ratio_vs_first": {
-            r: round(meds[r] / meds[base], 4) for r in args.refs
+            r: round(meds[r] / meds[base], 4) for r in names
         },
         "stage_secs_last": {
-            r: legs[r][-1]["stage_secs"] for r in args.refs
+            r: legs[r][-1]["stage_secs"] for r in names
         },
     }))
 

@@ -45,6 +45,15 @@ def duck_small():
     return duck_con(SF_SMALL)
 
 
+def num_buckets(spark, wh_root: str, table: str) -> int:
+    """Catalog `Num Buckets` of a committed bucketed snapshot."""
+    from guac_spark.warehouse import Warehouse
+
+    cat = Warehouse(wh_root)._read_log()["tables"][table]["catalog_table"]
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {cat}").collect()
+    return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
+
+
 def normalize_rows(cols, rows):
     """Driver-style normalization: sort columns by name, stringify cells,
     sort rows — order- and dtype-insensitive multiset comparison."""

@@ -136,6 +136,45 @@ def test_bucketed_mentions_linked_dedups_without_shuffle(spark):
     assert "Exchange hashpartitioning" not in plan
 
 
+def test_conv_buckets_rule():
+    """The bucket count is a function of the input's turn count alone:
+    monotone, clamped to [1, MAX_BUCKETS], with no parallelism or
+    setting among its inputs (so every core count writes one layout)."""
+    import inspect
+
+    from guac_spark import pipeline
+
+    assert list(inspect.signature(pipeline.conv_buckets).parameters) == [
+        "turns"
+    ]
+    per = pipeline.TURNS_PER_BUCKET
+    sizes = [0, 1, 1_000, per, per + 1, 100_000, 10**6, 2 * 10**6,
+             64 * per, 64 * per + 1, 10**9]
+    counts = [pipeline.conv_buckets(n) for n in sizes]
+    assert counts == sorted(counts)
+    assert all(1 <= c <= pipeline.MAX_BUCKETS for c in counts)
+    assert counts[:4] == [1, 1, 1, 1] and counts[4] == 2
+    assert counts[-3:] == [pipeline.MAX_BUCKETS] * 3
+
+
+def test_bucketed_snapshots_share_one_count(spark):
+    """transcripts, mentions_linked and triples are written with ONE
+    bucket count — the one derived from the input footers and stamped in
+    the warehouse meta — so the bucket-local consumers line up."""
+    import tempfile
+
+    from guac_spark import pipeline
+    from guac_spark.warehouse import Warehouse
+    from tests.conftest import num_buckets
+
+    root = tempfile.mkdtemp(prefix="wh_nbuckets_")
+    pipeline.run_pipeline(spark, SF_SMALL, root)
+    want = pipeline.conv_buckets(corpus._events_rows(SF_SMALL))
+    assert Warehouse(root).get_meta("conv_buckets") == want
+    for t in ["transcripts", "mentions_linked", "triples"]:
+        assert num_buckets(spark, root, t) == want, t
+
+
 def test_corpus_generation_has_no_sort_merge_join(spark):
     t = corpus.transcripts(spark, SF_SMALL)
     plan = _plan(t)
@@ -191,7 +230,7 @@ def test_kind_partition_prunes_both_consumers(spark):
     wh.write_snapshot(
         wh.read(spark, "mentions_linked"),
         "ml_kind",
-        bucket_by=(64, ["conv_id"]),
+        bucket_by=(wh.get_meta("conv_buckets"), ["conv_id"]),
         partition_by=["kind"],
     )
     linked = wh.read(spark, "ml_kind")

@@ -10,7 +10,7 @@ import pytest
 
 from guac_spark.pipeline import run_pipeline
 from guac_spark.warehouse import Warehouse
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, num_buckets
 
 
 class _Boom(Exception):
@@ -28,6 +28,7 @@ def test_resume_after_kill(spark):
     import guac_spark.pipeline as pl
 
     orig = pl.cc.connected_components
+    orig_rule = pl.conv_buckets
 
     def boom(*a, **k):
         raise _Boom()
@@ -42,12 +43,22 @@ def test_resume_after_kill(spark):
     wh = Warehouse(kill_wh)
     assert wh.has("transcripts") and wh.has("equivalences")
     assert not wh.has("cc_mapping") and not wh.has("triples")
+    stamped = wh.get_meta("conv_buckets")
+    assert stamped == num_buckets(spark, kill_wh, "mentions_linked")
 
-    # resume: committed stages are skipped, the rest run, output identical
-    res = run_pipeline(spark, SF_SMALL, kill_wh, resume=True)
+    # resume: committed stages are skipped, the rest run, output identical.
+    # The bucket rule changes in between (as across engine versions): the
+    # resumed stages must keep writing the stamped layout.
+    pl.conv_buckets = lambda turns: stamped + 2
+    try:
+        res = run_pipeline(spark, SF_SMALL, kill_wh, resume=True)
+    finally:
+        pl.conv_buckets = orig_rule
     assert "transcripts" in res.stages_skipped
     assert "equivalences" in res.stages_skipped
     assert "cc_mapping" in res.stages_run
+    assert wh.get_meta("conv_buckets") == stamped
+    assert num_buckets(spark, kill_wh, "triples") == stamped
     got = sorted(map(tuple, res.tables["triples"].collect()))
     assert got == ref_triples
 
