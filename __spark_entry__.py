@@ -75,7 +75,9 @@ def _q_transcripts(spark, sf):
 
 def _q_mentions(spark, sf):
     from guac_spark import extract
-    return extract.extract_mentions(_ctx(spark, sf)["transcripts"])
+    return extract.mentions_only(
+        extract.extract_mentions_fused(_ctx(spark, sf)["transcripts"])
+    )
 
 
 def _q_linked_mentions(spark, sf):

@@ -102,10 +102,9 @@ def main() -> None:
 
         # --- end-to-end pipeline (fresh warehouse every run) -------------
         wh = os.path.join(tmp, "wh")
-        engine = os.environ.get("SPARK_GRAFT_ENGINE", "auto")
         t0 = time.time()
         res = pipeline.run_pipeline(spark, sf_dir, warehouse_root=wh,
-                                    engine=engine, resume=False)
+                                    resume=False)
         pipe_sec = time.time() - t0
         n_triples = res.triples
         n_turns = res.turns

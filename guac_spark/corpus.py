@@ -52,10 +52,6 @@ turns mention <alias>+<last-char>*2 (edit distance 2); neither variant is in
 the dictionary, so they only link via LSH blocking + n-gram Jaccard, and via
 the explicit `aka` same_as edges — both paths must converge in CC. With the
 grown universe both tails now scale ~linearly with the corpus.
-
-Set GUAC_SPARK_UNIVERSE=fixed to pin np=25/nt=20 (the r1-r4 corpus,
-byte-identical) — used only for apples-to-apples A/B legs against older
-rounds; the driver contract always runs the grown universe.
 """
 
 from __future__ import annotations
@@ -105,19 +101,9 @@ PERSON_DIV = 50                # one generated person per 50 turns
 TOPIC_DIV = 250                # one generated topic per 250 turns
 
 
-# snapshot the universe pin at import: U_PARAMS_SQL (the oracle side) is
-# rendered at import time, so the Spark side must read the flag at the
-# same moment — a per-call read would let a process that mutates the env
-# var after import grow one engine's universe but not the other's
-# (ADVICE r6). All users set the var before spawning the process.
-_UNIVERSE_FIXED = os.environ.get("GUAC_SPARK_UNIVERSE") == "fixed"
-
-
 def universe(n_events: int) -> tuple[int, int]:
     """(np, nt) for a corpus of n_events turns — the Python rendering of
     the exact formula the oracle computes in SQL (u_params CTE)."""
-    if _UNIVERSE_FIXED:
-        return HEAD, N_TOPICS
     return (
         max(HEAD, math.floor(n_events / float(PERSON_DIV))),
         max(N_TOPICS, math.floor(n_events / float(TOPIC_DIV))),
@@ -297,20 +283,14 @@ JOIN alias_full a2 ON a2.pid = n.pid2
 """.strip()
 
 
-# the oracle's SQL rendering of universe(): MUST match the Python formula.
-# GUAC_SPARK_UNIVERSE=fixed pins BOTH engines (ADVICE r5: pinning only the
-# Spark side made the oracle compute the grown universe and report
-# spurious mismatches) — read at import, like the Spark-side universe()
-if _UNIVERSE_FIXED:
-    U_PARAMS_SQL = f"SELECT {HEAD} AS np, {N_TOPICS} AS nt"
-else:
-    U_PARAMS_SQL = (
-        f"SELECT greatest({HEAD}, "
-        f"cast(floor(count(*) / {PERSON_DIV}.0) AS INT))"
-        f" AS np, "
-        f"greatest({N_TOPICS}, cast(floor(count(*) / {TOPIC_DIV}.0) AS INT))"
-        f" AS nt FROM events"
-    )
+# the oracle's SQL rendering of universe(): MUST match the Python formula
+U_PARAMS_SQL = (
+    f"SELECT greatest({HEAD}, "
+    f"cast(floor(count(*) / {PERSON_DIV}.0) AS INT))"
+    f" AS np, "
+    f"greatest({N_TOPICS}, cast(floor(count(*) / {TOPIC_DIV}.0) AS INT))"
+    f" AS nt FROM events"
+)
 NP_SUB = "(SELECT np FROM u_params)"
 NT_SUB = "(SELECT nt FROM u_params)"
 

@@ -1,17 +1,18 @@
 """Per-turn mention detection + triple extraction.
 
-The analog of GUAC's parser registry (/root/reference/pkg/ingestor/parser/
-parser.go:42-56): each parser there is a pure function blob -> predicates;
-here each turn's `text` maps to (subj, pred, obj) surface candidates under a
-closed mention grammar (corpus.py). Two interchangeable engines:
+The analog of GUAC's parser registry (pkg/ingestor/parser/parser.go:42-56):
+each parser there is a pure function blob -> predicates; here each turn's
+`text` maps to (subj, pred, obj) surface candidates under a closed mention
+grammar (corpus.py). `extract_mentions_fused` is the one scan: pure JVM
+expressions (F.regexp_extract_all + explode, inside whole-stage codegen)
+emitting mention rows and aka equivalence rows in one pass over the text.
 
-  * engine='arrow'  — mapInPandas batch extractor (the north-rule shape:
-    vectorized pandas/Arrow UDFs, no per-row Python loops; pandas .str ops
-    over whole Arrow batches).
-  * engine='sql'    — pure JVM path: F.regexp_extract_all + explode, stays
-    inside whole-stage codegen. Semantically identical (tests assert it);
-    at 100 TB this path avoids the Arrow transfer entirely, so the pipeline
-    exposes both and bench.py measures them against each other.
+`_extract_fused_batch` renders the same grammar as a mapInPandas batch
+kernel (vectorized pandas .str ops over whole Arrow batches). No pipeline
+path runs it; it is the parity reference the tests hold the JVM scan to.
+The JVM scan ships because it skips the Arrow transfer: 67.3 s vs 94.7 s
+for the fused scan at 25.6M turns / local[4] (BENCH_ab_r4.json,
+`extract_engine_isolation_local4`).
 
 Stable (conv_id, turn_idx) ordering is preserved by keying every emission
 with (conv_id, turn_idx); no operator here depends on partition order.
@@ -25,7 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# mention grammar — shared by both engines and by the DuckDB oracle.
+# mention grammar — shared by the JVM scan, its Arrow reference and the
+# DuckDB oracle.
 # Keep to the regex subset with identical semantics in java.util.regex,
 # RE2 (DuckDB), and Python re: char classes + single groups.
 # boundary before '@' (start-of-text or non-alphanumeric, via a
@@ -76,11 +78,11 @@ def _gated_arr(kind: str, pat: str):
 # reference's parse-time typed fields (graph_builder.go:62-156).
 MARKER_PREFIX = {"person": "@", "topic": "#", "tool": "tool:", "reply": ">>"}
 
-MENTIONS_SCHEMA = (
-    "conv_id string, turn_idx int, kind string, surface string, span int"
-)
-AKA_SCHEMA = (
-    "conv_id string, turn_idx int, surface_a string, surface_b string"
+# the five mention columns; the fused scan adds surface_b for aka rows
+MENTION_COLS = ["conv_id", "turn_idx", "kind", "surface", "span"]
+FUSED_SCHEMA = (
+    "conv_id string, turn_idx int, kind string, surface string, span int, "
+    "surface_b string"
 )
 
 # predicate vocabulary (FIXTURES.md §3) — the analog of GUAC's 17 verb types
@@ -93,100 +95,14 @@ PRED_BY_KIND = {
 }
 
 
-def _extract_mentions_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        outs = []
-        for kind, pat in MENTION_PATTERNS:
-            found = pdf["text"].str.findall(pat)
-            e = pdf[["conv_id", "turn_idx"]].copy()
-            e["kind"] = kind
-            e["surface"] = found
-            e = e.explode("surface")
-            e = e[e["surface"].notna()]
-            e["surface"] = e["surface"].astype(str)
-            # explode preserves the source index, so pdf.loc[e.index]
-            # realigns each mention with its turn text; str.find has no
-            # per-row-needle vectorized form — the zip loop is the parity
-            # reference only (engine='sql' is the shipped hot path)
-            pfx = MARKER_PREFIX[kind]
-            e["span"] = [
-                t.find(pfx + s) + 1
-                for t, s in zip(pdf.loc[e.index, "text"], e["surface"])
-            ]
-            outs.append(e[["conv_id", "turn_idx", "kind", "surface", "span"]])
-        out = pd.concat(outs, ignore_index=True)
-        out["span"] = out["span"].astype("int32")
-        yield out
-
-
-def _extract_aka_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        pdf = pdf[pdf["text"].str.contains(" aka @", regex=False)]
-        found = pdf["text"].str.findall(AKA_RE)
-        e = pdf[["conv_id", "turn_idx"]].copy()
-        e["pair"] = found
-        e = e.explode("pair")
-        e = e[e["pair"].notna()]
-        if len(e):
-            e["surface_a"] = e["pair"].str[0]
-            e["surface_b"] = e["pair"].str[1]
-        else:
-            e["surface_a"] = pd.Series(dtype=str)
-            e["surface_b"] = pd.Series(dtype=str)
-        yield e[["conv_id", "turn_idx", "surface_a", "surface_b"]]
-
-
-def extract_mentions(transcripts: DataFrame, engine: str = "arrow") -> DataFrame:
-    """(conv_id, turn_idx, kind, surface) — one row per mention occurrence."""
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_mentions_batch, MENTIONS_SCHEMA)
-    if engine == "sql":
-        # one scan: all four patterns evaluated per row, exploded via a
-        # map column (a 4-way union would rescan the table per pattern).
-        # span is computed PRE-explode via transform() while text is in
-        # scope — the exploded rows carry (surface, span) structs, never
-        # a copy of the turn text (carrying text through two explodes
-        # duplicated ~5x the corpus bytes through the stage)
-        kv = []
-        for kind, pat in MENTION_PATTERNS:
-            kv.append(F.lit(kind))
-            kv.append(_gated_arr(kind, pat))
-        return (
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                F.explode(F.create_map(*kv)).alias("kind", "arr"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.explode("arr").alias("e"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.col("e.s").alias("surface"),
-                F.col("e.sp").alias("span"),
-            )
-        )
-    raise ValueError(f"unknown engine {engine!r}")
-
-
 def surface_span_arr(pat: str, prefix: str):
     """array<struct<s: surface, sp: span>> for one mention rule — span =
     1-based first occurrence of the marker (prefix||surface) in the turn
     text (typed per-mention field; see MARKER_PREFIX). Pure JVM exprs,
     evaluated while text is still a scan column.
 
-    Span-fold MEASURED AND REJECTED (VERDICT r5 order #6 / NOTES_r5 #3,
-    scripts/span_probe.py at 6.4M turns / c4, interleaved medians):
+    Span-fold MEASURED AND REJECTED (VERDICT r5 order #6; NOTES_r6 #3,
+    at 6.4M turns / c4, interleaved medians):
     the whole span term costs ~3s of the ~25s scan (constant-span
     baseline 23.8 vs 31.8 shipped — run pair medians varied 3-8s with
     host noise); a concat-free instr(surface) variant recovers most of
@@ -210,88 +126,98 @@ def surface_span_arr(pat: str, prefix: str):
     )
 
 
-FUSED_SCHEMA = MENTIONS_SCHEMA + ", surface_b string"
-# joins the two aka capture groups into one string for the sql engine's
+# joins the two aka capture groups into one string for the scan's
 # map-of-arrays explode; cannot occur in surfaces ([a-z-_@v0-9] only)
 _AKA_SEP = "\x01"
 
 
-def extract_mentions_fused(
-    transcripts: DataFrame, engine: str = "arrow"
-) -> DataFrame:
+def extract_mentions_fused(transcripts: DataFrame) -> DataFrame:
     """ONE corpus scan emitting mention rows AND aka equivalence pairs.
 
-    Output = extract_mentions rows (surface_b null) plus kind='aka' rows
-    (surface=left side, surface_b=right side) — engine-parity and
-    fused-vs-separate parity are pytest-pinned. The pipeline writes this
-    superset as the mentions_linked snapshot so the equivalences stage
-    reads back only the tiny aka slice instead of re-scanning the full
-    transcript corpus: at 100 TB that second scan was a whole extra
-    DRAM/IO pass (and the worst-scaling stage of the r2 bench); here it
-    folds into the extraction scan for the cost of one mostly-null
-    column.
+    Output = one row per mention occurrence (conv_id, turn_idx, kind,
+    surface, span; surface_b null) plus kind='aka' rows (surface=left
+    side, surface_b=right side, span null); `mentions_only` keeps the
+    mention slice. Parity with the Arrow reference `_extract_fused_batch`
+    is pytest-pinned. The pipeline writes this superset as the
+    mentions_linked snapshot so the equivalences stage reads back only
+    the tiny aka slice instead of re-scanning the full transcript corpus:
+    at 100 TB that second scan was a whole extra DRAM/IO pass (and the
+    worst-scaling stage of the r2 bench); here it folds into the
+    extraction scan for the cost of one mostly-null column.
+
+    All patterns are evaluated per row and exploded via a map column (a
+    per-pattern union would rescan the table per pattern). span is
+    computed PRE-explode via transform() while text is in scope — the
+    exploded rows carry (surface, span) structs, never a copy of the turn
+    text (carrying text through two explodes duplicated ~5x the corpus
+    bytes through the stage).
     """
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_fused_batch, FUSED_SCHEMA)
-    if engine == "sql":
-        kv = []
-        for kind, pat in MENTION_PATTERNS:
-            kv.append(F.lit(kind))
-            kv.append(_gated_arr(kind, pat))
-        kv.append(F.lit("aka"))
-        # cheap substring prefilter: most turns have no aka pattern, so
-        # gate the two regex passes behind contains(). aka entries ride
-        # the same struct shape (span null — equivalence payload, not a
-        # mention), so no text column survives the first explode
-        kv.append(
-            F.when(
-                F.col("text").contains(" aka @"),
-                F.zip_with(
-                    F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1)),
-                    F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2)),
-                    lambda a, b: F.struct(
-                        F.concat(a, F.lit(_AKA_SEP), b).alias("s"),
-                        F.lit(None).cast("int").alias("sp"),
-                    ),
+    kv = []
+    for kind, pat in MENTION_PATTERNS:
+        kv.append(F.lit(kind))
+        kv.append(_gated_arr(kind, pat))
+    kv.append(F.lit("aka"))
+    # cheap substring prefilter: most turns have no aka pattern, so
+    # gate the two regex passes behind contains(). aka entries ride
+    # the same struct shape (span null — equivalence payload, not a
+    # mention), so no text column survives the first explode. ALL
+    # non-overlapping matches per turn: the two capture groups are
+    # extracted as parallel arrays and zipped positionally
+    kv.append(
+        F.when(
+            F.col("text").contains(" aka @"),
+            F.zip_with(
+                F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1)),
+                F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2)),
+                lambda a, b: F.struct(
+                    F.concat(a, F.lit(_AKA_SEP), b).alias("s"),
+                    F.lit(None).cast("int").alias("sp"),
                 ),
-            ).otherwise(F.array().cast("array<struct<s: string, sp: int>>"))
+            ),
+        ).otherwise(F.array().cast("array<struct<s: string, sp: int>>"))
+    )
+    return (
+        transcripts.select(
+            "conv_id",
+            "turn_idx",
+            F.explode(F.create_map(*kv)).alias("kind", "arr"),
         )
-        return (
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                F.explode(F.create_map(*kv)).alias("kind", "arr"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.explode("arr").alias("e"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.when(
-                    F.col("kind") == "aka",
-                    F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(1)),
-                )
-                .otherwise(F.col("e.s"))
-                .alias("surface"),
-                F.col("e.sp").alias("span"),
-                F.when(
-                    F.col("kind") == "aka",
-                    F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(2)),
-                ).alias("surface_b"),
-            )
+        .select(
+            "conv_id",
+            "turn_idx",
+            "kind",
+            F.explode("arr").alias("e"),
         )
-    raise ValueError(f"unknown engine {engine!r}")
+        .select(
+            "conv_id",
+            "turn_idx",
+            "kind",
+            F.when(
+                F.col("kind") == "aka",
+                F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(1)),
+            )
+            .otherwise(F.col("e.s"))
+            .alias("surface"),
+            F.col("e.sp").alias("span"),
+            F.when(
+                F.col("kind") == "aka",
+                F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(2)),
+            ).alias("surface_b"),
+        )
+    )
+
+
+def mentions_only(fused: DataFrame) -> DataFrame:
+    """The mention slice of a fused scan: its MENTION_COLS, aka rows
+    dropped."""
+    return fused.filter(F.col("kind") != "aka").select(*MENTION_COLS)
 
 
 def _extract_fused_batch(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
+    """Arrow reference for `extract_mentions_fused` (mapInPandas over
+    conv_id, turn_idx, text -> FUSED_SCHEMA); the parity tests run it."""
     for pdf in batches:
         outs = []
         for kind, pat in MENTION_PATTERNS:
@@ -302,6 +228,10 @@ def _extract_fused_batch(
             e = e.explode("surface")
             e = e[e["surface"].notna()]
             e["surface"] = e["surface"].astype(str)
+            # explode preserves the source index, so pdf.loc[e.index]
+            # realigns each mention with its turn text; str.find has no
+            # per-row-needle vectorized form — the zip loop is fine in
+            # a reference kernel that no pipeline path runs
             pfx = MARKER_PREFIX[kind]
             e["span"] = [
                 t.find(pfx + s) + 1
@@ -316,7 +246,7 @@ def _extract_fused_batch(
                     ]
                 ]
             )
-        # cheap substring prefilter mirroring the sql engine: most turns
+        # cheap substring prefilter mirroring the JVM scan: most turns
         # have no aka pattern, and running the two-group regex over every
         # row measurably regressed the 25.6M-turn pipeline (r4 interleaved
         # A/B) — contains() is a vectorized memchr, findall backtracks
@@ -341,43 +271,6 @@ def _extract_fused_batch(
         yield pd.concat(outs, ignore_index=True)
 
 
-def extract_aka_pairs(transcripts: DataFrame, engine: str = "arrow") -> DataFrame:
-    """(conv_id, turn_idx, surface_a, surface_b) for '@a aka @b' patterns."""
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_aka_batch, AKA_SCHEMA)
-    if engine == "sql":
-        # ALL non-overlapping matches per turn, matching the arrow engine's
-        # str.findall semantics exactly (engine-parity tested): extract the
-        # two capture groups as parallel arrays and zip positionally
-        a_arr = F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1))
-        b_arr = F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2))
-        return (
-            # cheap substring prefilter before the regex — most turns have
-            # no aka pattern, and contains() is far cheaper than regex
-            transcripts.filter(F.col("text").contains(" aka @"))
-            .select(
-                "conv_id",
-                "turn_idx",
-                a_arr.alias("_aa"),
-                b_arr.alias("_bb"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.posexplode("_aa").alias("_i", "surface_a"),
-                "_bb",
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "surface_a",
-                F.element_at("_bb", F.col("_i") + 1).alias("surface_b"),
-            )
-        )
-    raise ValueError(f"unknown engine {engine!r}")
-
-
 def dedupe_staging(transcripts: DataFrame) -> DataFrame:
     """Drop duplicate staged turns by content hash — the blob-store sha256
     key dedupe analog (/root/reference/pkg/events/events.go:77-80): the
@@ -386,49 +279,4 @@ def dedupe_staging(transcripts: DataFrame) -> DataFrame:
         transcripts.withColumn("_sha", F.sha2("text", 256))
         .dropDuplicates(["conv_id", "turn_idx", "_sha"])
         .drop("_sha")
-    )
-
-
-def turn_ref(conv_col, idx_col):
-    return F.concat(F.lit("turn:"), conv_col, F.lit(":"), idx_col.cast("string"))
-
-
-def triples_surface(mentions: DataFrame, aka: DataFrame) -> DataFrame:
-    """Raw surface-level triples, pre-linking (the IngestPredicates analog,
-    /root/reference/pkg/assembler/assembler.go:31-49).
-
-    Columns: conv_id, turn_idx, subj_kind, subj, pred, obj_kind, obj.
-    subj_kind 'turn' means subj is a turn ref; 'person' means a surface
-    still to be linked. reply objects are materialized turn refs.
-    """
-    m = mentions.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("turn").alias("subj_kind"),
-        turn_ref(F.col("conv_id"), F.col("turn_idx")).alias("subj"),
-        F.element_at(
-            F.create_map(
-                *[F.lit(x) for kv in PRED_BY_KIND.items() for x in kv]
-            ),
-            F.col("kind"),
-        ).alias("pred"),
-        F.col("kind").alias("obj_kind"),
-        F.when(
-            F.col("kind") == "reply",
-            turn_ref(F.col("conv_id"), F.col("surface").cast("int")),
-        )
-        .otherwise(F.col("surface"))
-        .alias("obj"),
-    )
-    s = aka.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("person").alias("subj_kind"),
-        F.col("surface_a").alias("subj"),
-        F.lit("same_as").alias("pred"),
-        F.lit("person").alias("obj_kind"),
-        F.col("surface_b").alias("obj"),
-    )
-    return m.unionByName(s).dropDuplicates(
-        ["conv_id", "turn_idx", "subj_kind", "subj", "pred", "obj_kind", "obj"]
     )

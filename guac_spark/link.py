@@ -348,7 +348,7 @@ def _minhash_bands_jvm(df: DataFrame, col: str) -> DataFrame:
 
 
 # deterministic block key length. r5 shipped 4; the r6 candidate-volume
-# probe (scripts/link_probe.py, 6.4M turns / 219k unmatched x 128k
+# probe (NOTES_r6 #1, 6.4M turns / 219k unmatched x 128k
 # aliases) measured the 4-char blocks as the dominant junk source:
 # pfx4 = 645k and sfx4 = 450k candidates against ~219k true pairs, vs
 # pfx5/6 ~= true-pairs-only (16^5 = 1M key space >> universe). 5 keeps

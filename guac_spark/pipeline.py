@@ -95,7 +95,6 @@ def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
     warehouse_root: str,
-    engine: str = "auto",
     resume: bool = False,
 ) -> PipelineResult:
     """Run (or resume) the full construction pipeline.
@@ -104,14 +103,11 @@ def run_pipeline(
     read back instead of recomputed — a killed run restarts exactly from the
     last committed snapshot with no duplicate work.
 
-    engine='auto' picks the pure-JVM 'sql' extraction path at EVERY
-    parallelism: isolated measurement on the 25.6M-turn corpus
-    (scripts/measure_extract.py, local[4]) put sql at 47.9s vs arrow
-    81.5s for the mention scan and 67.3s vs 94.7s fused — the r1 rule
-    ('arrow' below 8 cores) was measured before the fused scan and no
-    longer holds anywhere. Both engines stay semantically identical and
-    parity-tested; 'arrow' remains the north-rule vectorized-UDF
-    reference implementation.
+    Extraction is the one JVM scan `extract.extract_mentions_fused` at
+    every parallelism: at 25.6M turns / local[4] it took 67.3 s against
+    94.7 s for its Arrow reference kernel (BENCH_ab_r4.json,
+    `extract_engine_isolation_local4`), which stays parity-tested and off
+    the pipeline path.
     """
     wh = Warehouse(warehouse_root)
     # schema gate (ADVICE r4): a pre-existing warehouse written by another
@@ -145,8 +141,6 @@ def run_pipeline(
     bucket_by = (n_buckets, ["conv_id"])
     res = PipelineResult()
     t0 = time.time()
-    if engine == "auto":
-        engine = "sql"
 
     def stage(name: str, build, **write_kw) -> DataFrame:
         if resume and wh.has(name):
@@ -228,7 +222,7 @@ def run_pipeline(
         # fused extraction: mention rows AND aka equivalence rows from ONE
         # corpus scan — the aka slice rides along as kind='aka' rows so
         # the equivalences stage never re-scans the full text corpus
-        mentions = extract.extract_mentions_fused(transcripts, engine=engine)
+        mentions = extract.extract_mentions_fused(transcripts)
         # NO repartition before the bucketed write (r3 shuffled the whole
         # mention stream here): the transcripts scan is bucket-partitioned
         # on conv_id, extraction/link preserve row placement (projections,

@@ -42,7 +42,6 @@ def incremental_extract(
     input_dir: str,
     out_root: str,
     alias_dict: DataFrame,
-    engine: str = "arrow",
     _crash_after: int | None = None,
 ) -> int:
     """Drain new transcript files -> linked mentions appended to out_root.
@@ -68,7 +67,9 @@ def incremental_extract(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         staged = extract.dedupe_staging(batch_df)
-        mentions = extract.extract_mentions(staged, engine=engine)
+        mentions = extract.mentions_only(
+            extract.extract_mentions_fused(staged)
+        )
         linked = link.link_exact(mentions, alias_dict)
         # idempotent per-batch sink: dynamic partition overwrite keyed by
         # _batch_id — a crash/retry after the write but before the

@@ -3,5 +3,5 @@
 First-class components alongside the KG engine: deduplication (exact,
 MinHash-LSH, SimHash, n-gram Jaccard, embedding-cosine), similarity search
 (brute-force + LSH-bucketed ANN), text analysis (language ID, quality
-scoring, token counting, fingerprinting), and multimodal column plumbing.
+scoring, token counting, fingerprinting).
 """

@@ -100,16 +100,6 @@ def _decode_map(df: DataFrame, col: str, out: str, fn) -> DataFrame:
     return df.mapInPandas(gen, schema)
 
 
-def decode_bz2(df: DataFrame, col: str, out: str) -> DataFrame:
-    """In-column bzip2 decode (Arrow-batched)."""
-    return _decode_map(df, col, out, bz2.decompress)
-
-
-def decode_zstd(df: DataFrame, col: str, out: str) -> DataFrame:
-    """In-column zstd frame decode (Arrow-batched)."""
-    return _decode_map(df, col, out, _zstd_decompress)
-
-
 def decode_encoded(df: DataFrame, col: str, out: str) -> DataFrame:
     """Sniff-and-decode per blob: bzip2 / zstd / passthrough."""
     return _decode_map(df, col, out, _sniff_decode)

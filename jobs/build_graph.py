@@ -8,7 +8,7 @@ Usage (cluster shape; local[] master for the sandbox):
         jobs/build_graph.py \\
         --sf-dir /root/testdata/sf0.1 \\
         --warehouse /tmp/guac_wh \\
-        [--resume] [--engine arrow|sql]
+        [--resume]
 
 On a real cluster only --master and the I/O paths change: the job reads an
 Iceberg/parquet transcripts table, writes snapshot-committed vertex/edge/
@@ -28,8 +28,6 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--engine", default="auto",
-                    choices=["auto", "arrow", "sql"])
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args(argv)
 
@@ -56,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.sf_dir,
         warehouse_root=args.warehouse,
-        engine=args.engine,
         resume=args.resume,
     )
     print(

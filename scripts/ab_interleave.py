@@ -1,8 +1,10 @@
 """Interleaved A/B/N benchmark between git refs (VERDICT r3 wrong #2).
 
 Settles whether a throughput delta between rounds is code or host state:
-every ref runs from its own clean worktree, legs strictly interleaved
-(A, B, C, A, B, C, ...) on byte-identical shared input, medians reported.
+every ref runs from its own clean worktree, legs interleaved on
+byte-identical shared input, medians reported. The leg that runs first
+rotates each rep (A B C, B C A, C A B, ...; with two legs, A B then B A)
+so no leg always pays or dodges first-run host state.
 
     python scripts/ab_interleave.py --refs c7a2a48 4a6ce39 HEAD \
         --runs 3 --cpus 4 --repl 256
@@ -15,7 +17,7 @@ existing corpus instead of a replica:
         --runs 5 --cpus 4 --sf-dir <corpus dir, e.g. sf0.1>
 
 Prints one JSON line: per-leg raw pipeline seconds + turns/sec, medians,
-and each leg's throughput ratio vs the first.
+each leg's throughput ratio vs the first, and the leg order of every rep.
 """
 
 from __future__ import annotations
@@ -84,8 +86,11 @@ def main() -> None:
         trees = {r: worktree(r) for r in args.refs}
     names = list(trees)
     legs: dict[str, list] = {r: [] for r in names}
+    orders = []
     for i in range(args.runs):
-        for r in names:
+        k = i % len(names)
+        orders.append(names[k:] + names[:k])
+        for r in orders[-1]:
             print(f"run {i + 1}/{args.runs} [{r}]...",
                   file=sys.stderr, flush=True)
             legs[r].append(run_leg(trees[r], args.cpus, sf))
@@ -101,6 +106,7 @@ def main() -> None:
         "repl": 1 if args.sf_dir else args.repl,
         "cpus": args.cpus,
         "runs": args.runs,
+        "order_runs": orders,
         "turns": legs[base][0]["turns"],
         "pipeline_sec_runs": {
             r: [d["value"] for d in legs[r]] for r in names

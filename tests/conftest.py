@@ -54,6 +54,17 @@ def num_buckets(spark, wh_root: str, table: str) -> int:
     return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
 
 
+def extraction_scans(transcripts):
+    """Both renderings of the mention grammar, keyed by name: the fused
+    JVM scan the pipeline runs and its Arrow reference kernel."""
+    from guac_spark import extract
+
+    ref = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        extract._extract_fused_batch, extract.FUSED_SCHEMA
+    )
+    return {"jvm": extract.extract_mentions_fused(transcripts), "arrow": ref}
+
+
 def normalize_rows(cols, rows):
     """Driver-style normalization: sort columns by name, stringify cells,
     sort rows — order- and dtype-insensitive multiset comparison."""

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from guac_spark import canonical, graph, unpack
+from tests.conftest import extraction_scans
 
 
 def test_entity_id_roundtrip(spark):
@@ -97,15 +98,15 @@ def test_versioned_tool_mentions_link_to_version_node(spark):
          ("c1", 1, "also tool:unknown_thing@v7")],
         "conv_id string, turn_idx int, text string",
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
+    for f in extraction_scans(t).values():
+        m = extract.mentions_only(f)
         got = {r["surface"] for r in m.filter("kind='tool'").collect()}
         assert got == {"vec_db@v2", "vec_db", "unknown_thing@v7"}
     adict = spark.createDataFrame(
         [("vec_db", "ent:tool/vec_db", "tool", 1.0)],
         "alias string, entity_id string, kind string, prior double",
     )
-    linked = link.link_exact(extract.extract_mentions(t), adict)
+    linked = link.link_exact(extract.extract_mentions_fused(t), adict)
     ids = {r["surface"]: r["entity_id"]
            for r in linked.filter("kind='tool'").collect()}
     assert ids["vec_db"] == "ent:tool/vec_db"

@@ -1,26 +1,78 @@
-"""Extraction: engine parity (arrow vs sql), negative fixtures, staging dedupe."""
+"""Extraction: JVM scan vs Arrow reference parity, negative fixtures,
+staging dedupe."""
 
 from __future__ import annotations
 
 import datetime
-import os
+
+from pyspark.sql import functions as F
 
 from guac_spark import corpus, extract
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, extraction_scans
 
 
 def _multiset(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _aka_rows(fused):
+    return fused.filter(F.col("kind") == "aka").select(
+        "conv_id", "turn_idx", "surface", "surface_b"
+    )
+
+
+def _aka_pairs(fused):
+    return [(r["surface"], r["surface_b"]) for r in _aka_rows(fused).collect()]
+
+
 def test_arrow_and_sql_engines_agree(spark):
+    # the JVM-expression scan the pipeline runs must reproduce the Arrow
+    # reference kernel on both slices: mention rows (kind != 'aka') and
+    # aka equivalence pairs (kind = 'aka')
     t = corpus.transcripts(spark, SF_SMALL)
-    a = _multiset(extract.extract_mentions(t, engine="arrow"))
-    s = _multiset(extract.extract_mentions(t, engine="sql"))
-    assert a == s
-    aa = _multiset(extract.extract_aka_pairs(t, engine="arrow"))
-    ss = _multiset(extract.extract_aka_pairs(t, engine="sql"))
-    assert aa == ss
+    got, want = extraction_scans(t).values()
+    got_m = _multiset(extract.mentions_only(got))
+    assert got_m == _multiset(extract.mentions_only(want))
+    got_a = _multiset(_aka_rows(got))
+    assert got_a == _multiset(_aka_rows(want))
+    assert got_m and got_a  # the corpus exercises both slices
+
+
+def test_fused_extraction_matches_separate(spark):
+    # the one fused scan (map-of-arrays explode, contains() gates, aka
+    # pair joined and split on a separator) must reproduce one ungated
+    # scan per rule: surface_span_arr per mention pattern, and the two
+    # AKA_RE capture groups zipped positionally
+    t = corpus.transcripts(spark, SF_SMALL)
+    want_m = None
+    for kind, pat in extract.MENTION_PATTERNS:
+        one = t.select(
+            "conv_id",
+            "turn_idx",
+            F.lit(kind).alias("kind"),
+            F.explode(
+                extract.surface_span_arr(pat, extract.MARKER_PREFIX[kind])
+            ).alias("e"),
+        ).select("conv_id", "turn_idx", "kind", "e.s", "e.sp")
+        want_m = one if want_m is None else want_m.unionAll(one)
+    want_a = t.select(
+        "conv_id",
+        "turn_idx",
+        F.explode(
+            F.arrays_zip(
+                F.regexp_extract_all("text", F.lit(extract.AKA_RE), F.lit(1)),
+                F.regexp_extract_all("text", F.lit(extract.AKA_RE), F.lit(2)),
+            )
+        ).alias("p"),
+    ).select("conv_id", "turn_idx", "p.*")
+    fused = extract.extract_mentions_fused(t)
+    got_m = _multiset(extract.mentions_only(fused))
+    assert got_m == _multiset(want_m)
+    got_a = _multiset(
+        _aka_rows(fused).select("conv_id", "turn_idx", "surface", "surface_b")
+    )
+    assert got_a == _multiset(want_a)
+    assert got_m and got_a  # the corpus exercises both slices
 
 
 def _mini(spark, texts):
@@ -35,9 +87,8 @@ def _mini(spark, texts):
 
 def test_no_mentions_emits_zero_rows_not_nulls(spark):
     t = _mini(spark, ["nothing to see here", "", "   ", "UPPER @Case-Bad"])
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
-        rows = m.collect()
+    for m in extraction_scans(t).values():
+        rows = extract.mentions_only(m).collect()
         # '@Case-Bad' starts uppercase -> no match under [a-z][a-z-]*
         assert all(r["surface"] is not None for r in rows)
         person = [r for r in rows if r["kind"] == "person"]
@@ -52,28 +103,22 @@ def test_mixed_grammar_single_turn(spark):
         ["ping @ada-lovelace on #topic_3 via tool:tool_purchase >>0 "
          "and @grace-hopper aka @grace-hopperr"],
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
-        kinds = {r["kind"] for r in m.collect()}
+    for f in extraction_scans(t).values():
+        kinds = {r["kind"] for r in extract.mentions_only(f).collect()}
         assert kinds == {"person", "topic", "tool", "reply"}
-        aka = extract.extract_aka_pairs(t, engine=engine).collect()
-        assert [(r["surface_a"], r["surface_b"]) for r in aka] == [
-            ("grace-hopper", "grace-hopperr")
-        ]
+        assert _aka_pairs(f) == [("grace-hopper", "grace-hopperr")]
 
 
 def test_multiple_aka_per_turn_both_engines(spark):
-    # two aka patterns in one turn: both engines must emit BOTH pairs
-    # (regression: the sql engine used to take only the first match)
+    # two aka patterns in one turn: both scans must emit BOTH pairs
+    # (regression: the JVM scan used to take only the first match)
     t = _mini(
         spark,
         ["@ada-lovelace aka @ada-l and @grace-hopper aka @grace-h done"],
     )
     want = [("ada-lovelace", "ada-l"), ("grace-hopper", "grace-h")]
-    for engine in ("arrow", "sql"):
-        aka = extract.extract_aka_pairs(t, engine=engine).collect()
-        got = sorted((r["surface_a"], r["surface_b"]) for r in aka)
-        assert got == want, engine
+    for name, f in extraction_scans(t).items():
+        assert sorted(_aka_pairs(f)) == want, name
 
 
 def test_staging_dedupe_by_content_hash(spark):
@@ -84,65 +129,18 @@ def test_staging_dedupe_by_content_hash(spark):
     assert deduped.count() == 2
 
 
-def test_triples_surface_shape(spark):
-    t = _mini(spark, ["@ada-lovelace aka @ada-lovelacee >>0"])
-    m = extract.extract_mentions(t)
-    a = extract.extract_aka_pairs(t)
-    tr = extract.triples_surface(m, a)
-    preds = {r["pred"] for r in tr.collect()}
-    assert preds == {"mentions", "replies_to", "same_as"}
-    reply = [r for r in tr.collect() if r["pred"] == "replies_to"][0]
-    assert reply["obj"] == "turn:c0:0"
-
-
-def test_fused_extraction_matches_separate(spark):
-    # the single-scan fused extraction must reproduce extract_mentions
-    # (non-aka slice) and extract_aka_pairs (aka slice), per engine, and
-    # the engines must agree with each other
-    from pyspark.sql import functions as F
-
-    t = corpus.transcripts(spark, SF_SMALL)
-    fused = {
-        eng: extract.extract_mentions_fused(t, engine=eng)
-        for eng in ("arrow", "sql")
-    }
-    want_m = _multiset(
-        extract.extract_mentions(t).select(
-            "conv_id", "turn_idx", "kind", "surface", "span"
-        )
-    )
-    want_a = _multiset(
-        extract.extract_aka_pairs(t).select(
-            "conv_id", "turn_idx", "surface_a", "surface_b"
-        )
-    )
-    for eng, f in fused.items():
-        got_m = _multiset(
-            f.filter(F.col("kind") != "aka").select(
-                "conv_id", "turn_idx", "kind", "surface", "span"
-            )
-        )
-        assert got_m == want_m, eng
-        got_a = _multiset(
-            f.filter(F.col("kind") == "aka").select(
-                "conv_id", "turn_idx", "surface", "surface_b"
-            )
-        )
-        assert got_a == want_a, eng
-
-
 def test_person_boundary_excludes_tool_version_suffix(spark):
     """ADVICE r3: 'tool:vec_db@v2' must not fabricate a person mention
     'v' — PERSON_RE requires a non-alphanumeric boundary (or start of
-    text) before '@', in both engines."""
+    text) before '@', in both scans."""
     t = _mini(
         spark,
         ["run tool:vec_db@v2 now", "@ada-lovelace leads", "see (@alan-turing)"],
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine).collect()
+    for name, f in extraction_scans(t).items():
+        m = extract.mentions_only(f).collect()
         persons = sorted(r["surface"] for r in m if r["kind"] == "person")
-        assert persons == ["ada-lovelace", "alan-turing"], (engine, persons)
+        assert persons == ["ada-lovelace", "alan-turing"], (name, persons)
         tools = [r["surface"] for r in m if r["kind"] == "tool"]
         assert tools == ["vec_db@v2"]
 
@@ -212,27 +210,3 @@ def test_sparse_event_ids_drop_no_transcript_rows(spark, tmp_path):
         corpus.duckdb_prelude() + " SELECT count(*) FROM transcripts"
     ).fetchone()[0]
     assert dn == n
-
-
-def test_fixed_universe_pins_oracle_params_too():
-    """ADVICE r5 (low): GUAC_SPARK_UNIVERSE=fixed must pin BOTH engines —
-    the oracle's u_params is rendered as literal head params under the
-    env var (read at import, hence the subprocess)."""
-    import subprocess
-    import sys as _sys
-
-    out = subprocess.run(
-        [_sys.executable, "-c",
-         "import guac_spark.corpus as c; print(c.U_PARAMS_SQL)"],
-        env={**os.environ, "GUAC_SPARK_UNIVERSE": "fixed"},
-        capture_output=True, text=True, check=True,
-    )
-    assert out.stdout.strip() == "SELECT 25 AS np, 20 AS nt"
-    out = subprocess.run(
-        [_sys.executable, "-c",
-         "import guac_spark.corpus as c; print(c.U_PARAMS_SQL)"],
-        env={k: v for k, v in os.environ.items()
-             if k != "GUAC_SPARK_UNIVERSE"},
-        capture_output=True, text=True, check=True,
-    )
-    assert "count(*)" in out.stdout  # grown formula by default

@@ -24,8 +24,7 @@ def test_variant_links_are_exactly_ground_truth(spark):
     (argmax 3-gram Jaccard >= 0.5), nothing more, nothing less."""
     t = corpus.transcripts(spark, SF_SMALL)
     adict = corpus.alias_dict(spark, SF_SMALL)
-    mentions = extract.extract_mentions(t)
-    linked = link.link_exact(mentions, adict)
+    linked = link.link_exact(extract.extract_mentions_fused(t), adict)
     unmatched = link.unmatched_surfaces(linked)
     got = {
         (r["src"], r["dst"]) for r in link.link_tail(unmatched, adict).collect()
@@ -62,7 +61,7 @@ def test_celebrity_head_link_is_broadcast(spark):
     the mention stream) — the plan-shape contract for 100 TB."""
     t = corpus.transcripts(spark, SF_SMALL)
     adict = corpus.alias_dict(spark, SF_SMALL)
-    linked = link.link_exact(extract.extract_mentions(t), adict)
+    linked = link.link_exact(extract.extract_mentions_fused(t), adict)
     plan = linked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

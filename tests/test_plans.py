@@ -201,9 +201,7 @@ def test_mention_stream_reaches_bucketed_write_without_exchange(spark):
     # does — deriving it inline would drag the derivation's own (tiny,
     # broadcast-side) distinct exchanges into this plan
     adict = wh.read(spark, "alias_dict")
-    linked = link.link_exact(
-        extract.extract_mentions_fused(t, engine="sql"), adict
-    )
+    linked = link.link_exact(extract.extract_mentions_fused(t), adict)
     plan = _plan(linked)
     # the dictionary BroadcastExchange is expected; no shuffle exchange
     assert "Exchange hashpartitioning" not in plan

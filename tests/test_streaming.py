@@ -56,7 +56,8 @@ def test_incremental_drain_is_exactly_once(spark, stream_dirs):
     # total equals a from-scratch batch extraction of everything
     from guac_spark import extract, link
     full = link.link_exact(
-        extract.extract_mentions(stream_dirs["t"]), corpus.alias_dict(spark, SF_SMALL)
+        extract.mentions_only(extract.extract_mentions_fused(stream_dirs["t"])),
+        corpus.alias_dict(spark, SF_SMALL),
     )
     assert out3.count() == full.count()
 
@@ -127,7 +128,10 @@ def test_kill_mid_drain_resumes_exactly_once(spark):
     got = spark.read.parquet(out_path).drop("_batch_id")
 
     want = link.link_exact(
-        extract.extract_mentions(spark.read.parquet(in_dir)), adict
+        extract.mentions_only(
+            extract.extract_mentions_fused(spark.read.parquet(in_dir))
+        ),
+        adict,
     )
     # exact multiset equality: nothing lost, nothing duplicated
     assert got.count() == want.count()

@@ -1,10 +1,10 @@
-"""Training-data operators: dedup recall, simhash, ANN recall, multimodal."""
+"""Training-data operators: dedup recall, simhash, ANN recall."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from guac_spark.textops import dedup, multimodal, similarity
+from guac_spark.textops import dedup, similarity
 from tests.conftest import SF_SMALL
 
 
@@ -156,27 +156,6 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert all(q in qids for q, _ in ivf)
 
 
-def test_multimodal_plumbing(spark):
-    docs = dedup.load_documents(spark, SF_SMALL)
-    media = multimodal.attach_media(docs)
-    feats = multimodal.extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == docs.count()
-    assert all(len(r["features"]) == multimodal.FEATURE_DIM for r in rows)
-    # deterministic: same payload -> same features
-    f2 = multimodal.extract_features(media.repartition(7)).collect()
-    m1 = {r["media_id"]: tuple(r["features"]) for r in rows}
-    m2 = {r["media_id"]: tuple(r["features"]) for r in f2}
-    assert m1 == m2
-
-    plan = multimodal.frame_sample_plan(media, every_ms=5000)
-    assert plan.count() > 0
-
-    import pytest
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        multimodal.extract_features(media, decode_stub=False).collect()
-
-
 def test_minhash_banding_recall_vs_independent_exact(spark):
     """ADVICE r3: the DuckDB oracle renders the implementation's own hash
     family into SQL, so a recall bug in hash_family/band_keys would cancel
@@ -214,65 +193,6 @@ def test_minhash_banding_recall_vs_independent_exact(spark):
     # recall: nothing the independent exact truth finds is dropped by
     # banding; precision: the exact verify keeps nothing below threshold
     assert got == want
-
-
-def test_wav_decode_roundtrip_and_features(spark):
-    """REAL audio decode (stdlib RIFF walk + numpy PCM): synth fixture
-    bytes -> parse roundtrip -> Spark feature stage matches a direct
-    numpy computation."""
-    import numpy as np
-
-    wav = multimodal.synth_wav(440.0, 8000, rate=8000, amplitude=0.5)
-    rate, ch, s = multimodal.parse_wav(wav)
-    assert (rate, ch, len(s)) == (8000, 1, 8000)
-    # a 440 Hz sine at amplitude 0.5 has rms ~ 0.5/sqrt(2)
-    x = s.astype(np.float64) / 32768.0
-    assert abs(np.sqrt((x * x).mean()) - 0.5 / np.sqrt(2)) < 0.01
-
-    media = spark.createDataFrame(
-        [(1, multimodal.synth_wav(440.0, 8000)),
-         (2, multimodal.synth_wav(220.0, 4000, rate=4000, amplitude=0.25))],
-        "media_id long, payload binary",
-    )
-    got = {r["media_id"]: r for r in
-           multimodal.decode_wav_features(media).collect()}
-    assert got[1]["duration_ms"] == 1000 and got[1]["sample_rate"] == 8000
-    assert got[2]["duration_ms"] == 1000 and got[2]["sample_rate"] == 4000
-    assert abs(got[1]["rms"] - 0.3536) < 0.01
-    assert abs(got[2]["peak"] - 0.25) < 0.01
-    # malformed payloads fail loudly, not silently
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        multimodal.parse_wav(b"not a wav")
-
-
-def test_ppm_decode_resize_reencode(spark):
-    """REAL image decode (P6 header tokenizer + raster reinterpret),
-    nearest-neighbor resize, and re-encode roundtrip."""
-    import numpy as np
-
-    ppm = multimodal.synth_ppm(64, 48, seed=3)
-    arr = multimodal.parse_ppm(ppm)
-    assert arr.shape == (48, 64, 3)
-    # header comments are tolerated
-    commented = b"P6\n# a comment\n64 48\n255\n" + arr.tobytes()
-    assert (multimodal.parse_ppm(commented) == arr).all()
-
-    media = spark.createDataFrame(
-        [(7, ppm)], "media_id long, payload binary"
-    )
-    row = multimodal.decode_ppm_features(
-        media, resize_to=(16, 12)
-    ).collect()[0]
-    assert (row["width"], row["height"]) == (64, 48)
-    want_means = arr.reshape(-1, 3).mean(axis=0)
-    assert abs(row["mean_r"] - want_means[0]) < 1e-9
-    # thumbnail is itself a valid PPM of the requested size, and equals
-    # the direct numpy resize
-    thumb = multimodal.parse_ppm(bytes(row["thumb"]))
-    assert thumb.shape == (12, 16, 3)
-    assert (thumb == multimodal.resize_nearest(arr, 16, 12)).all()
 
 
 def test_ivf_kmeans_full_probe_equals_bruteforce(spark):
