@@ -13,7 +13,7 @@ both tables materialize embarrassingly parallel with plain dropDuplicates
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cc import apply_mapping
@@ -108,6 +108,35 @@ def triples_final(
     )
 
 
+def attrs_col(kind: Column) -> Column:
+    """The vertex attrs map over a relation's `canonical` column, given
+    the vertex kind: {'ns': kind, 'name': <id tail>} plus the parsed
+    '?k=v' identity qualifiers for entities, the empty map for turn
+    vertices ('turn:' ids). Stored by `vertices`; derived by
+    graph.vertex_attrs for vertex relations that carry no attrs."""
+    from .canonical import parse_qualifiers
+
+    name = F.regexp_extract("canonical", r"^ent:[a-z]+/([^?]+)", 1)
+    empty = F.map_from_arrays(
+        F.array().cast("array<string>"), F.array().cast("array<string>")
+    )
+    # qualifier keys colliding with the reserved 'ns'/'name' attrs are
+    # namespaced 'q.<key>' — map_concat under the default
+    # mapKeyDedupPolicy=EXCEPTION would otherwise throw at runtime for a
+    # legal entity id carrying a '?ns=…' qualifier (ADVICE r3)
+    quals = F.transform_keys(
+        parse_qualifiers("canonical"),
+        lambda k, _v: F.when(
+            k.isin("ns", "name"), F.concat(F.lit("q."), k)
+        ).otherwise(k),
+    )
+    return F.when(F.col("canonical").startswith("turn:"), empty).otherwise(
+        F.map_concat(
+            F.create_map(F.lit("ns"), kind, F.lit("name"), name), quals
+        )
+    )
+
+
 def vertices(triples: DataFrame) -> DataFrame:
     """Deduplicated vertex table: (vertex_id, kind, canonical, attrs).
 
@@ -122,8 +151,6 @@ def vertices(triples: DataFrame) -> DataFrame:
     vertices carry the empty map. filter_vertices_spec matches against
     this stored column.
     """
-    from .canonical import parse_qualifiers
-
     # Split the noun gather by vertex family (disjoint by prefix, so no
     # final dedup across the union):
     #   * turn refs (subj always; obj for replies_to) embed their conv_id,
@@ -164,30 +191,11 @@ def vertices(triples: DataFrame) -> DataFrame:
         F.when(F.col("canonical").startswith("turn:"), F.lit("turn"))
         .otherwise(F.regexp_extract("canonical", r"^ent:([a-z]+)/", 1))
     )
-    name = F.regexp_extract("canonical", r"^ent:[a-z]+/([^?]+)", 1)
-    empty = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    # qualifier keys colliding with the reserved 'ns'/'name' attrs are
-    # namespaced 'q.<key>' — map_concat under the default
-    # mapKeyDedupPolicy=EXCEPTION would otherwise throw at runtime for a
-    # legal entity id carrying a '?ns=…' qualifier (ADVICE r3)
-    quals = F.transform_keys(
-        parse_qualifiers("canonical"),
-        lambda k, _v: F.when(
-            k.isin("ns", "name"), F.concat(F.lit("q."), k)
-        ).otherwise(k),
-    )
-    attrs = F.when(F.col("canonical").startswith("turn:"), empty).otherwise(
-        F.map_concat(
-            F.create_map(F.lit("ns"), kind, F.lit("name"), name), quals
-        )
-    )
     return nodes.select(
         F.sha2(F.col("canonical"), 256).alias("vertex_id"),
         kind.alias("kind"),
         "canonical",
-        attrs.alias("attrs"),
+        attrs_col(kind).alias("attrs"),
     )
 
 

@@ -54,8 +54,9 @@ also reach.
 Skew: min is algebraic, so Spark's partial (map-side) aggregation already
 collapses a celebrity node's offers to one row per map partition before
 the shuffle — its reduce-side input is bounded by the map partition
-count, not its degree (salted_agg in skew.py remains the tool for
-non-algebraic aggregates). max_iter guards the pathological case.
+count, not its degree (salted_agg in skew.py, which accepts only the
+algebraic count/sum/min/max, additionally spreads one hot key's partial
+rows over several reducers). max_iter guards the pathological case.
 """
 
 from __future__ import annotations
@@ -92,7 +93,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    n_salts: int = 16,  # kept for API compat; algebraic min needs no salting
     driver_threshold: int = 100_000,
     broadcast_limit: int = 1_000_000,
     round_stats: list | None = None,
@@ -162,7 +162,7 @@ def connected_components(
     # so Spark's partial (map-side) aggregation collapses a hot key to ONE
     # row per map partition before the shuffle — a celebrity hub's
     # reduce-side input is bounded by the map partition count, not its
-    # degree. salted_agg (skew.py) is for the non-algebraic cases.
+    # degree, so no salting (skew.py) is needed.
     def _min_label(offers: DataFrame, out: str) -> DataFrame:
         return offers.groupBy("node").agg(F.min("label").alias(out))
 

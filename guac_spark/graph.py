@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .assemble import attrs_col
 from .skew import salted_count
 
 # broadcast a frontier/visited set only while it is provably small; past
@@ -60,35 +61,13 @@ def vertex_attrs(vertices: DataFrame) -> DataFrame:
     (package.graphql:21-28). The pipeline STORES attrs on the vertices
     table at assembly (assemble.vertices: {'ns', 'name'} + identity
     qualifiers, VERDICT r2 missing #1) — a stored column passes through
-    untouched. Ad-hoc vertex relations without one get the derived
-    fallback: {'ns': kind, 'name': tail} + parsed '?k=v' qualifiers;
-    turn vertices carry the empty map."""
+    untouched. Ad-hoc vertex relations without one get the same map
+    derived from their kind and canonical columns (assemble.attrs_col):
+    {'ns': kind, 'name': tail} + parsed '?k=v' qualifiers; 'turn:'
+    vertices carry the empty map."""
     if "attrs" in vertices.columns:
         return vertices
-    from .canonical import parse_qualifiers
-
-    name = F.regexp_extract("canonical", r"^ent:[a-z]+/([^?]+)", 1)
-    # same reserved-key namespacing as assemble.vertices (ADVICE r3):
-    # a '?ns=…' qualifier must not collide with the 'ns' attr under
-    # mapKeyDedupPolicy=EXCEPTION
-    quals = F.transform_keys(
-        parse_qualifiers("canonical"),
-        lambda k, _v: F.when(
-            k.isin("ns", "name"), F.concat(F.lit("q."), k)
-        ).otherwise(k),
-    )
-    attrs = F.when(
-        F.col("kind") == "turn",
-        F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        ),
-    ).otherwise(
-        F.map_concat(
-            F.create_map(F.lit("ns"), F.col("kind"), F.lit("name"), name),
-            quals,
-        )
-    )
-    return vertices.withColumn("attrs", attrs)
+    return vertices.withColumn("attrs", attrs_col(F.col("kind")))
 
 
 def filter_vertices_spec(
@@ -174,20 +153,28 @@ def page_vertices_connection(
     null vertex columns, has_next_page=false, the real total_count — so
     the connection metadata the reference always reports survives
     (ADVICE r2: the old crossJoin dropped it with the rows)."""
-    total = vertices.agg(F.count("*").cast("long").alias("total_count"))
-    filtered = vertices
+    return _page_connection(vertices, "vertex_id", after, first)
+
+
+def _page_connection(
+    rel: DataFrame, key: str, after: str | None, first: int
+) -> DataFrame:
+    """Keyset connection page over `rel` ordered by `key` (the contract
+    page_vertices_connection documents)."""
+    total = rel.agg(F.count("*").cast("long").alias("total_count"))
+    filtered = rel
     if after is not None:
-        filtered = filtered.filter(F.col("vertex_id") > after)
-    w = Window.orderBy("vertex_id")
+        filtered = filtered.filter(F.col(key) > after)
+    w = Window.orderBy(key)
     probe = (
-        filtered.orderBy("vertex_id").limit(first + 1)
+        filtered.orderBy(key).limit(first + 1)
         .withColumn("_rn", F.row_number().over(w))
         .withColumn("_n", F.count("*").over(Window.partitionBy(F.lit(1))))
     )
     page = (
         probe.filter(F.col("_rn") <= first)
         .withColumn("has_next_page", F.col("_n") > first)
-        .withColumn("end_cursor", F.max("vertex_id").over(
+        .withColumn("end_cursor", F.max(key).over(
             Window.partitionBy(F.lit(1))))
         .drop("_rn", "_n")
     )
@@ -250,31 +237,7 @@ def page_edges_connection(
     page_vertices_connection). Keyset pagination, cursor = edge_id — the
     *List verb variant (backends.go:37-62 *List methods return edges
     with pageInfo)."""
-    total = edges.agg(F.count("*").cast("long").alias("total_count"))
-    filtered = edges
-    if after is not None:
-        filtered = filtered.filter(F.col("edge_id") > after)
-    w = Window.orderBy("edge_id")
-    probe = (
-        filtered.orderBy("edge_id").limit(first + 1)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(Window.partitionBy(F.lit(1))))
-    )
-    page = (
-        probe.filter(F.col("_rn") <= first)
-        .withColumn("has_next_page", F.col("_n") > first)
-        .withColumn("end_cursor", F.max("edge_id").over(
-            Window.partitionBy(F.lit(1))))
-        .drop("_rn", "_n")
-    )
-    row_cols = [c for c in page.columns
-                if c not in ("has_next_page", "end_cursor")]
-    return total.join(page, F.lit(True), "left").select(
-        *row_cols,
-        F.coalesce("has_next_page", F.lit(False)).alias("has_next_page"),
-        "end_cursor",
-        "total_count",
-    )
+    return _page_connection(edges, "edge_id", after, first)
 
 
 # --- neighbor expansion (path.graphql:202-211) ------------------------------
@@ -391,14 +354,6 @@ def bfs_distances(edges: DataFrame, seed: str, max_hops: int = 4,
     for p in visited_parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def shortest_path_len(edges: DataFrame, a: str, b: str, max_hops: int = 6,
-                      using_only: list[str] | None = None) -> int | None:
-    """Unweighted shortest path length, None if unreachable in max_hops."""
-    d = bfs_distances(edges, a, max_hops, using_only)
-    row = d.filter(F.col("node") == b).select(F.min("dist")).first()
-    return row[0] if row and row[0] is not None else None
 
 
 def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,

@@ -232,17 +232,6 @@ def run_pipeline(
         # dedup (keys ⊇ conv_id) still runs shuffle-free off the catalog
         return link.link_exact(mentions, adict)
 
-    # MEASURED AND REJECTED (r5, VERDICT order #2 / NOTES_r4 #5):
-    # partitionBy('kind') on top of the conv_id bucketing. The warehouse
-    # supports it and the pruning works (plan-pinned in
-    # test_kind_partition_prunes_both_consumers), but the measured delta
-    # is NET NEGATIVE: +4.2s write at 6.4M turns (+~14s at 25.6M — 5x
-    # open writers, smaller write buffers) vs <0.5s saved across BOTH
-    # consumers (the aka slice and the non-aka projection are
-    # column-pruned zstd scans, already nearly free; the r4 hypothesis
-    # that the equivalences stage was dominated by the full-table read
-    # did not survive measurement — LSH dominates it). Numbers in
-    # NOTES_r5.md / BENCH.md.
     linked = stage("mentions_linked", build_linked, bucket_by=bucket_by)
 
     def build_links() -> DataFrame:

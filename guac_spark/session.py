@@ -17,7 +17,6 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def get_spark(
     app_name: str = "guac_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
@@ -34,7 +33,7 @@ def get_spark(
     cpus = cpus or DEFAULT_CPUS
     # 4 waves per stage: partitions ≫ cores packs stragglers instead of
     # letting one slow task idle the whole pool at a stage barrier
-    shuffle = shuffle_partitions or max(4 * cpus, 16)
+    shuffle = max(4 * cpus, 16)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

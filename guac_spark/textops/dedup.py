@@ -90,27 +90,12 @@ def _shingles(docs: DataFrame, n: int = 2) -> DataFrame:
     return base.select("doc_id", sh).distinct()
 
 
-def jaccard_pairs_relational(
-    docs: DataFrame, threshold: float, n: int = 2,
-    shingle_df: DataFrame | None = None
+def _verified(
+    common: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact shingle-Jaccard pairs via shared-token join (a < b).
-
-    Plan: explode -> distinct -> self-join on shingle -> count common ->
-    join sizes -> filter. All JVM-side; the shingle join key is uniform
-    (word bigrams), so no skew handling needed. Candidate blow-up is the
-    scale limit — at 100 TB use minhash_pairs below instead.
-    """
-    sh = shingle_df if shingle_df is not None else _shingles(docs, n)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
+    """(a, b, jacc) from shared-shingle counts (a, b, common) and
+    per-document shingle counts (doc_id, n_sh): exact Jaccard
+    common / (na + nb - common), kept at >= threshold."""
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"))
     return (
@@ -122,6 +107,29 @@ def jaccard_pairs_relational(
         .filter(F.col("jacc") >= threshold)
         .select("a", "b", F.round("jacc", 6).alias("jacc"))
     )
+
+
+def jaccard_pairs_relational(
+    docs: DataFrame, threshold: float, n: int = 2
+) -> DataFrame:
+    """Exact shingle-Jaccard pairs via shared-token join (a < b).
+
+    Plan: explode -> distinct -> self-join on shingle -> count common ->
+    join sizes -> filter. All JVM-side; the shingle join key is uniform
+    (word bigrams), so no skew handling needed. Candidate blow-up is the
+    scale limit — at 100 TB use minhash_pairs below instead.
+    """
+    sh = _shingles(docs, n)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("b"), "shingle")
+    common = (
+        a.join(b, on="shingle")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("common"))
+    )
+    return _verified(common, sizes, threshold)
 
 
 def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
@@ -179,17 +187,7 @@ def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count("*").alias("common"))
     )
-    za = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"))
-    return (
-        common.join(za, on="a").join(zb, on="b")
-        .withColumn(
-            "jacc",
-            F.col("common") / (F.col("na") + F.col("nb") - F.col("common")),
-        )
-        .filter(F.col("jacc") >= threshold)
-        .select("a", "b", F.round("jacc", 6).alias("jacc"))
-    )
+    return _verified(common, sizes, threshold)
 
 
 def near_dup_clusters(docs: DataFrame, threshold: float = 0.7) -> DataFrame:

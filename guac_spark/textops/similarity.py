@@ -10,6 +10,7 @@ O(n/2^bits · q) with recall controlled by the number of probe tables.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -40,6 +41,17 @@ def _norm(col: str):
     )
 
 
+def _normed(emb: DataFrame, ident: str, side: str, *extra: str) -> DataFrame:
+    """(ident, v<side>, n<side>, *extra): vec_id, embedding and its norm,
+    computed once per row so a pair plan pays only the dot product."""
+    return emb.select(
+        F.col("vec_id").alias(ident),
+        F.col("embedding").alias(f"v{side}"),
+        _norm("embedding").alias(f"n{side}"),
+        *extra,
+    )
+
+
 def staged_embeddings(emb: DataFrame) -> DataFrame:
     """embeddings ∪ scaled copies (vec_id%10==0, ×1.001) — deterministic
     near-duplicates (cosine ≈ 1.0) for the near-dup oracle, since the
@@ -62,22 +74,27 @@ def cosine_near_pairs(emb: DataFrame, threshold: float = 0.99) -> DataFrame:
     Norms are precomputed once per side so the crossed plan only pays the
     dot product.
     """
-    l = emb.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("va"),
-        _norm("embedding").alias("na"),
-    )
-    r = emb.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("vb"),
-        _norm("embedding").alias("nb"),
-    )
     return (
-        l.crossJoin(r)
+        _normed(emb, "a", "a").crossJoin(_normed(emb, "b", "b"))
         .filter(F.col("a") < F.col("b"))
         .withColumn("cos", _dot("va", "vb") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", F.round("cos", 6).alias("cos"))
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos): the k best-scored neighbors
+    per query, ties to the smaller neighbor_id so the answer is the same
+    under any parallelism."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank",
+                F.round("cos", 6).alias("cos"))
     )
 
 
@@ -89,28 +106,14 @@ def ann_topk_bruteforce(
     Queries broadcast against the corpus — one scan of the corpus total,
     not one per query; rank via window with deterministic tie-break.
     """
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("vq"),
-        _norm("embedding").alias("nq"),
-    )
-    c = emb.filter(~F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vc"),
-        _norm("embedding").alias("nc"),
+    q = _normed(emb.filter(F.col("vec_id").isin(query_ids)), "query_id", "q")
+    c = _normed(
+        emb.filter(~F.col("vec_id").isin(query_ids)), "neighbor_id", "c"
     )
     scored = c.join(F.broadcast(q)).withColumn(
         "cos", _dot("vq", "vc") / (F.col("nq") * F.col("nc"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k)
 
 
 # --- LSH-bucketed ANN (the scale path) --------------------------------------
@@ -155,6 +158,16 @@ def hyperplane_buckets(
     return emb.select("vec_id", "embedding").mapInPandas(
         gen, "vec_id long, bucket long"
     )
+
+
+def _probe_masks(n_bits: int, hamming: int) -> list[int]:
+    """XOR masks reaching every bucket within `hamming` bits of a
+    signature, the exact bucket (mask 0) first."""
+    return [0] + [
+        sum(1 << i for i in c)
+        for r in range(1, hamming + 1)
+        for c in combinations(range(n_bits), r)
+    ]
 
 
 def _adaptive_n_bits(n_rows: int, target_bucket: int = 2) -> int:
@@ -206,16 +219,10 @@ def cosine_near_pairs_lsh(
     Requires unique vec_ids (every driver SF; GUAC ids are unique by
     construction) — under duplicate ids the old payload dedup silently
     picked an arbitrary embedding per pair, which is strictly worse."""
-    from itertools import combinations
-
     if n_bits is None:
         n_bits = _adaptive_n_bits(emb.count())
     b = hyperplane_buckets(emb, n_bits=n_bits)
-    masks = [0] + [
-        sum(1 << i for i in c)
-        for r in range(1, probe_hamming + 1)
-        for c in combinations(range(n_bits), r)
-    ]
+    masks = _probe_masks(n_bits, probe_hamming)
     l_ids = b.select(F.col("vec_id").alias("a"), "bucket")
     r_ids = b.select(
         F.col("vec_id").alias("b"),
@@ -229,19 +236,9 @@ def cosine_near_pairs_lsh(
         .select("a", "b")
         .dropDuplicates(["a", "b"])  # multi-probe overlap — ids only
     )
-    ea = emb.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("va"),
-        _norm("embedding").alias("na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("vb"),
-        _norm("embedding").alias("nb"),
-    )
     return (
-        cand.join(ea, on="a")
-        .join(eb, on="b")
+        cand.join(_normed(emb, "a", "a"), on="a")
+        .join(_normed(emb, "b", "b"), on="b")
         .withColumn("cos", _dot("va", "vb") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", F.round("cos", 6).alias("cos"))
@@ -261,22 +258,14 @@ def ann_topk_lsh(
     monotonically with `multiprobe`; ann_topk_bruteforce is the
     correctness baseline.
     """
-    from itertools import combinations
-
     b = hyperplane_buckets(emb, n_bits=n_bits)
     with_b = emb.join(b, on="vec_id")
-    q0 = with_b.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("vq"),
-        _norm("embedding").alias("nq"),
+    q0 = _normed(
+        with_b.filter(F.col("vec_id").isin(query_ids)), "query_id", "q",
         "bucket",
     )
     if multiprobe >= 1:
-        masks = [0] + [
-            sum(1 << i for i in c)
-            for r in range(1, multiprobe + 1)
-            for c in combinations(range(n_bits), r)
-        ]
+        masks = _probe_masks(n_bits, multiprobe)
         probes = F.array(
             *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]
         )
@@ -285,10 +274,8 @@ def ann_topk_lsh(
         )
     else:
         q = q0
-    c = with_b.filter(~F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vc"),
-        _norm("embedding").alias("nc"),
+    c = _normed(
+        with_b.filter(~F.col("vec_id").isin(query_ids)), "neighbor_id", "c",
         "bucket",
     )
     scored = (
@@ -296,15 +283,7 @@ def ann_topk_lsh(
         .withColumn("cos", _dot("vq", "vc") / (F.col("nq") * F.col("nc")))
         .dropDuplicates(["query_id", "neighbor_id"])  # multi-probe overlap
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k)
 
 
 # --- IVF ANN (inverted-file index: coarse quantizer + probed lists) ---------
@@ -454,11 +433,7 @@ def ann_topk_ivf(
     cent = ivf_centroids(emb) if centroids is None else centroids
     if assigned is None:
         assigned = ivf_assign(emb, cent)
-    q0 = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("vq"),
-        _norm("embedding").alias("nq"),
-    )
+    q0 = _normed(emb.filter(F.col("vec_id").isin(query_ids)), "query_id", "q")
     # probe selection: queries × broadcast centroids, top-nprobe lists.
     # The window is per-QUERY over nlist rows — query-set sized, never
     # corpus sized.
@@ -472,28 +447,16 @@ def ann_topk_ivf(
         .filter(F.col("pr") <= nprobe)
         .select("query_id", "vq", "nq", "list_id")
     )
-    c = (
-        emb.filter(~F.col("vec_id").isin(query_ids))
-        .join(assigned, on="vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("vc"),
-            _norm("embedding").alias("nc"),
-            "list_id",
-        )
+    c = _normed(
+        emb.filter(~F.col("vec_id").isin(query_ids)).join(
+            assigned, on="vec_id"
+        ),
+        "neighbor_id", "c", "list_id",
     )
     scored = c.join(F.broadcast(probes), on="list_id").withColumn(
         "cos", _dot("vq", "vc") / (F.col("nq") * F.col("nc"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, k)
 
 
 def label_centroids(emb: DataFrame) -> DataFrame:

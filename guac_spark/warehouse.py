@@ -31,12 +31,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-METRICS_SCHEMA = (
-    "stage string, table string, snapshot_id int, partition_id int, "
-    "rows long, wall_sec double, committed_at double"
-)
-
-
 class Warehouse:
     def __init__(self, root: str):
         self.root = root
@@ -135,7 +129,6 @@ class Warehouse:
         df: DataFrame,
         table: str,
         stage: str | None = None,
-        partition_by: list[str] | None = None,
         bucket_by: tuple[int, list[str]] | None = None,
     ) -> int:
         """Write df as the next snapshot of `table`; returns snapshot id.
@@ -152,7 +145,7 @@ class Warehouse:
         same files (correct, just re-shuffles) — on a real cluster the
         catalog (Hive/Iceberg) persists it.
         """
-        return self._write(df, table, stage, partition_by, append=False,
+        return self._write(df, table, stage, append=False,
                            bucket_by=bucket_by)
 
     def append_snapshot(
@@ -166,7 +159,7 @@ class Warehouse:
         needs. Readers of older snapshots are unaffected (their directory
         lists are immutable). defer_commit=True returns a pending dict
         for commit_pending() instead of flipping the log."""
-        return self._write(df, table, stage, None, append=True,
+        return self._write(df, table, stage, append=True,
                            defer_commit=defer_commit)
 
     def _write(
@@ -174,7 +167,6 @@ class Warehouse:
         df: DataFrame,
         table: str,
         stage: str | None,
-        partition_by: list[str] | None,
         append: bool,
         bucket_by: tuple[int, list[str]] | None = None,
         defer_commit: bool = False,
@@ -213,23 +205,14 @@ class Warehouse:
             tag = hashlib.sha256(self.root.encode()).hexdigest()[:8]
             catalog_table = f"wh_{tag}_{table}_snap_{snap}".replace("-", "_")
             df.sparkSession.sql(f"DROP TABLE IF EXISTS {catalog_table}")
-            writer = (
+            (
                 df.write.mode("overwrite").format("parquet")
                 .option("path", path)
+                .bucketBy(n_buckets, *cols)
+                .saveAsTable(catalog_table)
             )
-            # partitionBy COMPOSES with bucketBy (Hive layout:
-            # <part>=<val>/bucket files) — consumers filtering on the
-            # partition column prune whole directories while bucket-local
-            # aggs still skip their shuffle (the Iceberg
-            # partition-spec + bucket-transform analog)
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.bucketBy(n_buckets, *cols).saveAsTable(catalog_table)
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+            df.write.mode("overwrite").parquet(path)
         lineage = self._file_lineage(path)
         wall = time.time() - t0
         now = time.time()

@@ -54,6 +54,6 @@ def test_hot_key_star_graph(spark):
     # celebrity star: one hub with 500 spokes (the salted-agg hot case)
     pairs = [("hub", f"s{i:04d}") for i in range(500)]
     edges = spark.createDataFrame(pairs, "src string, dst string")
-    out = connected_components(edges, driver_threshold=0, n_salts=8).collect()
+    out = connected_components(edges, driver_threshold=0).collect()
     assert len(out) == 501
     assert all(r["component"] == "hub" for r in out)

@@ -35,11 +35,11 @@ def test_toposort_dag_levels(spark):
 def test_shortest_path(spark):
     e = _edges(spark, [("a", "b", "x"), ("b", "c", "x"), ("c", "d", "x"),
                        ("a", "z", "y")])
-    assert graph.shortest_path_len(e, "a", "d") == 3
-    assert graph.shortest_path_len(e, "a", "z") == 1
-    assert graph.shortest_path_len(e, "z", "d", max_hops=2) is None
+    assert graph.shortest_path_nodes(e, "a", "d") == ["a", "b", "c", "d"]
+    assert graph.shortest_path_nodes(e, "a", "z") == ["a", "z"]
+    assert graph.shortest_path_nodes(e, "z", "d", max_hops=2) is None
     # pred allowlist (usingOnly analog) blocks the y edge
-    assert graph.shortest_path_len(e, "a", "z", using_only=["x"]) is None
+    assert graph.shortest_path_nodes(e, "a", "z", using_only=["x"]) is None
 
 
 def test_bfs_is_min_distance(spark):
@@ -149,24 +149,32 @@ def test_page_connection_total_and_next(spark):
         [(f"{i:03d}", "k", f"c{i}") for i in range(25)],
         "vertex_id string, kind string, canonical string",
     )
-    page = graph.page_vertices_connection(verts, after="004", first=10)
-    rows = page.collect()
-    assert len(rows) == 10
-    assert all(r["total_count"] == 25 for r in rows)
-    assert all(r["has_next_page"] for r in rows)
-    assert rows[0]["end_cursor"] == max(r["vertex_id"] for r in rows)
-    last = graph.page_vertices_connection(verts, after="020", first=10)
-    lrows = last.collect()
-    assert len(lrows) == 4 and all(not r["has_next_page"] for r in lrows)
-    # empty page (cursor past the end): metadata survives as a sentinel
-    # row with null vertex columns (ADVICE r2)
-    empty = graph.page_vertices_connection(verts, after="999", first=10)
-    erows = empty.collect()
-    assert len(erows) == 1
-    assert erows[0]["vertex_id"] is None
-    assert erows[0]["total_count"] == 25
-    assert erows[0]["has_next_page"] is False
-    assert erows[0]["end_cursor"] is None
+    edges = spark.createDataFrame(
+        [(f"{i:03d}", f"s{i}", f"d{i}", "mentions") for i in range(25)],
+        "edge_id string, src string, dst string, pred string",
+    )
+    for rel, key, connection in (
+        (verts, "vertex_id", graph.page_vertices_connection),
+        (edges, "edge_id", graph.page_edges_connection),
+    ):
+        page = connection(rel, after="004", first=10)
+        rows = page.collect()
+        assert len(rows) == 10
+        assert all(r["total_count"] == 25 for r in rows)
+        assert all(r["has_next_page"] for r in rows)
+        assert rows[0]["end_cursor"] == max(r[key] for r in rows)
+        last = connection(rel, after="020", first=10)
+        lrows = last.collect()
+        assert len(lrows) == 4 and all(not r["has_next_page"] for r in lrows)
+        # empty page (cursor past the end): metadata survives as a
+        # sentinel row with null row columns (ADVICE r2)
+        empty = connection(rel, after="999", first=10)
+        erows = empty.collect()
+        assert len(erows) == 1
+        assert erows[0][key] is None
+        assert erows[0]["total_count"] == 25
+        assert erows[0]["has_next_page"] is False
+        assert erows[0]["end_cursor"] is None
 
 
 def test_keep_latest_deterministic_ties(spark):

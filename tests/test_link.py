@@ -67,18 +67,6 @@ def test_celebrity_head_link_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_batch_minhash_sigs_match_per_string():
-    import numpy as np
-
-    from guac_spark.link import _minhash_sig, _minhash_sigs_batch
-
-    surfs = ["grace-hopperr", "alan-turingg", "ada", "x", "topic_3",
-             "grace-hopperr"]
-    batch = _minhash_sigs_batch(surfs)
-    for i, s in enumerate(surfs):
-        assert np.array_equal(batch[i], _minhash_sig(s)), s
-
-
 def test_vectorized_jaccard_matches_setops():
     """The batched bitset-popcount Jaccard must be bit-identical to the
     per-pair set-ops definition for every pair shape: identical strings,
@@ -114,21 +102,3 @@ def test_block_key_recall_precondition():
     assert "substr" in corpus.gen_alias_expr("pid", "spark")
     assert ", 1, 12)" in corpus.gen_alias_expr("pid", "spark")
 
-
-def test_jvm_bands_match_arrow(spark):
-    """The pure-JVM banding path must be BIT-IDENTICAL to the Arrow
-    reference (same crc32 polynomial, same int64 modular chain, same
-    band fold) on every string shape: short (<3 chars), heads, tails,
-    generated-alphabet names."""
-    strs = ["a", "ab", "abc", "ada-lovelace", "ada-lovelacee",
-            "grace-hopper", "qrstuvwxyzab", "mystery-guest-a",
-            "tool_purchase"]
-    df = spark.createDataFrame([(s,) for s in strs], "surface string")
-    jvm = sorted(
-        map(tuple, link._minhash_bands_jvm(df, "surface").collect())
-    )
-    arrow = sorted(
-        map(tuple, link._minhash_bands(df, "surface").collect())
-    )
-    assert jvm == arrow
-    assert len(jvm) == len(strs) * link.N_BANDS

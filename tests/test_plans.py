@@ -209,50 +209,6 @@ def test_mention_stream_reaches_bucketed_write_without_exchange(spark):
     assert "Bucketed: true" in plan or "SelectedBucketsCount" in plan
 
 
-def test_kind_partition_prunes_both_consumers(spark):
-    """r5 lever (NOTES_r4 #5), MEASURED AND REJECTED for the shipped
-    layout (write cost > read savings — pipeline.py): the capability
-    itself is pinned here — partitionBy('kind') composed with conv_id
-    bucketing must prune the aka consumer to the kind=aka directory and
-    prune the aka directory away for the triples consumer, both while
-    keeping the bucketed scan (no hashpartitioning Exchange)."""
-    import tempfile
-
-    from guac_spark import assemble, pipeline
-    from guac_spark.warehouse import Warehouse
-
-    root = tempfile.mkdtemp(prefix="wh_kindpart_")
-    pipeline.run_pipeline(spark, SF_SMALL, root)
-    wh = Warehouse(root)
-    # write the kind-partitioned variant of the committed mention stream
-    wh.write_snapshot(
-        wh.read(spark, "mentions_linked"),
-        "ml_kind",
-        bucket_by=(wh.get_meta("conv_buckets"), ["conv_id"]),
-        partition_by=["kind"],
-    )
-    linked = wh.read(spark, "ml_kind")
-
-    aka_plan = _plan(linked.filter(F.col("kind") == "aka"))
-    aka_scan = [
-        ln for ln in aka_plan.splitlines() if "PartitionFilters" in ln
-    ]
-    assert aka_scan and "kind=aka" in aka_scan[0]
-    assert "SelectedBucketsCount" in aka_plan or "Bucketed: true" in aka_plan
-
-    tr_plan = _plan(
-        assemble.triples_final(linked, wh.read(spark, "cc_mapping"))
-    )
-    tr_scan = [
-        ln
-        for ln in tr_plan.splitlines()
-        if "PartitionFilters" in ln and "ml_kind" in ln
-    ]
-    assert tr_scan and "NOT (kind" in tr_scan[0]
-    assert "kind=aka" not in tr_scan[0]
-    assert "Exchange hashpartitioning" not in tr_plan
-
-
 def test_vertices_turn_arm_dedups_without_shuffle(spark):
     """r4 lever: with the triples snapshot bucketed on conv_id, the
     vertices turn-ref dedup (95% of vertices) must run with no

@@ -10,9 +10,18 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from guac_spark import link
 from guac_spark.cc import _union_find_local
-from guac_spark.link import _exact_jaccard, _minhash_sig, _ngrams
+from guac_spark.link import _exact_jaccard, _ngrams
+from guac_spark.textops import minhash
 from guac_spark.textops.dedup import _simhash64
+
+_A, _B = minhash.hash_family(link.N_HASHES, link.HASH_SEED)
+
+
+def _minhash_sig(s: str):
+    # linking's signature: char 3-grams, crc32, the link hash family
+    return minhash.signature(_ngrams(s), _A, _B, link._gram_hash)
 
 words = st.text(alphabet="abcdefg-", min_size=1, max_size=20)
 

@@ -40,7 +40,10 @@ def test_vectorized_minhash_matches_scalar_signature():
         "a b c d e f g h i j k l",
     ]
     # scalar contract: per-doc signature over the shingle SET
-    want = np.stack([mh.signature(mh.word_bigrams(t), a, b) for t in texts])
+    want = np.stack([
+        mh.signature(mh.word_bigrams(t), a, b, mh.shingle_hash)
+        for t in texts
+    ])
     # batch kernel gets the JVM-shaped multiset lists (duplicates kept)
     def bigrams_list(t):
         import re as _re
@@ -50,8 +53,22 @@ def test_vectorized_minhash_matches_scalar_signature():
             return w
         return [w[i] + " " + w[i + 1] for i in range(len(w) - 1)]
 
-    got = mh.signatures_batch([bigrams_list(t) for t in texts], a, b)
+    got = mh.signatures_batch(
+        [bigrams_list(t) for t in texts], a, b, mh.shingle_hash
+    )
     assert (want == got).all()
+
+    # linking's input: its own family, char 3-gram sets, crc32
+    from guac_spark import link
+
+    a, b = mh.hash_family(link.N_HASHES, link.HASH_SEED)
+    surfs = ["grace-hopperr", "alan-turingg", "ada", "x", "topic_3",
+             "grace-hopperr"]
+    grams = [link._ngrams(s) for s in surfs]
+    batch = mh.signatures_batch(grams, a, b, link._gram_hash)
+    for i, g in enumerate(grams):
+        want = mh.signature(g, a, b, link._gram_hash)
+        assert np.array_equal(batch[i], want), surfs[i]
 
 
 def test_vectorized_simhash_matches_scalar():
