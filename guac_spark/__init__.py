@@ -5,8 +5,9 @@ parse -> canonicalize -> assemble a deduplicated property graph, then answer
 neighbor / path / filter queries over it — but over tables of multi-turn
 conversation/agent transcripts (conv_id, turn_idx, role, text, tool, ts),
 expressed Spark-first: DataFrame/SQL plans optimized by Catalyst, vectorized
-pandas/Arrow UDFs for per-turn text work, salted aggregation for hot keys,
-and snapshot-committed tables with per-partition lineage for exact resume.
+pandas/Arrow UDFs for per-turn text work, map-side partial aggregation for
+hot keys, and snapshot-committed tables with per-partition lineage for exact
+resume.
 
 Reference parity map lives in SURVEY.md §2; each module cites the reference
 files (file:line) whose *semantics* it re-expresses. No reference code is

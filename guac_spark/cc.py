@@ -54,9 +54,7 @@ also reach.
 Skew: min is algebraic, so Spark's partial (map-side) aggregation already
 collapses a celebrity node's offers to one row per map partition before
 the shuffle — its reduce-side input is bounded by the map partition
-count, not its degree (salted_agg in skew.py, which accepts only the
-algebraic count/sum/min/max, additionally spreads one hot key's partial
-rows over several reducers). max_iter guards the pathological case.
+count, not its degree. max_iter guards the pathological case.
 """
 
 from __future__ import annotations
@@ -162,7 +160,7 @@ def connected_components(
     # so Spark's partial (map-side) aggregation collapses a hot key to ONE
     # row per map partition before the shuffle — a celebrity hub's
     # reduce-side input is bounded by the map partition count, not its
-    # degree, so no salting (skew.py) is needed.
+    # degree, so no salting is needed.
     def _min_label(offers: DataFrame, out: str) -> DataFrame:
         return offers.groupBy("node").agg(F.min("label").alias(out))
 

@@ -11,8 +11,8 @@ assembler/backends/backends.go:27-185) and client-side analytics
   * path/BFS/toposort — set-at-a-time frontier joins instead of GUAC's one
     RPC round-trip per node (patchPlanning.go:131), the scalability
     anti-pattern this engine eliminates;
-  * top-dependents / keep-latest — groupBy + window, with salted two-level
-    counting for celebrity skew.
+  * top-dependents / keep-latest — groupBy + window; a celebrity key costs
+    one partial row per map partition, since count is algebraic.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .assemble import attrs_col
-from .skew import salted_count
 
 # broadcast a frontier/visited set only while it is provably small; past
 # this row count the set goes through a plain shuffle join and AQE picks
@@ -99,31 +98,36 @@ def find_software(vertices: DataFrame, text: str) -> DataFrame:
     )
 
 
-def build_substring_index(vertices: DataFrame, n: int = 3) -> DataFrame:
-    """(gram, vertex_id): distinct character n-grams of canonical — the
+# gram length of the substring index; build and probe must agree on it,
+# or a probe silently finds nothing
+_GRAM = 3
+
+
+def build_substring_index(vertices: DataFrame) -> DataFrame:
+    """(gram, vertex_id): distinct character _GRAM-grams of canonical — the
     materialized ngram index SURVEY §2.6 promises for findSoftware at
     scale. Written sorted/bucketed by gram, a probe is a point filter the
     scan pushes down instead of a full-table substring pass."""
     grams = F.explode(
         F.expr(
-            f"transform(sequence(1, greatest(length(canonical) - {n - 1}, 1)),"
-            f" i -> substring(canonical, i, {n}))"
+            f"transform(sequence(1, greatest(length(canonical) - {_GRAM - 1},"
+            f" 1)), i -> substring(canonical, i, {_GRAM}))"
         )
     )
     return vertices.select("vertex_id", grams.alias("gram")).distinct()
 
 
 def find_software_indexed(
-    index: DataFrame, vertices: DataFrame, text: str, n: int = 3
+    index: DataFrame, vertices: DataFrame, text: str
 ) -> DataFrame:
     """findSoftware via the ngram index: probe one gram of the query
     (point filter on the index key), then verify the full substring on
     the candidate set only. Identical output to find_software; candidate
     cost is index-selectivity, not corpus size. Queries shorter than the
     gram size fall back to the scan."""
-    if len(text) < n:
+    if len(text) < _GRAM:
         return find_software(vertices, text)
-    cands = index.filter(F.col("gram") == text[:n]).select("vertex_id")
+    cands = index.filter(F.col("gram") == text[:_GRAM]).select("vertex_id")
     return (
         vertices.join(cands, on="vertex_id")
         .filter(F.col("canonical").contains(text))
@@ -281,108 +285,43 @@ def neighbors_page(edges: DataFrame, vertices: DataFrame, canonical: str,
 # --- BFS / shortest paths (keyvalue/path.go:83-152) -------------------------
 
 def bfs_distances(edges: DataFrame, seed: str, max_hops: int = 4,
-                  using_only: list[str] | None = None,
-                  directed: bool = False) -> DataFrame:
-    """(node, dist) for every node within max_hops of seed.
-
-    Iterative frontier expansion: per hop, one hash join frontier⋈edges and
-    one anti-join against visited. Set-at-a-time — the whole frontier moves
-    in one shuffle regardless of node count (vs GUAC's RPC-per-node BFS).
-
-    Physical shape (r7, guide §2.4 — measured at sf1.0/c32, 490k-node
-    closure, interleaved):
-      * the adjacency union is NOT pre-distinct'd/checkpointed: that was a
-        full shuffle + materialization of 2x|E| rows before the first hop,
-        while each hop's own distinct already dedups the expansion
-        (duplicate adj rows only duplicate offers); the hops stream the
-        (bucketed, column-pruned) edge scan instead;
-      * the visited set is a lazy union of the checkpointed hop layers,
-        not re-checkpointed every hop (the layers are already
-        materialized blocks — re-checkpointing re-copied the whole
-        growing closure once per hop);
-      * the FINAL hop is returned lazily (no checkpoint, no count): its
-        frontier is the largest layer (at sf1.0, 489,783 of 489,892
-        reached nodes arrive in the last hop), and materializing it
-        inside the loop just to re-evaluate it for the caller's action
-        doubled the most expensive hop. Callers run one action over the
-        result (count/collect/one downstream join), so the last hop
-        executes exactly once.
-    Together: 8.6s -> 5.1s median (3 reps, same session).
-
-    The frontier/visited sets are broadcast ONLY while provably small
-    (row-count check per hop); once they grow past BROADCAST_ROW_LIMIT the
-    hop falls back to shuffle joins — the visited set trends toward |V|,
-    and broadcasting it would collect the whole closure to the driver.
-    """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst", "pred")
-    if using_only:
-        e = e.filter(F.col("pred").isin(using_only))
-    adj = e.select("src", "dst")
-    if not directed:
-        adj = adj.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-
-    seed_df = spark.createDataFrame([(seed, 0)], "node string, dist int")
-    visited_parts = [seed_df]
-    visited_nodes = seed_df.select("node")
-    frontier = seed_df
-    n_frontier, n_visited = 1, 1
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            adj.join(_maybe_broadcast(frontier, n_frontier),
-                     frontier["node"] == adj["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(_maybe_broadcast(visited_nodes, n_visited),
-                  on="node", how="left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        if hop == max_hops:
-            visited_parts.append(nxt)
-            break
-        nxt = nxt.localCheckpoint(eager=True)
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        visited_parts.append(nxt)
-        visited_nodes = visited_nodes.unionByName(nxt.select("node"))
-        n_visited += n_frontier
-        frontier = nxt
-    out = visited_parts[0]
-    for p in visited_parts[1:]:
-        out = out.unionByName(p)
+                  using_only: list[str] | None = None) -> DataFrame:
+    """(node, dist) for every node within max_hops of seed."""
+    layers = _bfs_layers(edges, seed, max_hops, using_only)
+    out = layers[0].select("node", "dist")
+    for layer in layers[1:]:
+        out = out.unionByName(layer.select("node", "dist"))
     return out
 
 
-def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,
-                        using_only: list[str] | None = None
-                        ) -> list[str] | None:
-    """The actual node path, reconstructed from parent pointers — the
-    keyvalue `path` semantics (keyvalue/path.go:83-152). Deterministic:
-    each node keeps its lexicographically smallest parent (min over ALL
-    its distance-(d-1) neighbors, since a BFS layer IS the exact distance
-    layer), so among all shortest paths the same one is returned at any
-    parallelism.
+def _bfs_layers(edges: DataFrame, seed: str, max_hops: int,
+                using_only: list[str] | None,
+                target: str | None = None) -> list[DataFrame]:
+    """(node, parent, dist) BFS layers from seed over undirected edges,
+    stopping early at an empty layer or at the one holding `target`.
+    Layer d is exactly the nodes at distance d, and the frontier is the
+    whole layer d-1, so parent = min(src) over the frontier join is each
+    node's smallest distance-(d-1) neighbour: deterministic at any
+    parallelism, and the same rule as the q_path oracle.
 
-    Reconstruction walks the parent chain backward with one single-row
-    lookup per hop against the (checkpointed) parent table — never
-    collecting the visited closure to the driver.
-    """
-    parents = bfs_parents(edges, a, max_hops, using_only, stop_at=b)
-    if parents is None:
-        return None
-    return reconstruct_path(parents, a, b, max_hops=max_hops)
-
-
-def bfs_parents(edges: DataFrame, seed: str, max_hops: int = 6,
-                using_only: list[str] | None = None,
-                stop_at: str | None = None) -> DataFrame | None:
-    """(node, dist, parent) BFS tree from seed; parent is the
-    lexicographically smallest distance-(d-1) neighbor (deterministic).
-    Returns None if stop_at is given and unreachable within max_hops.
-    Broadcasts are gated on frontier/visited size like bfs_distances.
+    Per hop: one join frontier⋈edges, one groupBy(node) (the parent
+    aggregate, which is also the hop's dedup), one anti-join against
+    visited — the whole frontier moves in one shuffle (vs GUAC's
+    RPC-per-node BFS). Physical shape (r7, measured at sf1.0/c32 on a
+    490k-node closure, 8.6 s -> 5.1 s median):
+      * the adjacency union is not pre-distinct'd or checkpointed (a full
+        shuffle of 2x|E| rows before the first hop; duplicate adj rows
+        only duplicate offers);
+      * visited is a lazy union of the checkpointed layers, not
+        re-checkpointed every hop;
+      * the FINAL hop is left lazy (no checkpoint, no count): it is the
+        largest layer (489,783 of 489,892 nodes at sf1.0), and the
+        caller's one action runs it exactly once. A (node, dist)
+        projection lets Catalyst prune its parent aggregate to a plain
+        hash distinct; min over strings plans as a sort aggregate, so only
+        the (smaller) checkpointed hops pay that sort.
+    Frontier and visited are broadcast only while their row counts stay
+    under BROADCAST_ROW_LIMIT — visited trends toward |V|.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst", "pred")
@@ -390,78 +329,67 @@ def bfs_parents(edges: DataFrame, seed: str, max_hops: int = 6,
         e = e.filter(F.col("pred").isin(using_only))
     adj = e.select("src", "dst").unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-
-    visited = spark.createDataFrame(
-        [(seed, 0, None)], "node string, dist int, parent string"
     )
-    frontier = visited.select("node")
+
+    frontier = spark.createDataFrame(
+        [(seed, None, 0)], "node string, parent string, dist int"
+    )
+    layers = [frontier]
+    visited_nodes = frontier.select("node")
     n_frontier, n_visited = 1, 1
-    found = stop_at is None
     for hop in range(1, max_hops + 1):
         nxt = (
             adj.join(_maybe_broadcast(frontier, n_frontier),
                      frontier["node"] == adj["src"])
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("src").alias("parent"))  # deterministic parent
-            .join(_maybe_broadcast(visited.select("node"), n_visited),
+            .agg(F.min("src").alias("parent"))
+            .join(_maybe_broadcast(visited_nodes, n_visited),
                   on="node", how="left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
         )
-        n_frontier = nxt.count()
+        if hop == max_hops:
+            layers.append(nxt)
+            break
+        nxt = nxt.localCheckpoint(eager=True)
+        n_frontier, hit = nxt.agg(
+            F.count("*"), F.max(F.col("node") == F.lit(target))
+        ).first()
         if n_frontier == 0:
             break
-        visited = visited.unionByName(
-            nxt.select("node", "dist", "parent")
-        ).localCheckpoint(eager=True)
-        n_visited += n_frontier
-        if stop_at is not None and (
-            nxt.filter(F.col("node") == stop_at).limit(1).count() > 0
-        ):
-            found = True
+        layers.append(nxt)
+        if hit:
             break
-        frontier = nxt.select("node")
-    if not found:
-        return None
-    return visited
+        visited_nodes = visited_nodes.unionByName(nxt.select("node"))
+        n_visited += n_frontier
+        frontier = nxt
+    return layers
 
 
-def reconstruct_path(parents: DataFrame, a: str, b: str,
-                     max_hops: int = 6) -> list[str] | None:
-    """Walk parent pointers b -> a in ONE Spark job (VERDICT r3 wrong #3:
-    the old loop ran one driver round-trip per hop). The ≤max_hops chain
-    is declared lazily as a union of self-joins on the (checkpointed,
-    tiny) parent table — each link has at most one row because the parent
-    pointer is a deterministic min — and collected once; the driver only
-    ever holds the path itself."""
-    p = parents.select("node", "parent")
-    cur = p.filter(F.col("node") == b).select(
-        F.lit(0).alias("pos"), "node", "parent"
-    )
-    parts = [cur]
-    for i in range(1, max_hops + 1):
-        cur = (
-            p.join(
-                cur.filter(F.col("parent").isNotNull())
-                .select(F.col("parent").alias("node")),
-                on="node",
-            ).select(F.lit(i).alias("pos"), "node", "parent")
+def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,
+                        using_only: list[str] | None = None
+                        ) -> list[str] | None:
+    """The node path a..b read off the BFS parents (keyvalue `path`,
+    keyvalue/path.go:83-152), or None beyond max_hops; the smallest-parent
+    rule picks the same shortest path at any parallelism. The BFS stops
+    at b's layer, and the walk back is a lazy chain of single-row joins
+    down the checkpointed layers, collected once: the driver only ever
+    holds the path."""
+    if a == b:
+        return [a]
+    layers = _bfs_layers(edges, a, max_hops, using_only, target=b)
+    step = layers[-1].filter(F.col("node") == b)
+    chain = step.select("dist", "node")
+    for layer in reversed(layers[1:-1]):
+        # step is at most one row: broadcast it rather than shuffle layer
+        step = layer.join(
+            F.broadcast(step.select(F.col("parent").alias("node"))),
+            on="node",
         )
-        parts.append(cur)
-    chain = parts[0]
-    for q in parts[1:]:
-        chain = chain.unionByName(q)
-    by_pos = {r["pos"]: r for r in chain.collect()}  # <= max_hops + 1 rows
-    path = [b]
-    i = 0
-    while path[-1] != a:
-        row = by_pos.get(i)
-        if row is None or row["parent"] is None:
-            return None
-        path.append(row["parent"])
-        i += 1
-    return list(reversed(path))
+        chain = chain.unionByName(step.select("dist", "node"))
+    rows = chain.collect()  # <= max_hops rows
+    if not rows:
+        return None
+    return [a] + [r["node"] for r in sorted(rows, key=lambda r: r["dist"])]
 
 
 # --- toposort (guacanalytics/toposort.go:26-61) ------------------------------
@@ -625,13 +553,16 @@ def top_dependents(edges: DataFrame, pred: str = "mentions", k: int = 10
                    ) -> DataFrame:
     """'Most important dependencies': rank entities by citing-edge count.
 
-    Salted two-level count — the celebrity entity concentrates a large
-    fraction of all mention edges, exactly the hot-reducer case.
+    A plain groupBy count: the celebrity entity holds a large share of all
+    mention edges, but count is algebraic, so map-side partial aggregation
+    sends it to the reducer as one row per map partition, not one per
+    edge (the argument cc.py makes for min).
     """
-    cited = edges.filter(F.col("pred") == pred).select(
-        F.col("dst").alias("entity")
+    counts = (
+        edges.filter(F.col("pred") == pred)
+        .groupBy(F.col("dst").alias("entity"))
+        .agg(F.count("*").alias("n_mentions"))
     )
-    counts = salted_count(cited, ["entity"], out="n_mentions")
     return counts.orderBy(F.desc("n_mentions"), "entity").limit(k)
 
 
@@ -660,19 +591,27 @@ def keep_latest(df: DataFrame, keys: list[str], ts_col: str,
     )
 
 
+def _last_seen(triples: DataFrame, transcripts: DataFrame, key: str
+               ) -> DataFrame:
+    """(key, last_seen): each mentioned entity's latest mention timestamp,
+    mentions joined to their turns."""
+    return (
+        triples.filter(F.col("pred") == "mentions")
+        .join(transcripts.select("conv_id", "turn_idx", "ts"),
+              on=["conv_id", "turn_idx"])
+        .groupBy(F.col("obj").alias(key))
+        .agg(F.max("ts").alias("last_seen"))
+    )
+
+
 def stale_entities(triples: DataFrame, transcripts: DataFrame,
                    cutoff: str) -> DataFrame:
     """findPackagesThatNeedScanning analog (search.graphql:82-98): entities
     whose latest mention is older than the cutoff — the staleness watermark
     driving GUAC's certifier re-scan loop (root_package.go:53-148)."""
-    mention_ts = (
-        triples.filter(F.col("pred") == "mentions")
-        .join(transcripts.select("conv_id", "turn_idx", "ts"),
-              on=["conv_id", "turn_idx"])
-        .groupBy(F.col("obj").alias("entity"))
-        .agg(F.max("ts").alias("last_seen"))
+    return _last_seen(triples, transcripts, "entity").filter(
+        F.col("last_seen") < F.lit(cutoff)
     )
-    return mention_ts.filter(F.col("last_seen") < F.lit(cutoff))
 
 
 def vuln_reachability(
@@ -692,16 +631,9 @@ def vuln_reachability(
     composes. Nodes without a mention timestamp (turns, the seed) carry
     null last_seen."""
     reach = bfs_distances(edges, vuln_entity, max_hops=max_hops)
-    latest = (
-        triples.filter(F.col("pred") == "mentions")
-        .join(transcripts.select("conv_id", "turn_idx", "ts"),
-              on=["conv_id", "turn_idx"])
-        .groupBy(F.col("obj").alias("node"))
-        .agg(F.max("ts").alias("last_seen"))
-    )
-    return reach.join(latest, on="node", how="left").select(
-        "node", "dist", "last_seen"
-    )
+    return reach.join(
+        _last_seen(triples, transcripts, "node"), on="node", how="left"
+    ).select("node", "dist", "last_seen")
 
 
 def conversation_rollup(edges: DataFrame) -> DataFrame:

@@ -21,8 +21,9 @@ Scale notes (100 TB):
     edit independently of MinHash luck (multi-blocking — recall is a
     correctness gate here, P/R >= 0.95).
   * celebrity aliases are hot keys only on the mention side of a broadcast
-    join — no shuffle, no skew. Hot-key aggregation downstream uses salted
-    two-level aggs (skew.py).
+    join — no shuffle, no skew. Hot-key aggregations downstream (CC
+    min-labels, top-k counts) are algebraic, so map-side partial
+    aggregation bounds them.
 """
 
 from __future__ import annotations

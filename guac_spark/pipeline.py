@@ -11,7 +11,7 @@ Shuffle budget at scale (the plan we would want on 1000 executors):
   * extraction: narrow (mapInPandas over the scan, no shuffle).
   * head linking: broadcast join, no shuffle of the mention stream.
   * tail linking: shuffles only DISTINCT unmatched surfaces (tiny).
-  * CC: iterates over the same_as edge set only (≪ corpus), salted min-agg.
+  * CC: iterates over the same_as edge set only (≪ corpus), plain min-agg.
   * transcripts, mentions_linked and triples are written bucketed on
     conv_id, so the mention stream and the triples dedup and vertices
     turn-ref dedup run with no exchange at all.

@@ -22,9 +22,10 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     Cluster-minded defaults:
-      * AQE on (runtime coalescing, skew-join splitting) — celebrity-entity
-        and mega-conversation skew is first handled by explicit salting
-        (see cc.py / skew.py), AQE is the backstop.
+      * AQE on (runtime coalescing, skew-join splitting) — hot aggregation
+        keys need no salting: min/count are algebraic, so map-side partial
+        aggregation already collapses them (cc.py); AQE splits skewed
+        joins.
       * Arrow on — all per-turn text work is pandas/Arrow UDFs, never
         row-at-a-time Python.
       * session TZ pinned UTC so timestamps compare exactly against the

@@ -100,7 +100,6 @@ def incremental_extract(
 def stateful_conversation_progress(
     spark: SparkSession,
     input_dir: str,
-    timeout_ms: int = 0,
 ) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-conversation running state (turns seen, max turn_idx, last
@@ -111,8 +110,8 @@ def stateful_conversation_progress(
     Emits one row per conversation per micro-batch in which it received
     data; state persists in the checkpointless in-memory run here
     (AvailableNow drains everything, so the final emission reflects all
-    input). ProcessingTimeTimeout would expire idle conversations when
-    timeout_ms > 0 in a continuous run.
+    input). State never times out (GroupStateTimeout.NoTimeout): an idle
+    conversation keeps its row.
     """
     from pyspark.sql.streaming.state import (
         GroupState,

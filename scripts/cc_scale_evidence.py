@@ -1,6 +1,6 @@
 """Scale evidence for the distributed connected-components path.
 
-VERDICT r1 item 7: the salted label-propagation fallback (cc.py) had only
+VERDICT r1 item 7: the distributed label-propagation fallback (cc.py) had only
 run on small synthetic graphs. This script (a) proves output identity
 against exact union-find at a verification size, and (b) times the
 distributed path (driver_threshold=0) on a multi-million-edge equivalence

@@ -51,7 +51,7 @@ def test_deterministic_under_repartition(spark):
 
 
 def test_hot_key_star_graph(spark):
-    # celebrity star: one hub with 500 spokes (the salted-agg hot case)
+    # celebrity star: one hub with 500 spokes (the hot-key case)
     pairs = [("hub", f"s{i:04d}") for i in range(500)]
     edges = spark.createDataFrame(pairs, "src string, dst string")
     out = connected_components(edges, driver_threshold=0).collect()

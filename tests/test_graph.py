@@ -1,13 +1,10 @@
-"""Graph query operators: cycles, paths, pagination, keep-latest, skew."""
+"""Graph query operators: cycles, paths, pagination, keep-latest."""
 
 from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from guac_spark import graph
-from guac_spark.skew import salted_agg, salted_count
 
 
 def _edges(spark, rows):
@@ -40,6 +37,14 @@ def test_shortest_path(spark):
     assert graph.shortest_path_nodes(e, "z", "d", max_hops=2) is None
     # pred allowlist (usingOnly analog) blocks the y edge
     assert graph.shortest_path_nodes(e, "a", "z", using_only=["x"]) is None
+    # a node reaches itself by the one-node path (q_path's dist-0 chain)
+    assert graph.shortest_path_nodes(e, "a", "a") == ["a"]
+    # diamond with two equal-length routes, the larger-named one listed
+    # first: the parent is the smallest distance-(d-1) neighbour
+    dia = _edges(spark, [("s", "m2", "x"), ("m2", "t", "x"),
+                         ("s", "m1", "x"), ("m1", "t", "x")])
+    assert graph.shortest_path_nodes(dia, "s", "t") == ["s", "m1", "t"]
+    assert graph.shortest_path_nodes(dia, "t", "s") == ["t", "m1", "s"]
 
 
 def test_bfs_is_min_distance(spark):
@@ -49,6 +54,10 @@ def test_bfs_is_min_distance(spark):
     d = {r["node"]: r["dist"]
          for r in graph.bfs_distances(e, "a", max_hops=4).collect()}
     assert d["d"] == 2
+    # the lazy last hop keeps no parent aggregate: the (node, dist)
+    # projection prunes min(src) out of it
+    last = graph.bfs_distances(e, "a", max_hops=1)
+    assert "min(" not in last._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_pagination_covers_all_exactly_once(spark):
@@ -188,30 +197,3 @@ def test_keep_latest_deterministic_ties(spark):
                             tiebreak=["event_id"]).collect()
     got = {(r["user_id"], r["event_type"], r["event_id"]) for r in out}
     assert got == {(1, "a", 11), (1, "b", 12)}
-
-
-def test_salted_aggs_match_plain(spark):
-    # heavy skew: one key holds 90% of rows
-    rows = [("hot", i % 7) for i in range(9000)] + [
-        (f"k{i % 50}", i % 11) for i in range(1000)
-    ]
-    df = spark.createDataFrame(rows, "k string, v int")
-    plain_cnt = {r["k"]: r["n"] for r in
-                 df.groupBy("k").agg(F.count("*").alias("n")).collect()}
-    salted_cnt = {r["k"]: r["n"] for r in salted_count(df, ["k"]).collect()}
-    assert plain_cnt == salted_cnt
-
-    plain = {
-        (r["k"]): (r["mn"], r["mx"], r["sm"])
-        for r in df.groupBy("k").agg(
-            F.min("v").alias("mn"), F.max("v").alias("mx"),
-            F.sum("v").alias("sm")).collect()
-    }
-    sal = {
-        r["k"]: (r["min_v"], r["max_v"], r["sum_v"])
-        for r in salted_agg(
-            df, ["k"], {"v": "min"}).join(
-            salted_agg(df, ["k"], {"v": "max"}), on="k").join(
-            salted_agg(df, ["k"], {"v": "sum"}), on="k").collect()
-    }
-    assert plain == sal
