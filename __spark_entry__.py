@@ -13,6 +13,7 @@ from its last committed snapshot).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import sys
@@ -34,20 +35,36 @@ def _us(col):
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 _CTX: dict[str, dict[str, DataFrame]] = {}
+_PKG = os.path.join(os.path.dirname(os.path.abspath(__file__)), "guac_spark")
+
+
+def _source_digest(pkg_dir: str = _PKG) -> str:
+    """sha256 over the package's Python sources (relative path + bytes)."""
+    h = hashlib.sha256()
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"),
+                                 recursive=True)):
+        h.update(os.path.relpath(path, pkg_dir).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+def _wh_root(sf_key: str, digest: str) -> str:
+    """Cached pipeline warehouse for one corpus under one source tree: a
+    resumed warehouse written by other sources (a different edge_id
+    formula, a changed stage) must never satisfy these queries."""
+    tag = hashlib.sha256(f"{digest}:{sf_key}".encode()).hexdigest()[:12]
+    return os.path.join(
+        os.environ.get("GUAC_SPARK_WH", "/tmp/guac_spark_wh"), tag
+    )
 
 
 def _ctx(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = os.path.abspath(sf_dir)
     if key not in _CTX:
-        # schema-versioned cache tag: a resumed warehouse from an older
-        # engine version (different edge_id formula / edge attrs schema)
-        # must never satisfy this round's queries
-        tag = hashlib.sha256(f"v6:{key}".encode()).hexdigest()[:12]
-        root = os.path.join(
-            os.environ.get("GUAC_SPARK_WH", "/tmp/guac_spark_wh"), tag
-        )
         res = pipeline.run_pipeline(
-            spark, sf_dir, warehouse_root=root, resume=True
+            spark, sf_dir, warehouse_root=_wh_root(key, _source_digest()),
+            resume=True,
         )
         _CTX[key] = res.tables
     return _CTX[key]

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .assemble import attrs_col
+from .textops import minhash
 
 # broadcast a frontier/visited set only while it is provably small; past
 # this row count the set goes through a plain shuffle join and AQE picks
@@ -104,16 +105,12 @@ _GRAM = 3
 
 
 def build_substring_index(vertices: DataFrame) -> DataFrame:
-    """(gram, vertex_id): distinct character _GRAM-grams of canonical — the
+    """(gram, vertex_id): distinct character _GRAM-grams of canonical
+    (minhash.char_grams: a shorter canonical is its own gram) — the
     materialized ngram index SURVEY §2.6 promises for findSoftware at
     scale. Written sorted/bucketed by gram, a probe is a point filter the
     scan pushes down instead of a full-table substring pass."""
-    grams = F.explode(
-        F.expr(
-            f"transform(sequence(1, greatest(length(canonical) - {_GRAM - 1},"
-            f" 1)), i -> substring(canonical, i, {_GRAM}))"
-        )
-    )
+    grams = F.explode(minhash.char_grams("canonical", _GRAM))
     return vertices.select("vertex_id", grams.alias("gram")).distinct()
 
 
@@ -397,8 +394,7 @@ def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,
 _TURN_CONV_RE = r"^turn:(.+):-?[0-9]+$"
 
 
-def toposort_levels(edges: DataFrame, pred: str = "replies_to",
-                    mode: str = "auto") -> DataFrame:
+def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
     """Kahn's algorithm levels over the directed `pred` subgraph.
 
     Edge (src, dst) reads 'src depends on dst' (a reply depends on its
@@ -417,7 +413,7 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to",
       * peel (general-graph fallback): iterative in-degree-0 removal,
         O(depth) driver rounds — kept for arbitrary node ids /
         cross-group edges and as the cycle-detection reference.
-    mode='auto' picks grouped iff every edge is conv-local.
+    Grouped runs iff every edge is conv-local, else peel.
     """
     # no distinct, no checkpoint (r7): the edge-table input is already
     # unique on (src, dst, pred) by construction, and Kahn levels are
@@ -432,15 +428,13 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to",
         edges.filter(F.col("pred") == pred)
         .select(F.col("src").alias("child"), F.col("dst").alias("parent"))
     )
-    if mode == "auto":
-        probe = e.withColumn(
-            "gc", F.regexp_extract("child", _TURN_CONV_RE, 1)
-        ).withColumn("gp", F.regexp_extract("parent", _TURN_CONV_RE, 1))
-        n_bad = probe.filter(
-            (F.col("gc") == "") | (F.col("gc") != F.col("gp"))
-        ).limit(1).count()
-        mode = "grouped" if n_bad == 0 else "peel"
-    if mode == "grouped":
+    probe = e.withColumn(
+        "gc", F.regexp_extract("child", _TURN_CONV_RE, 1)
+    ).withColumn("gp", F.regexp_extract("parent", _TURN_CONV_RE, 1))
+    n_bad = probe.filter(
+        (F.col("gc") == "") | (F.col("gc") != F.col("gp"))
+    ).limit(1).count()
+    if n_bad == 0:
         return _toposort_grouped(e)
     return _toposort_peel(e)
 

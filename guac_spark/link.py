@@ -5,7 +5,8 @@ GUAC links strings to identity deterministically via pURLs
 => same node. Head aliases here work the same way — an exact broadcast join
 against the alias dictionary. The transcript domain adds a long tail of
 near-duplicate surfaces the dictionary doesn't know; those are blocked with
-MinHash-LSH over character 3-grams, verified with exact Jaccard, and linked
+MinHash-LSH over character 3-grams plus prefix/suffix keys (one candidate
+join), verified JVM-side with exact 3-gram Jaccard, and linked
 to their best dictionary alias. The output links feed connected-components
 canonicalization (cc.py), mirroring GUAC's PkgEqual/HashEqual equivalence
 semantics (/root/reference/pkg/assembler/backends/keyvalue/pkgEqual.go) but
@@ -31,9 +32,8 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textops import minhash
@@ -43,20 +43,15 @@ from .textops import minhash
 #     /root/reference/pkg/assembler/backends/keyvalue/backend.go:375-388) ---
 # The kernel is textops/minhash.py's, shared with document dedup; linking
 # fixes its own family seed, band count and gram hash (crc32).
-# 4 bands x 8 rows (r1-r4: 16x2; r5-r6: 8x4). Per-band collision
-# probability is J^rows: 2-row bands admitted ~J^2 false candidates (junk
-# at a corpus-proportional universe), 4-row bands pushed random pairs to
-# ~1e-7, and the r6 anatomy showed the REMAINING LSH volume was ~85%
-# true-pair band duplicates (a J≈0.9 pair collides in ~5 of 8 bands)
-# feeding the candidate union-distinct. 8-row bands (r7, the lever the
-# r6 verdict ordered) halve the band rows per surface and cut true-pair
-# duplicate collisions to ~1.9 of 4 bands — measured −8..−12% on the
-# equivalences stage at 8M turns/c32, outputs byte-identical at
-# sf0.001/0.01/0.1/1.0 AND the 8M-turn replica (459,594 links). The
-# deterministic prefix+suffix blocks (below) carry the recall guarantee
-# for the edit-tails; banding is free to change — the oracle's ground
-# truth is exact Jaccard, and recall is pinned by the independent
-# pure-Python ground-truth test (tests/test_link.py).
+# 4 bands x 8 rows. Per-band collision probability is J^rows: 8-row
+# bands keep random pairs out, and a J≈0.9 true pair collides in ~1.9 of
+# 4 bands, so few duplicate candidates reach the distinct (measured
+# −8..−12% on the equivalences stage against 8 x 4 at 8M turns/c32,
+# outputs byte-identical). The deterministic prefix+suffix blocks
+# (below) carry the recall guarantee for the edit-tails; banding is free
+# to change — the oracle's ground truth is exact Jaccard, and recall is
+# pinned by the independent pure-Python ground-truth test
+# (tests/test_link.py).
 N_HASHES = 32
 N_BANDS = 4  # 8 rows per band
 HASH_SEED = 42
@@ -74,74 +69,6 @@ def _ngrams(s: str) -> set[str]:
 def _gram_hash(g: str) -> int:
     # crc32 < 2^32, the bound minhash.signatures_batch keeps int64-safe
     return zlib.crc32(g.encode("utf-8"))
-
-
-# byte popcount table for the vectorized Jaccard (int64 so sums don't wrap)
-_POPCOUNT = np.unpackbits(
-    np.arange(256, dtype=np.uint8)[:, None], axis=1
-).sum(axis=1).astype(np.int64)
-
-
-def _exact_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Whole-batch exact 3-gram Jaccard — no per-pair Python loop.
-
-    Same whole-batch shape as the MinHash kernel (textops/minhash.py,
-    VERDICT r5 wrong #2): gram sets are computed once per DISTINCT
-    string and packed into a bitset row over the batch's gram
-    vocabulary; per-pair |intersection| is then one
-    vectorized AND + popcount over the two row slices, and |union| =
-    |gx| + |gy| - |intersection| from precomputed set sizes. The gram
-    vocabulary is small by construction (3-grams over [a-z-], ≤ ~20k
-    possible), so a bitset row is a few hundred bytes and a 10k-pair
-    Arrow batch stays a few MB. Bit-identical to the per-pair set-ops
-    loop (pytest-pinned: test_link.test_vectorized_jaccard_matches_setops).
-    """
-    if not len(a):
-        return pd.Series(np.empty(0, dtype=np.float64))
-    codes, uniques = pd.factorize(
-        pd.concat([a, b], ignore_index=True), sort=False
-    )
-    if codes.min() < 0:
-        # factorize maps nulls to -1, which would negative-index the last
-        # bitset row and silently score a (None, x) pair as the last
-        # distinct string — fail loudly like the old per-pair loop's
-        # TypeError (ADVICE r6)
-        raise ValueError("_exact_jaccard: null surface/alias in batch")
-    ai, bi = codes[: len(a)], codes[len(a):]
-    vocab: dict[str, int] = {}
-    rows: list[int] = []
-    cols: list[int] = []
-    sizes = np.empty(len(uniques), dtype=np.int64)
-    for i, s in enumerate(uniques):
-        gs = _ngrams(s)
-        sizes[i] = len(gs)
-        for g in gs:
-            rows.append(i)
-            cols.append(vocab.setdefault(g, len(vocab)))
-    r = np.asarray(rows, dtype=np.int64)
-    c = np.asarray(cols, dtype=np.int64)
-    bits = np.zeros((len(uniques), (len(vocab) + 7) >> 3), dtype=np.uint8)
-    # unbuffered |= : duplicate (row, byte) targets must all land
-    np.bitwise_or.at(
-        bits, (r, c >> 3), (np.uint8(1) << (c & 7).astype(np.uint8))
-    )
-    # chunked popcount: _POPCOUNT[...] materializes an int64 array 8x the
-    # AND'd bitset slice — unchunked, a 10k-pair batch over a ~20k-gram
-    # vocab is a ~200 MB transient per Python worker (ADVICE r6); 2048-
-    # pair chunks bound it to a few MB with identical sums
-    inter = np.empty(len(ai), dtype=np.int64)
-    for lo in range(0, len(ai), 2048):
-        hi = lo + 2048
-        inter[lo:hi] = _POPCOUNT[
-            bits[ai[lo:hi]] & bits[bi[lo:hi]]
-        ].sum(axis=1)
-    union = sizes[ai] + sizes[bi] - inter
-    return pd.Series(inter / union, dtype=np.float64)
-
-
-def jaccard_udf():
-    # created lazily: pandas_udf needs an active SparkSession at definition
-    return F.pandas_udf(_exact_jaccard, "double")
 
 
 def link_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -228,6 +155,31 @@ def _minhash_bands(df: DataFrame, col: str) -> DataFrame:
 BLOCK_K = 5
 
 
+def _block_keys(df: DataFrame, col: str, lb_shifts: list[int]) -> DataFrame:
+    """(string, key) rows for every blocking arm of one side: one row per
+    MinHash band ('b<band>:<band_key>'), and per length-bucket shift one
+    prefix-K ('p<lb>:') and one suffix-K ('s<lb>:') block, lb being the
+    coarse length bucket length/4 plus the shift. The arm tag keeps keys
+    from colliding across arms; shifting one side by -1, 0, +1 makes the
+    equi-join itself the |lb_s - lb_a| <= 1 filter of the block arms."""
+    bands = _minhash_bands(df, col).select(
+        col, F.format_string("b%d:%d", "band", "band_key").alias("key")
+    )
+    lb = (F.length(col) / 4).cast("int")
+    blocks = df.select(
+        col,
+        F.explode(
+            F.array(*[
+                F.format_string(f"{arm}%d:%s", lb + d,
+                                F.substring(col, pos, BLOCK_K))
+                for arm, pos in (("p", 1), ("s", -BLOCK_K))
+                for d in lb_shifts
+            ])
+        ).alias("key"),
+    )
+    return bands.unionByName(blocks)
+
+
 def lsh_candidate_pairs(
     unmatched: DataFrame, dict_aliases: DataFrame
 ) -> DataFrame:
@@ -241,44 +193,31 @@ def lsh_candidate_pairs(
     shares the suffix block — a single contiguous edit (append, prefix
     change, one substitution on a >= 2K-char string) is always caught by
     at least one. K-char keys keep blocks ~|universe|/alphabet^(K-1)
-    small, so candidate volume stays ~O(universe); the r6 probe measured
-    K=4 admitting ~5x true-pair volume in junk once the dictionary grew
-    with the corpus. MinHash banding covers the residue (multi-edit
+    small, so candidate volume stays ~O(universe) (BLOCK_K's comment has
+    the measurement). MinHash banding covers the residue (multi-edit
     high-Jaccard pairs).
 
     Both inputs are distinct single-column DataFrames: unmatched('surface'),
-    dict_aliases('alias'). Output is distinct pairs — ONE shuffle over
-    the unioned arms (the per-arm distinct the r5 shape ran on the LSH
-    arm was a second full shuffle of the biggest arm).
+    dict_aliases('alias'). All three arms are one keyed relation per side
+    (_block_keys), so candidate generation is ONE equi-join on the key
+    plus ONE distinct over its output — the blocking step ahead of the
+    matcher.
     """
     # no forced broadcast: the dictionary side GROWS with the corpus now,
     # so the join strategy is left to Catalyst/AQE — tiny dicts still
     # broadcast under the session threshold, corpus-proportional ones
     # hash-join on the (uniform) band/block keys
-    sb = _minhash_bands(unmatched, "surface")
-    ab = _minhash_bands(dict_aliases, "alias")
-    lsh = sb.join(ab, on=["band", "band_key"]).select("surface", "alias")
+    s = _block_keys(unmatched, "surface", [0])
+    a = _block_keys(dict_aliases, "alias", [-1, 0, 1])
+    return s.join(a, on="key").select("surface", "alias").distinct()
 
-    def _blocked(k_expr) -> DataFrame:
-        pb_s = unmatched.select(
-            "surface",
-            k_expr("surface").alias("blk"),
-            (F.length("surface") / 4).cast("int").alias("lb"),
-        )
-        pb_a = dict_aliases.select(
-            "alias",
-            k_expr("alias").alias("blk"),
-            (F.length("alias") / 4).cast("int").alias("lb"),
-        )
-        return (
-            pb_s.join(pb_a, on=["blk"])
-            .filter(F.abs(pb_s["lb"] - pb_a["lb"]) <= 1)
-            .select("surface", "alias")
-        )
 
-    pfx = _blocked(lambda c: F.substring(c, 1, BLOCK_K))
-    sfx = _blocked(lambda c: F.substring(c, -BLOCK_K, BLOCK_K))
-    return lsh.unionByName(pfx).unionByName(sfx).distinct()
+def _non_null(col: str) -> Column:
+    # the verify scores null grams as a null Jaccard, which the threshold
+    # filter would drop without a word: fail loudly instead
+    return F.when(
+        F.col(col).isNull(), F.raise_error(F.lit(f"link_tail: null {col}"))
+    ).otherwise(F.col(col)).alias(col)
 
 
 def link_tail(
@@ -291,24 +230,29 @@ def link_tail(
     Returns (src, dst) same_as link edges:
     ('ent:unk/<surface>', '<dict entity_id>'), one per surface (argmax
     Jaccard >= threshold, ties broken by min alias — deterministic under
-    any parallelism).
+    any parallelism). Candidates are verified JVM-side with the exact
+    char-3-gram Jaccard (minhash.char_grams / minhash.jaccard, the
+    oracle's definition). A null surface or person alias raises.
     """
     persons = alias_dict.filter(F.col("kind") == "person").select(
-        "alias", "entity_id"
+        _non_null("alias"), "entity_id"
     )
     cands = lsh_candidate_pairs(
-        unmatched.select("surface").distinct(),
+        unmatched.select(_non_null("surface")).distinct(),
         persons.select("alias").distinct(),
     )
     scored = cands.withColumn(
-        "jacc", jaccard_udf()(F.col("surface"), F.col("alias"))
-    ).filter(F.col("jacc") >= F.lit(threshold))
+        "jacc",
+        minhash.jaccard(
+            minhash.char_grams("surface", NGRAM),
+            minhash.char_grams("alias", NGRAM),
+        ),
+    )
     # deterministic argmax per surface in ONE aggregation:
-    # min(struct(-jacc, alias)) = highest jacc, ties -> min alias. The r5
-    # shape (groupBy max + re-join scored + filter + groupBy min)
-    # evaluated the candidate generation AND the scorer TWICE (both join
-    # sides) and shuffled three times — the probe measured that
-    # double-evaluation as ~half of link_tail's wall time.
+    # min(struct(-jacc, alias)) = highest jacc, ties -> min alias; a max
+    # re-joined to the scored pairs would evaluate candidates twice. The
+    # threshold applies to the winner (the best pair clears it iff any
+    # does), so no filter is pushed below the verify to score it twice.
     w_best = (
         scored.groupBy("surface")
         .agg(
@@ -318,6 +262,7 @@ def link_tail(
                 )
             ).alias("b")
         )
+        .filter(F.col("b.nj") <= -threshold)
         .select("surface", F.col("b.a").alias("alias"))
     )
     # src = ent:unk/<surface> is unique per surface after the argmax —

@@ -1,5 +1,6 @@
 """The one MinHash-LSH kernel: document dedup and entity linking both band
-with it.
+with it, and both verify their candidates with its exact JVM Jaccard
+(`jaccard` over `char_grams` or `bigram_sets` arrays — no Python verify).
 
 Frozen hash family (seeded), identical across runs and parallelism levels.
 Callers pass the token hash: word-bigram document shingles use the
@@ -39,7 +40,7 @@ from collections.abc import Callable, Collection, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _PRIME = 2_147_483_647
@@ -180,29 +181,52 @@ def band_frame(
     )
 
 
-def shingled(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, shingles): JVM-side word-bigram shingling (duplicates fine —
-    min-invariant), identical token grammar to word_bigrams / the DuckDB
-    oracle. Tokenized ONCE into an array column, then the bigram lambda
-    references that column — inlining the regex into the lambda would
+# word bigrams of the token array `w`, one per adjacent token pair
+_BIGRAMS = (
+    "transform(sequence(1, size(w) - 1), "
+    "i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
+)
+
+
+def bigram_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, shingles): the distinct word bigrams of every document with at
+    least two tokens — the DuckDB oracle's shingle relation, one array
+    per document, built JVM-side. Tokens are regexp words (the grammar of
+    word_bigrams), extracted ONCE into an array column that the bigram
+    lambda references; inlining the regex into the lambda would
     re-evaluate it per element."""
     toks = F.regexp_extract_all(F.col(text_col), F.lit("[a-z]+"), F.lit(0))
-    return df.select(F.col(id_col), toks.alias("w")).select(
-        id_col,
-        F.expr(
-            "CASE WHEN size(w) < 2 THEN w "
-            "ELSE transform(sequence(1, size(w) - 1), "
-            "i -> concat(element_at(w, i), ' ', element_at(w, i + 1))) END"
-        ).alias("shingles"),
+    return (
+        df.select(F.col(id_col), toks.alias("w"))
+        .filter(F.size("w") >= 2)
+        .select(id_col, F.array_distinct(F.expr(_BIGRAMS)).alias("shingles"))
     )
 
 
-def band_rows_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, band, band_key) rows from word-bigram MinHash signatures.
+def char_grams(col: str, n: int) -> Column:
+    """Distinct character n-grams of a string column; a string shorter
+    than n (the empty string included) is its own single gram. The rule
+    of link._ngrams and of the DuckDB oracle's substr(s, i, n) sets."""
+    c = F.col(col)
+    starts = F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1)))
+    return F.array_distinct(
+        F.transform(starts, lambda i: c.substr(i, F.lit(n)))
+    )
 
-    Shingling runs JVM-side (one codegen'd projection); the Arrow batch
-    computes every document's signature and band keys in whole-batch
-    numpy ops — no per-document Python.
+
+def jaccard(a: str | Column, b: str | Column) -> Column:
+    """Exact Jaccard |a ∩ b| / |a ∪ b| of two distinct-element arrays,
+    evaluated JVM-side (no Python boundary)."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def band_rows_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, band, band_key) rows from word-bigram MinHash signatures of
+    the documents with at least two tokens (the ones the oracle bands).
+
+    Shingling runs JVM-side (bigram_sets, one codegen'd projection); the
+    Arrow batch computes every document's signature and band keys in
+    whole-batch numpy ops — no per-document Python.
     """
     a, b = hash_family(N_HASHES)
     schema = f"{id_col} long, band int, band_key long"
@@ -216,4 +240,4 @@ def band_rows_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                     shingle_hash,
                 )
 
-    return shingled(df, id_col, text_col).mapInPandas(gen, schema)
+    return bigram_sets(df, id_col, text_col).mapInPandas(gen, schema)

@@ -230,6 +230,9 @@ class Warehouse:
             "append": append,
             "stage": stage or table,
             "catalog_table": catalog_table,
+            # enough to re-register the catalog table in a later process
+            "bucket_by": bucket_by,
+            "ddl": df.schema.toDDL() if bucket_by else None,
             "committed_at": now,
         }
         if defer_commit:
@@ -287,6 +290,8 @@ class Warehouse:
                 }
                 if p["catalog_table"]:
                     entry["catalog_table"] = p["catalog_table"]
+                    entry["bucket_by"] = p["bucket_by"]
+                    entry["ddl"] = p["ddl"]
                 log["tables"][table] = entry
                 # reservation served its purpose once the snapshot id is
                 # in log['tables'] — drop it unless a CONCURRENT writer
@@ -347,9 +352,17 @@ class Warehouse:
         if entry is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot")
         # bucketed snapshot: read through the catalog so the scan reports
-        # its hash partitioning and downstream aggs skip the shuffle
+        # its hash partitioning and downstream aggs skip the shuffle; a
+        # process that did not write it registers the external table here
+        # (Spark takes a bucket spec on a location only with a column list)
         cat = entry.get("catalog_table")
-        if cat and spark.catalog.tableExists(cat):
+        if cat and entry.get("bucket_by"):
+            n, cols = entry["bucket_by"]
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {cat} ({entry['ddl']}) "
+                f"USING parquet CLUSTERED BY ({', '.join(cols)}) "
+                f"INTO {n} BUCKETS LOCATION '{entry['paths'][0]}'"
+            )
             return spark.table(cat)
         paths = entry.get("paths") or [entry["path"]]
         df = spark.read.parquet(*paths)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from guac_spark import graph
 
@@ -78,8 +79,8 @@ def test_pagination_covers_all_exactly_once(spark):
 
 
 def test_toposort_grouped_matches_peel_on_conv_local_chains(spark):
-    # conv-local turn chains: auto mode takes the grouped single-pass path;
-    # forcing peel must give identical levels
+    # conv-local turn chains: toposort_levels takes the grouped
+    # single-pass path; the peel strategy must give identical levels
     rows = []
     for conv in ("conv-a", "conv-b"):
         for i in range(1, 6):
@@ -88,10 +89,11 @@ def test_toposort_grouped_matches_peel_on_conv_local_chains(spark):
     # a branch: two replies to the same parent
     rows.append(("turn:conv-a:9", "turn:conv-a:2", "replies_to"))
     e = _edges(spark, rows)
+    cp = e.select(F.col("src").alias("child"), F.col("dst").alias("parent"))
     grouped = {r["node"]: r["level"]
-               for r in graph.toposort_levels(e, mode="grouped").collect()}
+               for r in graph._toposort_grouped(cp).collect()}
     peel = {r["node"]: r["level"]
-            for r in graph.toposort_levels(e, mode="peel").collect()}
+            for r in graph._toposort_peel(cp).collect()}
     auto = {r["node"]: r["level"]
             for r in graph.toposort_levels(e).collect()}
     assert grouped == peel == auto

@@ -2,21 +2,38 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
 from guac_spark import corpus, extract, link
-from guac_spark.link import _exact_jaccard, _ngrams
+from guac_spark.link import _ngrams
+from guac_spark.textops import minhash
 from tests.conftest import SF_SMALL
 
-import pandas as pd
+
+def _jvm_jaccard(spark, pairs):
+    """JVM char-3-gram Jaccard of every (x, y) pair, in input order, from
+    ONE DataFrame."""
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pairs)],
+        "i long, x string, y string",
+    )
+    j = minhash.jaccard(
+        minhash.char_grams("x", link.NGRAM), minhash.char_grams("y", link.NGRAM)
+    )
+    return [r["j"] for r in df.select("i", j.alias("j")).orderBy("i").collect()]
 
 
-def test_ngram_jaccard_reference():
+def _setops_jaccard(x, y):
+    gx, gy = _ngrams(x), _ngrams(y)
+    return len(gx & gy) / len(gx | gy)
+
+
+def test_ngram_jaccard_reference(spark):
     a = _ngrams("algeria")
     b = _ngrams("algeriaa")
     assert len(a & b) / len(a | b) > 0.8
-    s = _exact_jaccard(pd.Series(["algeria"]), pd.Series(["algeriaa"]))
-    assert abs(s[0] - len(a & b) / len(a | b)) < 1e-12
+    [j] = _jvm_jaccard(spark, [("algeria", "algeriaa")])
+    assert j == len(a & b) / len(a | b)
 
 
 def test_variant_links_are_exactly_ground_truth(spark):
@@ -67,28 +84,49 @@ def test_celebrity_head_link_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_vectorized_jaccard_matches_setops():
-    """The batched bitset-popcount Jaccard must be bit-identical to the
-    per-pair set-ops definition for every pair shape: identical strings,
-    short (<3-char, whole-string gram) strings, disjoint gram sets,
-    duplicate pairs within one batch, and the corpus's real tails."""
+def test_vectorized_jaccard_matches_setops(spark):
+    """The JVM Jaccard over char_grams must be bit-identical to the
+    per-pair set-ops definition over _ngrams for every pair shape:
+    identical strings, the empty string, short (<3-char, whole-string
+    gram) strings, disjoint gram sets, duplicate pairs within one batch,
+    and the corpus's real tails — 25k pairs in one DataFrame."""
     import random
 
     rng = random.Random(7)
     alphabet = "abcdefqrstuvwxyz-"
-    strs = ["ab", "a", "abc", "ada-lovelace", "ada-lovelacee",
-            "ada-lovelaceee", "grace-hopper", "xyz"]
+    strs = ["", "ab", "a", "abc", "aaa", "aaaa", "ada-lovelace",
+            "ada-lovelacee", "ada-lovelaceee", "grace-hopper", "xyz"]
     strs += ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 16)))
-             for _ in range(200)]
-    pairs = [(rng.choice(strs), rng.choice(strs)) for _ in range(2000)]
+             for _ in range(400)]
+    pairs = [(rng.choice(strs), rng.choice(strs)) for _ in range(25_000)]
     pairs += [(s, s) for s in strs]
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    got = _exact_jaccard(a, b)
-    for i, (x, y) in enumerate(pairs):
-        gx, gy = _ngrams(x), _ngrams(y)
-        want = len(gx & gy) / len(gx | gy)
-        assert got[i] == want, (x, y, got[i], want)
+    got = _jvm_jaccard(spark, pairs)
+    for (x, y), g in zip(pairs, got, strict=True):
+        assert g == _setops_jaccard(x, y), (x, y, g)
+
+
+def test_link_tail_raises_on_null_surface_or_alias(spark):
+    """A null surface or person alias would score a null Jaccard and drop
+    out of the threshold filter unseen: link_tail must fail loudly."""
+    adict = spark.createDataFrame(
+        [("ada-lovelace", "ent:person/ada-lovelace", "person")],
+        "alias string, entity_id string, kind string",
+    )
+    unmatched = spark.createDataFrame([("ada-lovelacee",)], "surface string")
+    assert link.link_tail(unmatched, adict).count() == 1
+    null_surface = unmatched.unionByName(
+        spark.createDataFrame([(None,)], "surface string")
+    )
+    with pytest.raises(Exception, match="link_tail: null surface"):
+        link.link_tail(null_surface, adict).collect()
+    null_alias = adict.unionByName(
+        spark.createDataFrame(
+            [(None, "ent:person/x", "person")],
+            "alias string, entity_id string, kind string",
+        )
+    )
+    with pytest.raises(Exception, match="link_tail: null alias"):
+        link.link_tail(unmatched, null_alias).collect()
 
 
 def test_block_key_recall_precondition():

@@ -97,6 +97,25 @@ def test_minhash_shingling_is_jvm_side(spark):
     assert "MapInPandas" in plan
 
 
+def test_link_tail_verifies_in_the_jvm_after_one_candidate_join(spark):
+    """Tail linking crosses the Python boundary only for its two MinHash
+    banding passes (one per side): the Jaccard verify is a JVM expression
+    (no Arrow/Batch EvalPython), and the three blocking arms meet in ONE
+    candidate join."""
+    from guac_spark import link
+
+    adict = spark.createDataFrame(
+        [("ada-lovelace", "ent:person/ada-lovelace", "person")],
+        "alias string, entity_id string, kind string",
+    )
+    unmatched = spark.createDataFrame([("ada-lovelacee",)], "surface string")
+    plan = _plan(link.link_tail(unmatched, adict))
+    assert plan.count("MapInPandas") == 2, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    cands = link.lsh_candidate_pairs(unmatched, adict.select("alias"))
+    assert _optimized(cands).count("Join ") == 1, _optimized(cands)
+
+
 def test_simhash_computed_once_in_pair_plan(spark):
     """simhash_near_pairs must run the simhash mapInPandas exactly once:
     the banded candidates come from ONE bucket groupBy, not four unioned
@@ -111,8 +130,9 @@ def test_simhash_computed_once_in_pair_plan(spark):
 
 def test_bucketed_mentions_linked_dedups_without_shuffle(spark):
     """The triples-stage dedup must reuse the bucketed layout of the
-    mentions_linked snapshot: no hashpartitioning Exchange above the scan
-    (in-session; a later session falls back to a plain read + shuffle)."""
+    mentions_linked snapshot: no hashpartitioning Exchange above the scan,
+    both in the writing session and in one whose catalog lacks the table
+    (a later process: the read registers it again from the commit log)."""
     import tempfile
 
     from guac_spark import assemble, pipeline
@@ -121,11 +141,20 @@ def test_bucketed_mentions_linked_dedups_without_shuffle(spark):
     root = tempfile.mkdtemp(prefix="wh_bucketplan_")
     pipeline.run_pipeline(spark, SF_SMALL, root)
     wh = Warehouse(root)
-    linked = wh.read(spark, "mentions_linked")
-    mapping = wh.read(spark, "cc_mapping")
-    plan = _plan(assemble.triples_final(linked, mapping))
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
-    assert "Exchange hashpartitioning" not in plan
+
+    def triples_plan() -> str:
+        linked = wh.read(spark, "mentions_linked")
+        mapping = wh.read(spark, "cc_mapping")
+        return _plan(assemble.triples_final(linked, mapping))
+
+    in_session = triples_plan()
+    # the table is external: dropping it keeps the committed files
+    cat = wh._read_log()["tables"]["mentions_linked"]["catalog_table"]
+    spark.sql(f"DROP TABLE {cat}")
+    assert not spark.catalog.tableExists(cat)
+    for plan in (in_session, triples_plan()):
+        assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
+        assert "Exchange hashpartitioning" not in plan
 
 
 def test_conv_buckets_rule():

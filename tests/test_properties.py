@@ -6,13 +6,12 @@ n-gram Jaccard, MinHash signatures, union-find, simhash.
 
 from __future__ import annotations
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from guac_spark import link
 from guac_spark.cc import _union_find_local
-from guac_spark.link import _exact_jaccard, _ngrams
+from guac_spark.link import _ngrams
 from guac_spark.textops import minhash
 from guac_spark.textops.dedup import _simhash64
 
@@ -26,14 +25,28 @@ def _minhash_sig(s: str):
 words = st.text(alphabet="abcdefg-", min_size=1, max_size=20)
 
 
-@given(words, words)
-@settings(max_examples=200, deadline=None)
-def test_jaccard_bounds_and_symmetry(a, b):
-    j = float(_exact_jaccard(pd.Series([a, b]), pd.Series([b, a]))[0])
-    j2 = float(_exact_jaccard(pd.Series([b]), pd.Series([a]))[0])
-    assert 0.0 <= j <= 1.0
-    assert abs(j - j2) < 1e-12
-    assert float(_exact_jaccard(pd.Series([a]), pd.Series([a]))[0]) == 1.0
+@given(st.lists(st.tuples(words, words), min_size=1, max_size=50))
+@settings(max_examples=20, deadline=None)
+def test_jaccard_bounds_and_symmetry(spark, pairs):
+    # linking's JVM verify, one DataFrame per drawn batch of pairs
+    def j(x, y):
+        return minhash.jaccard(
+            minhash.char_grams(x, link.NGRAM), minhash.char_grams(y, link.NGRAM)
+        )
+
+    rows = (
+        spark.createDataFrame(pairs, "a string, b string")
+        .select(j("a", "b").alias("ab"), j("b", "a").alias("ba"),
+                j("a", "a").alias("aa"))
+        .collect()
+    )
+    assert len(rows) == len(pairs)
+    for (a, b), r in zip(pairs, rows, strict=True):
+        ga, gb = _ngrams(a), _ngrams(b)
+        assert r["ab"] == len(ga & gb) / len(ga | gb)
+        assert 0.0 <= r["ab"] <= 1.0
+        assert abs(r["ab"] - r["ba"]) < 1e-12
+        assert r["aa"] == 1.0
 
 
 @given(words)

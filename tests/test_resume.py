@@ -10,7 +10,28 @@ import pytest
 
 from guac_spark.pipeline import run_pipeline
 from guac_spark.warehouse import Warehouse
-from tests.conftest import SF_SMALL, num_buckets
+from tests.conftest import SF_MED, SF_SMALL, num_buckets
+
+
+def test_cached_warehouse_root_follows_the_sources(tmp_path):
+    """`__spark_entry__._ctx`'s cached pipeline warehouse is keyed on the
+    package sources and the corpus: an edited source tree gets a fresh
+    root and never resumes the snapshots of the old one."""
+    import shutil
+
+    import __spark_entry__ as E
+
+    pkg = tmp_path / "guac_spark"
+    shutil.copytree(E._PKG, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    before = E._source_digest(str(pkg))
+    assert before == E._source_digest(str(pkg))
+    with open(pkg / "textops" / "minhash.py", "a") as f:
+        f.write("\n# edited\n")
+    after = E._source_digest(str(pkg))
+    assert after != before
+    assert E._wh_root(SF_SMALL, before) != E._wh_root(SF_SMALL, after)
+    assert E._wh_root(SF_SMALL, before) == E._wh_root(SF_SMALL, before)
+    assert E._wh_root(SF_SMALL, before) != E._wh_root(SF_MED, before)
 
 
 class _Boom(Exception):
