@@ -65,7 +65,10 @@ def conv_buckets(turns: int) -> int:
 #     expressions (corpus.gen_pid_sql, ADVICE r5) — on sparse event_id
 #     spaces the entity universe (and thus every downstream table)
 #     differs from v5.
-SCHEMA_VERSION = 6
+# v7: every commit entry records its snapshot's schema (`ddl`), and
+#     Warehouse.read requires it — a v6 entry has none for unbucketed
+#     tables.
+SCHEMA_VERSION = 7
 
 # CC physical-strategy gates. The driver-side union-find is strictly for
 # small equivalence sets: with a corpus-proportional entity universe the
@@ -153,18 +156,6 @@ def run_pipeline(
         res.stages_run.append(name)
         return wh.read(spark, name)
 
-    # the linking dictionary is derived engine data now (head literals +
-    # the corpus-proportional generated arm) — committed once per run so
-    # every downstream broadcast reads the tiny snapshot instead of
-    # re-deriving from events. The universe params are stamped into the
-    # warehouse meta at derivation time so append_alias_dict (the O(new)
-    # incremental maintenance path) can pin them.
-    def _build_adict() -> DataFrame:
-        df = corpus.alias_dict(spark, sf_dir)
-        np_, nt = corpus.universe(n_events)
-        wh.set_meta("universe", {"np": np_, "nt": nt})
-        return df
-
     # Python-worker pool prewarm (guide §4.5 heavyweight-init-once, moved
     # to where it overlaps JVM work): the first Arrow/pandas stage of a
     # cold process pays ~cores worker spawns + numpy/pandas imports
@@ -191,20 +182,30 @@ def run_pipeline(
 
     threading.Thread(target=_prewarm_python_workers, daemon=True).start()
 
-    # alias_dict and transcripts are independent (both derive from events
-    # + the universe views) — submit both write jobs concurrently exactly
-    # like the vertices/edges pair below (guide §2.6: overlap independent
-    # jobs so one stage's barrier tail back-fills the other's tasks; at
-    # the cold start this also overlaps the first stage's JIT warmup).
-    # The universe views/cache are registered once BEFORE the threads:
-    # the per-stage _prepare_universe calls inside are then idempotent
-    # (view replace with an identical definition, CacheManager hit on
-    # the same canonical plan).
-    corpus._prepare_universe(spark, sf_dir)
+    # alias_dict and transcripts both derive from events + the universe
+    # views, registered ONCE here: each template then runs against these
+    # views, so a build reads (and schema-infers) events once, not once
+    # per head stage
+    np_, nt = corpus._prepare_universe(spark, sf_dir)
 
-    # transcripts are written BUCKETED on conv_id: the derivation window
-    # already hash-shuffles on conv_id, so the bucket layout costs no new
-    # exchange — and every downstream corpus pass inherits it
+    # the linking dictionary is derived engine data now (head literals +
+    # the corpus-proportional generated arm) — committed once per run so
+    # every downstream broadcast reads the tiny snapshot instead of
+    # re-deriving from events. The universe params are stamped into the
+    # warehouse meta at derivation time so append_alias_dict (the O(new)
+    # incremental maintenance path) can pin them.
+    def _build_adict() -> DataFrame:
+        wh.set_meta("universe", {"np": np_, "nt": nt})
+        return spark.sql(corpus.alias_dict_sql(str(np_), str(nt), "spark"))
+
+    # alias_dict and transcripts are independent — submit both write jobs
+    # concurrently exactly like the vertices/edges pair below (guide
+    # §2.6: overlap independent jobs so one stage's barrier tail
+    # back-fills the other's tasks; at the cold start this also overlaps
+    # the first stage's JIT warmup). transcripts are written BUCKETED on
+    # conv_id: the derivation window already hash-shuffles on conv_id, so
+    # the bucket layout costs no new exchange — and every downstream
+    # corpus pass inherits it
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as ex:
@@ -212,7 +213,7 @@ def run_pipeline(
         ft = ex.submit(
             stage,
             "transcripts",
-            lambda: corpus.transcripts(spark, sf_dir),
+            lambda: spark.sql(corpus.corpus_sql(str(np_), str(nt))),
             bucket_by=bucket_by,
         )
         adict = fa.result()

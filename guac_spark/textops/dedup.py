@@ -163,9 +163,16 @@ def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     sets = minhash.bigram_sets(docs, "doc_id", "text")
     sa = sets.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sb"))
+    # the score is a generator output: Catalyst keeps a filter on it
+    # above the generator, so the Jaccard is evaluated once per candidate
+    # (as a plain projection, the filter would be pushed into the join
+    # condition with its own copy of the arrays' intersect and union).
+    # The threshold applies to the raw score, the rounding only to the
+    # output
     return (
         cand.join(sa, on="a").join(sb, on="b")
-        .withColumn("jacc", minhash.jaccard("sa", "sb"))
+        .select("a", "b",
+                F.explode(F.array(minhash.jaccard("sa", "sb"))).alias("jacc"))
         .filter(F.col("jacc") >= threshold)
         .select("a", "b", F.round("jacc", 6).alias("jacc"))
     )

@@ -30,6 +30,23 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StructField, StructType,
+)
+
+
+def _nullable(t: DataType) -> DataType:
+    """t with every field, element and value nullable — the schema a
+    parquet read returns, whatever the writer's nullability was."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
 
 class Warehouse:
     def __init__(self, root: str):
@@ -98,7 +115,7 @@ class Warehouse:
         entry = self._read_log()["tables"].get(table)
         if entry is None:
             return None
-        return entry.get("paths") or [entry["path"]]
+        return entry["paths"]
 
     def table_path(self, table: str, snapshot_id: int) -> str:
         return os.path.join(self.root, table, f"snap-{snapshot_id}")
@@ -140,10 +157,15 @@ class Warehouse:
         bucket_by=(n, cols) hash-buckets the files and registers the
         snapshot in the session catalog so downstream aggregations on a
         superset of `cols` need NO shuffle (the Iceberg bucket-partition /
-        sort-order analog). The bucket metadata lives in the session
-        catalog; a later session falls back to a plain parquet read of the
-        same files (correct, just re-shuffles) — on a real cluster the
+        sort-order analog). The commit entry records the bucket spec, and
+        `read` in a later session re-registers the catalog table from it,
+        so the layout survives the process — on a real cluster the
         catalog (Hive/Iceberg) persists it.
+
+        Every commit entry records the snapshot's schema as a DDL string
+        (`ddl`, nullability dropped: file-source reads are nullable
+        anyway). `read` takes the schema from there, never from a data
+        file — the Iceberg table-metadata schema analog.
         """
         return self._write(df, table, stage, append=False,
                            bucket_by=bucket_by)
@@ -158,7 +180,11 @@ class Warehouse:
         regardless of table size — the shape a 100 TB enrichment loop
         needs. Readers of older snapshots are unaffected (their directory
         lists are immutable). defer_commit=True returns a pending dict
-        for commit_pending() instead of flipping the log."""
+        for commit_pending() instead of flipping the log.
+
+        The new rows must have the committed snapshot's column names and
+        types (nullability aside): one snapshot is read with one schema,
+        so a mismatched append raises before anything is written."""
         return self._write(df, table, stage, append=True,
                            defer_commit=defer_commit)
 
@@ -177,9 +203,16 @@ class Warehouse:
         atomic log replace (the multi-table-transaction analog a
         two-table loop like enrichment needs for crash safety)."""
         t0 = time.time()
+        ddl = _nullable(df.schema).toDDL()
         with self._locked():
             log = self._read_log()
             prev_entry = log["tables"].get(table)
+            if append and prev_entry and prev_entry.get("ddl") != ddl:
+                raise ValueError(
+                    f"append to {table!r}: the new rows have schema "
+                    f"<{ddl}>, the committed snapshot has "
+                    f"<{prev_entry.get('ddl')}>"
+                )
             prev = prev_entry["snapshot_id"] if prev_entry else 0
             log_reserved = log.get("reserved", {})
             snap = max(
@@ -232,7 +265,7 @@ class Warehouse:
             "catalog_table": catalog_table,
             # enough to re-register the catalog table in a later process
             "bucket_by": bucket_by,
-            "ddl": df.schema.toDDL() if bucket_by else None,
+            "ddl": ddl,
             "committed_at": now,
         }
         if defer_commit:
@@ -266,7 +299,7 @@ class Warehouse:
                 rows: int | None = p["new_rows"]
                 if p["append"] and log["tables"].get(table) is not None:
                     entry = log["tables"][table]
-                    paths = (entry.get("paths") or [entry["path"]]) + paths
+                    paths = entry["paths"] + paths
                     # legacy entries without a row count make the total
                     # unknowable — propagate None rather than storing the
                     # new rows alone as a silently-wrong total (ADVICE r2)
@@ -287,11 +320,13 @@ class Warehouse:
                     # readers need no count() job (Iceberg snapshot-summary
                     # total-records analog)
                     "rows": rows,
+                    # the schema every directory in `paths` shares (appends
+                    # are checked against it before they write)
+                    "ddl": p["ddl"],
                 }
                 if p["catalog_table"]:
                     entry["catalog_table"] = p["catalog_table"]
                     entry["bucket_by"] = p["bucket_by"]
-                    entry["ddl"] = p["ddl"]
                 log["tables"][table] = entry
                 # reservation served its purpose once the snapshot id is
                 # in log['tables'] — drop it unless a CONCURRENT writer
@@ -348,9 +383,17 @@ class Warehouse:
 
     # --- read -------------------------------------------------------------
     def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The committed snapshot of `table`, with the schema its commit
+        entry records: no Spark job (an inferred schema costs one job
+        that reads a parquet footer)."""
         entry = self._read_log()["tables"].get(table)
         if entry is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot")
+        if entry.get("ddl") is None:
+            raise ValueError(
+                f"table {table!r}: the committed snapshot records no schema "
+                "(written by an older engine) — rebuild the warehouse"
+            )
         # bucketed snapshot: read through the catalog so the scan reports
         # its hash partitioning and downstream aggs skip the shuffle; a
         # process that did not write it registers the external table here
@@ -364,11 +407,7 @@ class Warehouse:
                 f"INTO {n} BUCKETS LOCATION '{entry['paths'][0]}'"
             )
             return spark.table(cat)
-        paths = entry.get("paths") or [entry["path"]]
-        df = spark.read.parquet(*paths)
-        if "_part_id" in df.columns:  # legacy snapshots stamped lineage
-            df = df.drop("_part_id")
-        return df
+        return spark.read.schema(entry["ddl"]).parquet(*entry["paths"])
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "metrics"))

@@ -101,7 +101,7 @@ def test_append_onto_unknown_rows_propagates_none():
     wh.commit_pending([{
         "table": "t", "snap": 2, "path": wh.table_path("t", 2),
         "new_rows": 10, "append": True, "stage": "t",
-        "catalog_table": None, "committed_at": 1.0,
+        "catalog_table": None, "ddl": "v BIGINT", "committed_at": 1.0,
     }])
     assert wh.committed_rows("t") is None
 
@@ -136,6 +136,32 @@ def test_evidence_appends_are_o_of_new(spark):
     ev = wh.read(spark, enrich.EVIDENCE_TABLE)
     assert ev.count() == 25 + n_topics
     assert ev.select("edge_id").distinct().count() == 25 + n_topics
+
+
+def test_append_with_another_schema_raises(spark):
+    """One snapshot is read with one schema: an append whose columns or
+    types differ from the committed entry's raises before it writes or
+    reserves anything; nullability alone does not count."""
+    import os
+
+    import pytest
+
+    root = tempfile.mkdtemp(prefix="wh_append_schema_")
+    wh = Warehouse(root)
+    wh.write_snapshot(
+        spark.createDataFrame([("a", 1)], "k string, v int"), "t"
+    )
+    extra_col = spark.createDataFrame([("b", 2, 3)], "k string, v int, w int")
+    retyped = spark.createDataFrame([("b", 2)], "k string, v long")
+    for bad in (extra_col, retyped):
+        with pytest.raises(ValueError, match="append to 't'"):
+            wh.append_snapshot(bad, "t")
+    assert wh.committed_paths("t") == [wh.table_path("t", 1)]
+    assert not os.path.exists(wh.table_path("t", 2))
+    assert wh._read_log().get("reserved", {}) == {}
+    # non-nullable literals append onto the nullable committed columns
+    wh.append_snapshot(spark.range(1).selectExpr("'c' AS k", "3 AS v"), "t")
+    assert sorted(wh.read(spark, "t").collect()) == [("a", 1), ("c", 3)]
 
 
 def test_merge_upsert_latest_wins_and_compacts(spark):

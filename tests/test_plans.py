@@ -97,6 +97,17 @@ def test_minhash_shingling_is_jvm_side(spark):
     assert "MapInPandas" in plan
 
 
+def test_minhash_pairs_scores_each_candidate_once(spark):
+    """The near-dup verify evaluates the Jaccard once per candidate: the
+    threshold filter must not be pushed into the candidate join with its
+    own copy of the array intersect."""
+    from guac_spark.textops import dedup
+
+    docs = dedup.staged_documents(dedup.load_documents(spark, SF_SMALL))
+    plan = _optimized(dedup.minhash_pairs(docs, 0.7))
+    assert plan.count("array_intersect") == 1, plan
+
+
 def test_link_tail_verifies_in_the_jvm_after_one_candidate_join(spark):
     """Tail linking crosses the Python boundary only for its two MinHash
     banding passes (one per side): the Jaccard verify is a JVM expression

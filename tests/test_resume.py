@@ -84,23 +84,70 @@ def test_resume_after_kill(spark):
     assert got == ref_triples
 
 
-def test_lineage_metrics_complete(spark):
+@pytest.fixture(scope="module")
+def lineage_wh(spark):
+    """A built warehouse plus the documents and embeddings committed
+    beside it (as the query graph holds them) and one append snapshot."""
     wh_root = tempfile.mkdtemp(prefix="wh_lineage_")
     res = run_pipeline(spark, SF_SMALL, wh_root)
     wh = Warehouse(wh_root)
+    stages = {r["stage"] for r in
+              wh.metrics(spark).select("stage").distinct().collect()}
+    for t in ("documents", "embeddings"):
+        wh.write_snapshot(spark.read.parquet(f"{SF_SMALL}/{t}.parquet"), t)
+    wh.append_snapshot(wh.read(spark, "alias_dict"), "alias_dict")
+    return res, wh, stages
+
+
+def test_lineage_metrics_complete(spark, lineage_wh):
+    res, wh, stages = lineage_wh
     m = wh.metrics(spark)
-    stages = {r["stage"] for r in m.select("stage").distinct().collect()}
     assert stages == set(res.tables.keys())
+    assert len(wh.committed_paths("alias_dict")) == 2
     # per-partition counters must sum to the committed table row counts
     # (mentions_linked included: bucketed snapshots keep full lineage)
-    for t in ["transcripts", "mentions_linked", "triples", "vertices",
-              "edges"]:
+    for t in wh.committed_tables():
         total = (
             m.filter(f"table = '{t}'").groupBy().sum("rows").first()[0]
         )
         assert total == wh.read(spark, t).count(), t
         # commit-log row summary (Iceberg snapshot-summary analog) agrees
         assert wh.committed_rows(t) == total, t
+        # the schema recorded at commit is the one a footer read infers
+        inferred = spark.read.parquet(*wh.committed_paths(t)).schema
+        assert wh.read(spark, t).schema == inferred, t
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Jobs the status store holds for job group `group`."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_submits_no_spark_job(spark, lineage_wh):
+    """Warehouse.read takes every snapshot's schema from its commit entry:
+    reading any committed table (bucketed ones re-registered in the
+    catalog, as a new process does) runs no Spark job."""
+    _, wh, _ = lineage_wh
+    log = wh._read_log()["tables"]
+    for t in wh.committed_tables():
+        if "catalog_table" in log[t]:
+            spark.sql(f"DROP TABLE IF EXISTS {log[t]['catalog_table']}")
+    sc = spark.sparkContext
+    group = "warehouse-read-probe"
+    sc.setJobGroup(group, "Warehouse.read")
+    try:
+        for t in wh.committed_tables():
+            before = _group_jobs(spark, group)
+            wh.read(spark, t)
+            assert _group_jobs(spark, group) == before, t
+        # the probe sees jobs: one plain parquet read infers its schema
+        spark.read.parquet(*wh.committed_paths("edges"))
+        assert _group_jobs(spark, group) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_rerun_without_resume_recommits(spark):
