@@ -22,6 +22,7 @@ from collections.abc import Callable
 # the driver may import this file from any cwd — make the package resolvable
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -242,8 +243,10 @@ def _q_path(spark, sf):
         t["edges"], oracle.SEED_ENTITY, oracle.PATH_TARGET,
         max_hops=oracle.PATH_HOPS,
     )
-    rows = [(i, n) for i, n in enumerate(nodes)] if nodes else []
-    return spark.createDataFrame(rows, "step int, node string")
+    return spark.createDataFrame(
+        pd.DataFrame(list(enumerate(nodes or [])), columns=["step", "node"]),
+        "step int, node string",
+    )
 
 
 def _q_filter_spec(spark, sf):

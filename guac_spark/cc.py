@@ -59,10 +59,17 @@ count, not its degree. max_iter guards the pathological case.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .session import checkpoint_nostats
+
+# Edge relations of at most this many rows are solved on the driver: here
+# (connected_components' default, pipeline.CC_DRIVER_THRESHOLD) and in
+# graph's BFS, shortest-path and toposort gate. One Arrow collect of
+# 100k string pairs is a fraction of one distributed round.
+DRIVER_EDGE_LIMIT = 100_000
 
 
 def _union_find_local(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -91,7 +98,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_EDGE_LIMIT,
     broadcast_limit: int = 1_000_000,
     round_stats: list | None = None,
     n_edges: int | None = None,
@@ -123,13 +130,12 @@ def connected_components(
     if n_edges is None:
         n_edges = edges.count()
     if n_edges <= driver_threshold:
-        pairs = [
-            (r[0], r[1]) for r in edges.select(src, dst).distinct().collect()
-        ]
-        rows = _union_find_local(pairs)
-        if not rows:
-            return spark.createDataFrame([], "node string, component string")
-        return spark.createDataFrame(rows, "node string, component string")
+        pdf = edges.select(src, dst).distinct().toPandas()
+        rows = _union_find_local(list(zip(pdf[src], pdf[dst])))
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=["node", "component"]),
+            "node string, component string",
+        )
     # undirected: both directions. No distinct(): duplicate edges only
     # produce duplicate min-offers (harmless), and deduping costs a full
     # extra shuffle of the edge set.

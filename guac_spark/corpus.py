@@ -295,12 +295,16 @@ NP_SUB = "(SELECT np FROM u_params)"
 NT_SUB = "(SELECT nt FROM u_params)"
 
 
+# the (pid, alias) rows of the literal head as a SQL VALUES list, rendered
+# once for Spark's alias_base view and both DuckDB preludes
+ALIAS_BASE_VALUES = ", ".join(f"({i}, '{a}')" for i, a in enumerate(PERSONS))
+
+
 def duckdb_prelude() -> str:
     """CTE prelude giving DuckDB `alias_base`/`u_params`/`alias_full`/
     `alias_dict`/`transcripts` — the oracle-side universe chain."""
-    rows = ", ".join(f"({i}, '{a}')" for i, a in enumerate(PERSONS))
     return (
-        f"WITH alias_base(pid, alias) AS (VALUES {rows}),\n"
+        f"WITH alias_base(pid, alias) AS (VALUES {ALIAS_BASE_VALUES}),\n"
         f"u_params AS ({U_PARAMS_SQL}),\n"
         f"alias_full AS (\n{alias_full_sql(NP_SUB, 'duckdb')}\n),\n"
         f"alias_dict AS (\n"
@@ -310,8 +314,11 @@ def duckdb_prelude() -> str:
 
 
 def register_alias_base(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        [(i, a) for i, a in enumerate(PERSONS)], "pid int, alias string"
+    """Register the literal head as the `alias_base` view: a VALUES
+    relation (pid int, alias string), planned without a Python round
+    trip."""
+    df = spark.sql(
+        f"SELECT * FROM VALUES {ALIAS_BASE_VALUES} AS alias_base(pid, alias)"
     )
     df.createOrReplaceTempView("alias_base")
     return df

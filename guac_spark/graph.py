@@ -8,18 +8,25 @@ assembler/backends/backends.go:27-185) and client-side analytics
     — single-table filters Catalyst pushes into the parquet/Iceberg scan;
   * neighbor expansion — two hash joins instead of GUAC's per-node
     adjacency backlinks;
-  * path/BFS/toposort — set-at-a-time frontier joins instead of GUAC's one
-    RPC round-trip per node (patchPlanning.go:131), the scalability
-    anti-pattern this engine eliminates;
+  * path/BFS/toposort — an edge relation of at most cc.DRIVER_EDGE_LIMIT
+    rows is collected in one Arrow job and traversed in process, as GUAC
+    does over its in-memory backend; a larger one runs set-at-a-time
+    frontier joins instead of GUAC's one RPC round-trip per node
+    (patchPlanning.go:131), the scalability anti-pattern this engine
+    eliminates;
   * top-dependents / keep-latest — groupBy + window; a celebrity key costs
     one partial row per map partition, since count is algebraic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections import defaultdict, deque
+
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from . import cc
 from .assemble import attrs_col
 from .textops import minhash
 
@@ -281,9 +288,61 @@ def neighbors_page(edges: DataFrame, vertices: DataFrame, canonical: str,
 
 # --- BFS / shortest paths (keyvalue/path.go:83-152) -------------------------
 
+def _driver_edges(e: DataFrame) -> pd.DataFrame | None:
+    """The two-column edge relation `e` as pandas when it has at most
+    cc.DRIVER_EDGE_LIMIT rows, else None. One Spark job: the relation is
+    limited to LIMIT + 1 rows and collected through Arrow."""
+    limit = cc.DRIVER_EDGE_LIMIT
+    pdf = e.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
+
+
+def _pred_edges(edges: DataFrame, using_only: list[str] | None
+                ) -> DataFrame:
+    e = edges.filter(F.col("pred").isin(using_only)) if using_only else edges
+    return e.select("src", "dst")
+
+
+def _local_bfs(pairs: pd.DataFrame, seed: str, max_hops: int,
+               target: str | None = None) -> dict[str, tuple]:
+    """node -> (parent, dist) on the driver, the same layers _bfs_layers
+    computes: undirected, each node's parent is its smallest
+    distance-(d-1) neighbour, and the walk stops at an empty layer or at
+    the layer holding `target`. A null endpoint is reachable but, like a
+    null join key, expands nothing."""
+    adj: dict[str, list[str]] = defaultdict(list)
+    for s, d in zip(pairs["src"], pairs["dst"]):
+        adj[s].append(d)
+        adj[d].append(s)
+    seen = {seed: (None, 0)}
+    frontier = [seed]
+    for hop in range(1, max_hops + 1):
+        nxt: dict[str, str] = {}
+        for u in sorted(u for u in frontier if u is not None):
+            for v in adj.get(u, ()):
+                if v not in seen and v not in nxt:
+                    nxt[v] = u
+        if not nxt:
+            break
+        seen.update((v, (u, hop)) for v, u in nxt.items())
+        if target is not None and target in nxt:
+            break
+        frontier = list(nxt)
+    return seen
+
+
 def bfs_distances(edges: DataFrame, seed: str, max_hops: int = 4,
                   using_only: list[str] | None = None) -> DataFrame:
-    """(node, dist) for every node within max_hops of seed."""
+    """(node, dist) for every node within max_hops of seed; on the driver
+    when the edge relation passes _driver_edges' gate."""
+    pairs = _driver_edges(_pred_edges(edges, using_only))
+    if pairs is not None:
+        seen = _local_bfs(pairs, seed, max_hops)
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": list(seen),
+                          "dist": [d for _, d in seen.values()]}),
+            "node string, dist int",
+        )
     layers = _bfs_layers(edges, seed, max_hops, using_only)
     out = layers[0].select("node", "dist")
     for layer in layers[1:]:
@@ -299,13 +358,17 @@ def _bfs_layers(edges: DataFrame, seed: str, max_hops: int,
     Layer d is exactly the nodes at distance d, and the frontier is the
     whole layer d-1, so parent = min(src) over the frontier join is each
     node's smallest distance-(d-1) neighbour: deterministic at any
-    parallelism, and the same rule as the q_path oracle.
+    parallelism, and the same rule as the q_path oracle and _local_bfs.
+    This is the side of the traversal gate for edge relations too large
+    for the driver (_driver_edges).
 
     Per hop: one join frontier⋈edges, one groupBy(node) (the parent
     aggregate, which is also the hop's dedup), one anti-join against
     visited — the whole frontier moves in one shuffle (vs GUAC's
-    RPC-per-node BFS). Physical shape (r7, measured at sf1.0/c32 on a
-    490k-node closure, 8.6 s -> 5.1 s median):
+    RPC-per-node BFS). The layer's row count and whether it holds
+    `target` are observed metrics of its checkpoint, so a hop runs no
+    action besides that checkpoint. Physical shape (r7, measured at
+    sf1.0/c32 on a 490k-node closure, 8.6 s -> 5.1 s median):
       * the adjacency union is not pre-distinct'd or checkpointed (a full
         shuffle of 2x|E| rows before the first hop; duplicate adj rows
         only duplicate offers);
@@ -320,16 +383,17 @@ def _bfs_layers(edges: DataFrame, seed: str, max_hops: int,
     Frontier and visited are broadcast only while their row counts stay
     under BROADCAST_ROW_LIMIT — visited trends toward |V|.
     """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst", "pred")
-    if using_only:
-        e = e.filter(F.col("pred").isin(using_only))
-    adj = e.select("src", "dst").unionByName(
+    e = _pred_edges(edges, using_only)
+    adj = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
-    frontier = spark.createDataFrame(
-        [(seed, None, 0)], "node string, parent string, dist int"
+    # the seed layer is a literal relation, not a pickled Python list:
+    # the optimizer folds it into hop 1 as src = seed / dst = seed filters
+    # on the edge scan, and no hop goes through the Python row converter
+    frontier = edges.sparkSession.range(1).select(
+        F.lit(seed).alias("node"), F.lit(None).cast("string").alias("parent"),
+        F.lit(0).alias("dist"),
     )
     layers = [frontier]
     visited_nodes = frontier.select("node")
@@ -347,10 +411,13 @@ def _bfs_layers(edges: DataFrame, seed: str, max_hops: int,
         if hop == max_hops:
             layers.append(nxt)
             break
-        nxt = nxt.localCheckpoint(eager=True)
-        n_frontier, hit = nxt.agg(
-            F.count("*"), F.max(F.col("node") == F.lit(target))
-        ).first()
+        obs = Observation()
+        nxt = nxt.observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.max(F.col("node") == F.lit(target)).alias("hit"),
+        ).localCheckpoint(eager=True)
+        metrics = obs.get
+        n_frontier, hit = metrics["n"], metrics["hit"]
         if n_frontier == 0:
             break
         layers.append(nxt)
@@ -367,12 +434,22 @@ def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,
                         ) -> list[str] | None:
     """The node path a..b read off the BFS parents (keyvalue `path`,
     keyvalue/path.go:83-152), or None beyond max_hops; the smallest-parent
-    rule picks the same shortest path at any parallelism. The BFS stops
-    at b's layer, and the walk back is a lazy chain of single-row joins
-    down the checkpointed layers, collected once: the driver only ever
-    holds the path."""
+    rule picks the same shortest path at any parallelism. An edge
+    relation that passes _driver_edges' gate is walked on the driver, in
+    that one collect job. Otherwise the BFS stops at b's layer, and the
+    walk back is a lazy chain of single-row joins down the checkpointed
+    layers, collected once: the driver only ever holds the path."""
     if a == b:
         return [a]
+    pairs = _driver_edges(_pred_edges(edges, using_only))
+    if pairs is not None:
+        seen = _local_bfs(pairs, a, max_hops, target=b)
+        if b not in seen:
+            return None
+        path = [b]
+        while path[-1] != a:
+            path.append(seen[path[-1]][0])
+        return path[::-1]
     layers = _bfs_layers(edges, a, max_hops, using_only, target=b)
     step = layers[-1].filter(F.col("node") == b)
     chain = step.select("dist", "node")
@@ -399,21 +476,24 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
 
     Edge (src, dst) reads 'src depends on dst' (a reply depends on its
     parent turn), so level(node) = 0 for nodes with no dst-edges, else
-    1 + max(level of its parents). Raises on cycles like the reference
-    (guacanalytics/toposort.go:26-61).
+    1 + max(level of its parents). Raises ValueError on cycles like the
+    reference (guacanalytics/toposort.go:26-61).
 
-    Two physical strategies, identical output:
-      * grouped (the transcript fast path): reply chains are
-        conversation-local by construction — every edge stays inside one
-        turn:<conv>:<idx> namespace — so levels are computed per
-        conversation in ONE grouped applyInPandas pass: a single shuffle
-        on conv_id, rounds independent of chain depth. At 100 TB a
+    Three physical strategies, identical output:
+      * driver: a `pred` subgraph that passes _driver_edges' gate is
+        collected in one job and solved by one _kahn_levels call.
+      * grouped (the transcript fast path past the gate): reply chains
+        are conversation-local by construction — every edge stays inside
+        one turn:<conv>:<idx> namespace — so levels are computed per
+        conversation in ONE grouped pass: a single shuffle on conv_id,
+        rounds independent of chain depth. At 100 TB a
         mega-conversation's 10^5-deep chain costs one pandas group, not
         10^5 Spark jobs.
       * peel (general-graph fallback): iterative in-degree-0 removal,
         O(depth) driver rounds — kept for arbitrary node ids /
         cross-group edges and as the cycle-detection reference.
-    Grouped runs iff every edge is conv-local, else peel.
+    Past the gate, grouped runs iff a probe finds every edge conv-local,
+    else peel.
     """
     # no distinct, no checkpoint (r7): the edge-table input is already
     # unique on (src, dst, pred) by construction, and Kahn levels are
@@ -428,6 +508,13 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
         edges.filter(F.col("pred") == pred)
         .select(F.col("src").alias("child"), F.col("dst").alias("parent"))
     )
+    pairs = _driver_edges(e)
+    if pairs is not None:
+        lv = _kahn_levels(zip(pairs["child"], pairs["parent"]))
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": list(lv), "level": list(lv.values())}),
+            "node string, level int",
+        )
     probe = e.withColumn(
         "gc", F.regexp_extract("child", _TURN_CONV_RE, 1)
     ).withColumn("gp", F.regexp_extract("parent", _TURN_CONV_RE, 1))
@@ -439,16 +526,13 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
     return _toposort_peel(e)
 
 
-def _kahn_levels(edges_list) -> dict[str, int]:
-    """Longest-path-from-root levels for one conversation's edge list;
-    raises ValueError on a cycle (reference semantics)."""
-    from collections import defaultdict, deque
-
+def _kahn_levels(pairs) -> dict[str, int]:
+    """Longest-path-from-root levels over (child, parent) pairs; raises
+    ValueError on a cycle (reference semantics)."""
     children = defaultdict(list)  # parent -> [child]
     n_parents: dict[str, int] = {}
     nodes = set()
-    for row in edges_list:
-        c, p = row["child"], row["parent"]
+    for c, p in pairs:
         children[p].append(c)
         n_parents[c] = n_parents.get(c, 0) + 1
         nodes.add(c)
@@ -482,8 +566,6 @@ def _toposort_grouped(e: DataFrame) -> DataFrame:
     Cycle detection applies per conversation (task failure — the
     distributed analog of the reference's error return).
     """
-    import pandas as pd
-
     grouped = (
         e.withColumn("gc", F.regexp_extract("child", _TURN_CONV_RE, 1))
         .groupBy("gc")
@@ -495,7 +577,7 @@ def _toposort_grouped(e: DataFrame) -> DataFrame:
             nodes: list[str] = []
             levels: list[int] = []
             for es in pdf["es"]:
-                lv = _kahn_levels(es)
+                lv = _kahn_levels((r["child"], r["parent"]) for r in es)
                 nodes.extend(lv.keys())
                 levels.extend(lv.values())
             yield pd.DataFrame({"node": nodes, "level": levels})

@@ -16,9 +16,9 @@ because these strings run only in DuckDB.
 from __future__ import annotations
 
 from .corpus import (
+    ALIAS_BASE_VALUES,
     NP_SUB,
     NT_SUB,
-    PERSONS,
     U_PARAMS_SQL,
     alias_dict_sql,
     alias_full_sql,
@@ -28,8 +28,8 @@ from .extract import AKA_RE, PERSON_RE, REPLY_RE, TOOL_RE, TOPIC_RE
 
 
 def _alias_base_cte() -> str:
-    rows = ", ".join(f"({i}, '{a}')" for i, a in enumerate(PERSONS))
-    return f"alias_base(pid, alias) AS (SELECT * FROM (VALUES {rows}))"
+    return (f"alias_base(pid, alias) AS "
+            f"(SELECT * FROM (VALUES {ALIAS_BASE_VALUES}))")
 
 
 def _mention_arm(kind: str, pat: str, prefix: str) -> str:

@@ -76,7 +76,7 @@ SCHEMA_VERSION = 7
 # never fits a driver), so the PIPELINE runs the distributed
 # frontier/pointer-doubling path from a low threshold — the strategy that
 # scales is the one the headline measures (VERDICT r4 missing #1).
-CC_DRIVER_THRESHOLD = 100_000
+CC_DRIVER_THRESHOLD = cc.DRIVER_EDGE_LIMIT
 # past this many mapped entities the triples rewrite joins by shuffle
 # instead of broadcasting the mapping
 MAPPING_BROADCAST_LIMIT = 5_000_000

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import sys
@@ -27,6 +28,49 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def gate_sides(monkeypatch):
+    """Iterate "driver", then "distributed": graph's BFS, shortest-path
+    and toposort gate (cc.DRIVER_EDGE_LIMIT) is at 0 rows for the second
+    pass, so `for side in gate_sides:` runs its body on both sides."""
+    from guac_spark import cc
+
+    def sides():
+        yield "driver"
+        monkeypatch.setattr(cc, "DRIVER_EDGE_LIMIT", 0)
+        yield "distributed"
+
+    return sides()
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Every non-empty edge relation takes graph's distributed traversal
+    path."""
+    from guac_spark import cc
+
+    monkeypatch.setattr(cc, "DRIVER_EDGE_LIMIT", 0)
+
+
+@contextlib.contextmanager
+def job_group(spark, group: str):
+    """Tag the calling thread's Spark jobs with `group`; untag on exit."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def group_jobs(spark, group: str) -> int:
+    """Jobs the status store holds for job group `group`."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

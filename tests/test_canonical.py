@@ -131,7 +131,7 @@ def test_versioned_tool_mentions_link_to_version_node(spark):
     assert {r["canonical"] for r in empty.collect()} == {"turn:c1:0"}
 
 
-def test_shortest_path_nodes_deterministic(spark):
+def test_shortest_path_nodes_deterministic(spark, gate_sides):
     rows = [("e%d" % i, s, d, "x", "c", "c:0") for i, (s, d) in enumerate(
         [("a", "b1"), ("a", "b2"), ("b1", "c"), ("b2", "c"), ("c", "d")]
     )]
@@ -140,12 +140,14 @@ def test_shortest_path_nodes_deterministic(spark):
         "edge_id string, src string, dst string, pred string, "
         "origin string, document_ref string",
     )
-    # two shortest paths a->c; min-parent rule must pick b1 every time
-    assert graph.shortest_path_nodes(e, "a", "d") == ["a", "b1", "c", "d"]
-    assert graph.shortest_path_nodes(e.repartition(5), "a", "d") == [
-        "a", "b1", "c", "d"
-    ]
-    assert graph.shortest_path_nodes(e, "a", "zzz") is None
+    for side in gate_sides:
+        # two shortest paths a->c; min-parent rule must pick b1 every time
+        assert graph.shortest_path_nodes(e, "a", "d") == [
+            "a", "b1", "c", "d"], side
+        assert graph.shortest_path_nodes(e.repartition(5), "a", "d") == [
+            "a", "b1", "c", "d"
+        ], side
+        assert graph.shortest_path_nodes(e, "a", "zzz") is None, side
 
 
 def _embed(text: str) -> str:

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from guac_spark import graph
+from tests.conftest import group_jobs, job_group
 
 
 def _edges(spark, rows):
@@ -16,49 +17,95 @@ def _edges(spark, rows):
     )
 
 
-def test_toposort_cycle_raises(spark):
+def test_toposort_cycle_raises(spark, gate_sides):
     e = _edges(spark, [("a", "b", "replies_to"), ("b", "c", "replies_to"),
                        ("c", "a", "replies_to")])
-    with pytest.raises(ValueError, match="cycle"):
-        graph.toposort_levels(e)
+    for side in gate_sides:
+        with pytest.raises(ValueError, match="cycle"):
+            graph.toposort_levels(e)
 
 
-def test_toposort_dag_levels(spark):
+def test_toposort_dag_levels(spark, gate_sides):
     e = _edges(spark, [("b", "a", "replies_to"), ("c", "b", "replies_to"),
                        ("d", "b", "replies_to"), ("e", "a", "replies_to")])
-    levels = {r["node"]: r["level"] for r in graph.toposort_levels(e).collect()}
-    assert levels == {"a": 0, "b": 1, "e": 1, "c": 2, "d": 2}
+    for side in gate_sides:
+        levels = {r["node"]: r["level"]
+                  for r in graph.toposort_levels(e).collect()}
+        assert levels == {"a": 0, "b": 1, "e": 1, "c": 2, "d": 2}, side
 
 
-def test_shortest_path(spark):
+def test_shortest_path(spark, gate_sides):
     e = _edges(spark, [("a", "b", "x"), ("b", "c", "x"), ("c", "d", "x"),
                        ("a", "z", "y")])
-    assert graph.shortest_path_nodes(e, "a", "d") == ["a", "b", "c", "d"]
-    assert graph.shortest_path_nodes(e, "a", "z") == ["a", "z"]
-    assert graph.shortest_path_nodes(e, "z", "d", max_hops=2) is None
-    # pred allowlist (usingOnly analog) blocks the y edge
-    assert graph.shortest_path_nodes(e, "a", "z", using_only=["x"]) is None
-    # a node reaches itself by the one-node path (q_path's dist-0 chain)
-    assert graph.shortest_path_nodes(e, "a", "a") == ["a"]
-    # diamond with two equal-length routes, the larger-named one listed
-    # first: the parent is the smallest distance-(d-1) neighbour
     dia = _edges(spark, [("s", "m2", "x"), ("m2", "t", "x"),
                          ("s", "m1", "x"), ("m1", "t", "x")])
-    assert graph.shortest_path_nodes(dia, "s", "t") == ["s", "m1", "t"]
-    assert graph.shortest_path_nodes(dia, "t", "s") == ["t", "m1", "s"]
+    for side in gate_sides:
+        assert graph.shortest_path_nodes(e, "a", "d") == [
+            "a", "b", "c", "d"], side
+        assert graph.shortest_path_nodes(e, "a", "z") == ["a", "z"], side
+        assert graph.shortest_path_nodes(e, "z", "d", max_hops=2) is None
+        # pred allowlist (usingOnly analog) blocks the y edge
+        assert graph.shortest_path_nodes(
+            e, "a", "z", using_only=["x"]) is None, side
+        # a node reaches itself by the one-node path (q_path's dist-0
+        # chain)
+        assert graph.shortest_path_nodes(e, "a", "a") == ["a"], side
+        # diamond with two equal-length routes, the larger-named one
+        # listed first: the parent is the smallest distance-(d-1)
+        # neighbour
+        assert graph.shortest_path_nodes(dia, "s", "t") == [
+            "s", "m1", "t"], side
+        assert graph.shortest_path_nodes(dia, "t", "s") == [
+            "t", "m1", "s"], side
 
 
-def test_bfs_is_min_distance(spark):
+def test_bfs_is_min_distance(spark, gate_sides):
     # diamond: two paths of different length to d
     e = _edges(spark, [("a", "b", "x"), ("b", "d", "x"),
                        ("a", "c", "x"), ("c", "e", "x"), ("e", "d", "x")])
-    d = {r["node"]: r["dist"]
-         for r in graph.bfs_distances(e, "a", max_hops=4).collect()}
-    assert d["d"] == 2
-    # the lazy last hop keeps no parent aggregate: the (node, dist)
-    # projection prunes min(src) out of it
+    for side in gate_sides:
+        d = {r["node"]: r["dist"]
+             for r in graph.bfs_distances(e, "a", max_hops=4).collect()}
+        assert d["d"] == 2, side
+        assert d == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 2}, side
+    # gate_sides ends on the distributed side: the lazy last hop keeps
+    # no parent aggregate, the (node, dist) projection prunes min(src)
+    # out of it
     last = graph.bfs_distances(e, "a", max_hops=1)
-    assert "min(" not in last._jdf.queryExecution().optimizedPlan().toString()
+    plan = last._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" in plan and "min(" not in plan
+
+
+def _chain(spark, n):
+    return _edges(spark, [(f"n{i}", f"n{i + 1}", "x") for i in range(n)])
+
+
+def test_distributed_bfs_hop_jobs(spark, distributed):
+    """A distributed BFS hop's row count and target test ride its
+    checkpoint as observed metrics: each checkpointed hop runs 4 jobs,
+    not the 6 a separate count action costs."""
+    e = _chain(spark, 8)
+
+    def jobs(hops):
+        group = f"bfs-{hops}"
+        with job_group(spark, group):
+            out = graph.bfs_distances(e, "n0", max_hops=hops)
+            out.write.format("noop").mode("overwrite").save()
+            return group_jobs(spark, group)
+
+    # max_hops=k checkpoints k-1 hops; the gate probe and the lazy last
+    # hop are common to both runs
+    assert jobs(3) - jobs(2) == 4
+
+
+def test_driver_shortest_path_runs_one_job(spark):
+    """Below the gate, a shortest path is the one collect of its edge
+    relation."""
+    e = _chain(spark, 8)
+    with job_group(spark, "path-driver"):
+        assert graph.shortest_path_nodes(e, "n0", "n4") == [
+            "n0", "n1", "n2", "n3", "n4"]
+        assert group_jobs(spark, "path-driver") == 1
 
 
 def test_pagination_covers_all_exactly_once(spark):
@@ -78,9 +125,11 @@ def test_pagination_covers_all_exactly_once(spark):
     assert len(seen) == 57 and len(set(seen)) == 57
 
 
-def test_toposort_grouped_matches_peel_on_conv_local_chains(spark):
-    # conv-local turn chains: toposort_levels takes the grouped
-    # single-pass path; the peel strategy must give identical levels
+def test_toposort_grouped_matches_peel_on_conv_local_chains(spark,
+                                                          gate_sides):
+    # conv-local turn chains: past the driver gate toposort_levels takes
+    # the grouped single-pass path; the peel strategy and the driver
+    # Kahn pass must give identical levels
     rows = []
     for conv in ("conv-a", "conv-b"):
         for i in range(1, 6):
@@ -94,9 +143,10 @@ def test_toposort_grouped_matches_peel_on_conv_local_chains(spark):
                for r in graph._toposort_grouped(cp).collect()}
     peel = {r["node"]: r["level"]
             for r in graph._toposort_peel(cp).collect()}
-    auto = {r["node"]: r["level"]
-            for r in graph.toposort_levels(e).collect()}
-    assert grouped == peel == auto
+    for side in gate_sides:
+        auto = {r["node"]: r["level"]
+                for r in graph.toposort_levels(e).collect()}
+        assert grouped == peel == auto, side
     assert grouped["turn:conv-a:0"] == 0 and grouped["turn:conv-a:5"] == 5
     assert grouped["turn:conv-a:9"] == 3
 

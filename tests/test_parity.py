@@ -19,8 +19,7 @@ def _oracle_names():
     return sorted(entry_mod.oracle_sql().keys())
 
 
-@pytest.mark.parametrize("name", _oracle_names())
-def test_query_matches_oracle(spark, duck_small, name):
+def _check_oracle(spark, duck_small, name):
     q = entry_mod.queries()[name]
     sdf = q(spark, SF_SMALL)
     spark_rows = [tuple(r) for r in sdf.collect()]
@@ -42,6 +41,20 @@ def test_query_matches_oracle(spark, duck_small, name):
         raise AssertionError(
             f"{name}: value mismatch.\nonly-spark: {diff_s}\nonly-duck: {diff_d}"
         )
+
+
+@pytest.mark.parametrize("name", _oracle_names())
+def test_query_matches_oracle(spark, duck_small, name):
+    _check_oracle(spark, duck_small, name)
+
+
+@pytest.mark.parametrize("name", ["q_bfs", "q_path", "q_toposort",
+                                  "q_vuln_reach"])
+def test_traversal_matches_oracle_distributed(spark, duck_small,
+                                              distributed, name):
+    """The traversal queries past graph's driver gate (every test-scale
+    edge relation passes it)."""
+    _check_oracle(spark, duck_small, name)
 
 
 def test_rows_only_queries_run(spark):

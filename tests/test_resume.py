@@ -10,7 +10,9 @@ import pytest
 
 from guac_spark.pipeline import run_pipeline
 from guac_spark.warehouse import Warehouse
-from tests.conftest import SF_MED, SF_SMALL, num_buckets
+from tests.conftest import (
+    SF_MED, SF_SMALL, group_jobs, job_group, num_buckets,
+)
 
 
 def test_cached_warehouse_root_follows_the_sources(tmp_path):
@@ -118,13 +120,6 @@ def test_lineage_metrics_complete(spark, lineage_wh):
         assert wh.read(spark, t).schema == inferred, t
 
 
-def _group_jobs(spark, group: str) -> int:
-    """Jobs the status store holds for job group `group`."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_read_submits_no_spark_job(spark, lineage_wh):
     """Warehouse.read takes every snapshot's schema from its commit entry:
     reading any committed table (bucketed ones re-registered in the
@@ -134,20 +129,15 @@ def test_read_submits_no_spark_job(spark, lineage_wh):
     for t in wh.committed_tables():
         if "catalog_table" in log[t]:
             spark.sql(f"DROP TABLE IF EXISTS {log[t]['catalog_table']}")
-    sc = spark.sparkContext
     group = "warehouse-read-probe"
-    sc.setJobGroup(group, "Warehouse.read")
-    try:
+    with job_group(spark, group):
         for t in wh.committed_tables():
-            before = _group_jobs(spark, group)
+            before = group_jobs(spark, group)
             wh.read(spark, t)
-            assert _group_jobs(spark, group) == before, t
+            assert group_jobs(spark, group) == before, t
         # the probe sees jobs: one plain parquet read infers its schema
         spark.read.parquet(*wh.committed_paths("edges"))
-        assert _group_jobs(spark, group) > 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        assert group_jobs(spark, group) > 0
 
 
 def test_rerun_without_resume_recommits(spark):
