@@ -276,19 +276,29 @@ def _q_vuln_reach(spark, sf):
     ).select("node", "dist", _us("last_seen").alias("last_seen_us"))
 
 
+def _cloned_warehouse(spark, sf, enriched: bool = False):
+    """A fresh temp warehouse holding copies of the sf build's vertices
+    and edges; with `enriched`, the certifier-analog enrichment loop has
+    run on it to convergence."""
+    import tempfile
+
+    from guac_spark import enrich
+    from guac_spark.warehouse import Warehouse
+
+    t = _ctx(spark, sf)
+    wh = Warehouse(tempfile.mkdtemp(prefix="guac_clone_"))
+    wh.write_snapshot(t["vertices"], "vertices", stage="clone")
+    wh.write_snapshot(t["edges"], "edges", stage="clone")
+    while enriched and enrich.run_enrichment(spark, wh.root):
+        pass
+    return wh
+
+
 def _q_delete_cascade(spark, sf):
     """Real delete on a cloned warehouse (copy-on-write snapshots), then
     the surviving edge table — exercises Warehouse.delete_vertices, not a
     filter re-statement."""
-    import tempfile
-
-    from guac_spark.warehouse import Warehouse
-
-    t = _ctx(spark, sf)
-    root = tempfile.mkdtemp(prefix="guac_del_")
-    wh = Warehouse(root)
-    wh.write_snapshot(t["vertices"], "vertices", stage="clone")
-    wh.write_snapshot(t["edges"], "edges", stage="clone")
+    wh = _cloned_warehouse(spark, sf)
     wh.delete_vertices(spark, [oracle.CELEB_ENTITY])
     return wh.read(spark, "edges").select(
         "edge_id", "src", "dst", "pred", "origin", "document_ref"
@@ -300,18 +310,9 @@ def _q_enrich_evidence(spark, sf):
     warehouse and return the evidence edges it appended — exercises
     pending_entities -> enrich_batch -> atomic evidence+ledger commit
     (guac_spark.enrich), not a re-statement of the scorer."""
-    import tempfile
-
     from guac_spark import enrich
-    from guac_spark.warehouse import Warehouse
 
-    t = _ctx(spark, sf)
-    root = tempfile.mkdtemp(prefix="guac_enrich_")
-    wh = Warehouse(root)
-    wh.write_snapshot(t["vertices"], "vertices", stage="clone")
-    wh.write_snapshot(t["edges"], "edges", stage="clone")
-    while enrich.run_enrichment(spark, root):
-        pass
+    wh = _cloned_warehouse(spark, sf, enriched=True)
     return wh.read(spark, enrich.EVIDENCE_TABLE).select(
         "src", "dst", "pred", "origin",
         F.col("attrs")["score"].cast("int").alias("score"),
@@ -322,18 +323,9 @@ def _q_edge_attrs(spark, sf):
     """Edge-side typed-attrs subset match (isDependency.graphql:31-47):
     enrichment evidence filtered by attrs{'collector': 'enricher'} via
     graph.filter_edges_spec, typed fields projected from the attrs map."""
-    import tempfile
-
     from guac_spark import enrich
-    from guac_spark.warehouse import Warehouse
 
-    t = _ctx(spark, sf)
-    root = tempfile.mkdtemp(prefix="guac_eattr_")
-    wh = Warehouse(root)
-    wh.write_snapshot(t["vertices"], "vertices", stage="clone")
-    wh.write_snapshot(t["edges"], "edges", stage="clone")
-    while enrich.run_enrichment(spark, root):
-        pass
+    wh = _cloned_warehouse(spark, sf, enriched=True)
     full = enrich.edges_with_evidence(spark, wh)
     fe = graph.filter_edges_spec(
         full, attrs_subset={"collector": "enricher"}

@@ -7,6 +7,11 @@ the north rule requires merging duplicate subjects/objects *before*
 materializing, so we compute components over the same_as/link edge set and
 rewrite every triple endpoint to its component's canonical id.
 
+An edge relation that fits the driver skips the rounds below: the one
+driver gate (driver_edges, shared with graph's BFS, shortest-path and
+toposort) collects it in one Spark job and union-find solves it in
+process.
+
 Algorithm: min-label edge propagation interleaved with pointer-doubling
 tree contraction (the alternating-star / hash-to-min family, cf. Kiveris
 et al., "Connected Components in MapReduce and Beyond"):
@@ -65,11 +70,27 @@ from pyspark.sql import functions as F
 
 from .session import checkpoint_nostats
 
-# Edge relations of at most this many rows are solved on the driver: here
-# (connected_components' default, pipeline.CC_DRIVER_THRESHOLD) and in
-# graph's BFS, shortest-path and toposort gate. One Arrow collect of
-# 100k string pairs is a fraction of one distributed round.
+# Edge relations of at most this many rows are solved on the driver, by
+# connected_components and by graph's BFS, shortest-path and toposort,
+# all through driver_edges. One Arrow collect of 100k string pairs is a
+# fraction of one distributed round.
 DRIVER_EDGE_LIMIT = 100_000
+# a distributed round broadcast-joins its frontier while it has at most
+# this many rows
+BROADCAST_LIMIT = 1_000_000
+
+
+def driver_edges(e: DataFrame, limit: int | None = None
+                 ) -> pd.DataFrame | None:
+    """The driver gate: the edge relation `e` as pandas when it has at
+    most `limit` rows (None: DRIVER_EDGE_LIMIT, read at call time), else
+    None. One Spark job both decides the side and fetches the rows: `e`
+    is limited to `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default)
+    and collected through Arrow."""
+    if limit is None:
+        limit = DRIVER_EDGE_LIMIT
+    pdf = e.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
 
 
 def _union_find_local(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -95,13 +116,9 @@ def _union_find_local(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = DRIVER_EDGE_LIMIT,
-    broadcast_limit: int = 1_000_000,
+    driver_threshold: int | None = None,
     round_stats: list | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """Compute components of the undirected graph given by (src, dst) rows.
 
@@ -109,29 +126,24 @@ def connected_components(
     `edges`; `component` is the min node id of its component. Nodes not in
     any edge are simply absent (callers treat missing as identity).
 
-    Two physical strategies with identical output:
-      * edge set fits the driver (<= driver_threshold rows): exact
-        union-find locally — collect + solve beats O(diameter)
-        distributed rounds for genuinely tiny sets. The default matches
-        the pipeline's gate (pipeline.CC_DRIVER_THRESHOLD): with a
+    Two physical strategies with identical output, chosen by the one
+    driver gate (driver_edges) at `driver_threshold` rows; None reads
+    DRIVER_EDGE_LIMIT at call time, as graph's traversals do:
+      * edge set fits the driver: the gate's collect is the input of an
+        exact local union-find, which is indifferent to pair order and
+        duplicates — so the whole call is one Spark job. With a
         corpus-proportional entity universe the equivalence graph grows
-        ~linearly with the corpus, so anything past ~100k edges takes
-        the path that scales.
+        ~linearly with the corpus, so anything past the limit takes the
+        path that scales.
       * otherwise: frontier-based min-label propagation with a fused
         pointer-doubling jump term (module docstring), O(log diameter)
         rounds; after round 0 each round touches only the changed-label
-        frontier, broadcast-joined once it fits broadcast_limit rows.
+        frontier, broadcast-joined once it fits BROADCAST_LIMIT rows.
     """
     spark = edges.sparkSession
-    # n_edges gates the physical strategy only — callers holding a
-    # committed snapshot pass its row count (warehouse commit log /
-    # parquet footers, the snapshot-summary pattern) and skip the
-    # count job entirely
-    if n_edges is None:
-        n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        pdf = edges.select(src, dst).distinct().toPandas()
-        rows = _union_find_local(list(zip(pdf[src], pdf[dst])))
+    pdf = driver_edges(edges.select("src", "dst"), driver_threshold)
+    if pdf is not None:
+        rows = _union_find_local(list(zip(pdf["src"], pdf["dst"])))
         return spark.createDataFrame(
             pd.DataFrame(rows, columns=["node", "component"]),
             "node string, component string",
@@ -155,9 +167,9 @@ def connected_components(
     # outputPartitioning into Catalyst, and broadcast-gated rounds never
     # shuffle e at all.)
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+            edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
         )
     )
     e_ck = None  # set on round 2+
@@ -200,7 +212,7 @@ def connected_components(
     # the small frontier, map-side only, plus one partition-local rewrite
     # of the labels checkpoint.
     frontier = labels.filter(F.col("label") != F.col("node"))
-    frontier_n: int | None = frontier.count()
+    frontier_n = frontier.count()
     cur_ck = labels._ck_source  # block-cache backing the live labels
     for it in range(max_iter):
         if frontier_n == 0:
@@ -211,7 +223,7 @@ def connected_components(
             # blocks instead of re-evaluating the input plan every round
             e = checkpoint_nostats(e)
             e_ck = e._ck_source
-        small = frontier_n is not None and frontier_n <= broadcast_limit
+        small = frontier_n <= BROADCAST_LIMIT
 
         def _b(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
@@ -248,7 +260,7 @@ def connected_components(
             # cand can exceed the frontier (a hub's every neighbor gets
             # an offer) — materialize and re-check before broadcasting
             cand = checkpoint_nostats(cand)
-            if cand.count() > broadcast_limit:
+            if cand.count() > BROADCAST_LIMIT:
                 small = False
         # labels <- elementwise min with candidates. checkpoint_nostats
         # (not plain localCheckpoint): an iterative self-join loop

@@ -9,7 +9,8 @@ assembler/backends/backends.go:27-185) and client-side analytics
   * neighbor expansion — two hash joins instead of GUAC's per-node
     adjacency backlinks;
   * path/BFS/toposort — an edge relation of at most cc.DRIVER_EDGE_LIMIT
-    rows is collected in one Arrow job and traversed in process, as GUAC
+    rows is collected in one Arrow job by cc.driver_edges, the one driver
+    gate connected components uses too, and traversed in process, as GUAC
     does over its in-memory backend; a larger one runs set-at-a-time
     frontier joins instead of GUAC's one RPC round-trip per node
     (patchPlanning.go:131), the scalability anti-pattern this engine
@@ -288,15 +289,6 @@ def neighbors_page(edges: DataFrame, vertices: DataFrame, canonical: str,
 
 # --- BFS / shortest paths (keyvalue/path.go:83-152) -------------------------
 
-def _driver_edges(e: DataFrame) -> pd.DataFrame | None:
-    """The two-column edge relation `e` as pandas when it has at most
-    cc.DRIVER_EDGE_LIMIT rows, else None. One Spark job: the relation is
-    limited to LIMIT + 1 rows and collected through Arrow."""
-    limit = cc.DRIVER_EDGE_LIMIT
-    pdf = e.limit(limit + 1).toPandas()
-    return pdf if len(pdf) <= limit else None
-
-
 def _pred_edges(edges: DataFrame, using_only: list[str] | None
                 ) -> DataFrame:
     e = edges.filter(F.col("pred").isin(using_only)) if using_only else edges
@@ -334,8 +326,8 @@ def _local_bfs(pairs: pd.DataFrame, seed: str, max_hops: int,
 def bfs_distances(edges: DataFrame, seed: str, max_hops: int = 4,
                   using_only: list[str] | None = None) -> DataFrame:
     """(node, dist) for every node within max_hops of seed; on the driver
-    when the edge relation passes _driver_edges' gate."""
-    pairs = _driver_edges(_pred_edges(edges, using_only))
+    when the edge relation passes cc.driver_edges' gate."""
+    pairs = cc.driver_edges(_pred_edges(edges, using_only))
     if pairs is not None:
         seen = _local_bfs(pairs, seed, max_hops)
         return edges.sparkSession.createDataFrame(
@@ -360,7 +352,7 @@ def _bfs_layers(edges: DataFrame, seed: str, max_hops: int,
     node's smallest distance-(d-1) neighbour: deterministic at any
     parallelism, and the same rule as the q_path oracle and _local_bfs.
     This is the side of the traversal gate for edge relations too large
-    for the driver (_driver_edges).
+    for the driver (cc.driver_edges).
 
     Per hop: one join frontier⋈edges, one groupBy(node) (the parent
     aggregate, which is also the hop's dedup), one anti-join against
@@ -435,13 +427,13 @@ def shortest_path_nodes(edges: DataFrame, a: str, b: str, max_hops: int = 6,
     """The node path a..b read off the BFS parents (keyvalue `path`,
     keyvalue/path.go:83-152), or None beyond max_hops; the smallest-parent
     rule picks the same shortest path at any parallelism. An edge
-    relation that passes _driver_edges' gate is walked on the driver, in
+    relation that passes cc.driver_edges' gate is walked on the driver, in
     that one collect job. Otherwise the BFS stops at b's layer, and the
     walk back is a lazy chain of single-row joins down the checkpointed
     layers, collected once: the driver only ever holds the path."""
     if a == b:
         return [a]
-    pairs = _driver_edges(_pred_edges(edges, using_only))
+    pairs = cc.driver_edges(_pred_edges(edges, using_only))
     if pairs is not None:
         seen = _local_bfs(pairs, a, max_hops, target=b)
         if b not in seen:
@@ -480,7 +472,7 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
     reference (guacanalytics/toposort.go:26-61).
 
     Three physical strategies, identical output:
-      * driver: a `pred` subgraph that passes _driver_edges' gate is
+      * driver: a `pred` subgraph that passes cc.driver_edges' gate is
         collected in one job and solved by one _kahn_levels call.
       * grouped (the transcript fast path past the gate): reply chains
         are conversation-local by construction — every edge stays inside
@@ -508,7 +500,7 @@ def toposort_levels(edges: DataFrame, pred: str = "replies_to") -> DataFrame:
         edges.filter(F.col("pred") == pred)
         .select(F.col("src").alias("child"), F.col("dst").alias("parent"))
     )
-    pairs = _driver_edges(e)
+    pairs = cc.driver_edges(e)
     if pairs is not None:
         lv = _kahn_levels(zip(pairs["child"], pairs["parent"]))
         return edges.sparkSession.createDataFrame(

@@ -11,7 +11,10 @@ Shuffle budget at scale (the plan we would want on 1000 executors):
   * extraction: narrow (mapInPandas over the scan, no shuffle).
   * head linking: broadcast join, no shuffle of the mention stream.
   * tail linking: shuffles only DISTINCT unmatched surfaces (tiny).
-  * CC: iterates over the same_as edge set only (≪ corpus), plain min-agg.
+  * CC: an equivalence set of at most cc.DRIVER_EDGE_LIMIT rows is
+    collected by cc's one driver gate (one job) and solved in process; a
+    larger one iterates over the same_as edge set only (≪ corpus), plain
+    min-agg.
   * transcripts, mentions_linked and triples are written bucketed on
     conv_id, so the mention stream and the triples dedup and vertices
     turn-ref dedup run with no exchange at all.
@@ -70,13 +73,6 @@ def conv_buckets(turns: int) -> int:
 #     tables.
 SCHEMA_VERSION = 7
 
-# CC physical-strategy gates. The driver-side union-find is strictly for
-# small equivalence sets: with a corpus-proportional entity universe the
-# equivalence graph grows ~linearly with the corpus (the 100 TB regime
-# never fits a driver), so the PIPELINE runs the distributed
-# frontier/pointer-doubling path from a low threshold — the strategy that
-# scales is the one the headline measures (VERDICT r4 missing #1).
-CC_DRIVER_THRESHOLD = cc.DRIVER_EDGE_LIMIT
 # past this many mapped entities the triples rewrite joins by shuffle
 # instead of broadcasting the mapping
 MAPPING_BROADCAST_LIMIT = 5_000_000
@@ -266,14 +262,11 @@ def run_pipeline(
 
     mapping = stage(
         "cc_mapping",
+        # one job on the driver side: cc's gate collects the committed
+        # equivalences (at most cc.DRIVER_EDGE_LIMIT rows) and solves
+        # them in process; past the limit the frontier rounds run
         lambda: cc.connected_components(
-            links,
-            driver_threshold=CC_DRIVER_THRESHOLD,
-            round_stats=res.cc_round_stats,
-            # the equivalences snapshot was just committed — its row
-            # count is free from the commit log (snapshot summary), so
-            # the strategy gate costs no count job
-            n_edges=wh.committed_rows("equivalences"),
+            links, round_stats=res.cc_round_stats
         ),
     )
 
@@ -282,7 +275,7 @@ def run_pipeline(
     # no exchange and lets the vertices turn-ref arm dedup shuffle-free.
     # The CC rewrite broadcasts the mapping only while it fits the budget
     # (the committed row count is free from the snapshot summary).
-    n_mapped = wh.committed_rows("cc_mapping") or 0
+    n_mapped = wh.committed_rows("cc_mapping")
     triples = stage(
         "triples",
         lambda: assemble.triples_final(
@@ -313,8 +306,8 @@ def run_pipeline(
         "edges": edgs,
     }
     # committed row counts from the snapshot summary — no extra count() jobs
-    res.triples = wh.committed_rows("triples") or triples.count()
-    res.turns = wh.committed_rows("transcripts") or transcripts.count()
+    res.triples = wh.committed_rows("triples")
+    res.turns = wh.committed_rows("transcripts")
     res.wall_sec = time.time() - t0
     return res
 

@@ -264,16 +264,11 @@ def ann_topk_lsh(
         with_b.filter(F.col("vec_id").isin(query_ids)), "query_id", "q",
         "bucket",
     )
-    if multiprobe >= 1:
-        masks = _probe_masks(n_bits, multiprobe)
-        probes = F.array(
-            *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]
-        )
-        q = q0.select(
-            "query_id", "vq", "nq", F.explode(probes).alias("bucket")
-        )
-    else:
-        q = q0
+    probes = F.array(*[
+        F.col("bucket").bitwiseXOR(F.lit(m))
+        for m in _probe_masks(n_bits, multiprobe)
+    ])
+    q = q0.select("query_id", "vq", "nq", F.explode(probes).alias("bucket"))
     c = _normed(
         with_b.filter(~F.col("vec_id").isin(query_ids)), "neighbor_id", "c",
         "bucket",
@@ -304,18 +299,32 @@ def ivf_centroids(emb: DataFrame) -> DataFrame:
     to any corpus; the output is nlist rows — driver/broadcast-sized by
     construction (FAISS holds IVF centroids in RAM the same way).
     """
+    return _mean_vectors(emb, "label").select(
+        F.col("label").cast("int").alias("list_id"), "cvec"
+    )
+
+
+def _dim_means(df: DataFrame, key: str, out: str) -> DataFrame:
+    """(key, dim, out): the per-`key` mean of each `embedding` dimension,
+    rounded to 6 dp — posexplode + groupBy, fully JVM-side."""
     return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("cv"))
-        .groupBy("label")
+        df.select(key, F.posexplode("embedding").alias("dim", "x"))
+        .groupBy(key, "dim")
+        .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias(out))
+    )
+
+
+def _mean_vectors(df: DataFrame, key: str) -> DataFrame:
+    """(key, cvec array<double>): _dim_means reassembled in dim order."""
+    return (
+        _dim_means(df, key, "cv")
+        .groupBy(key)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "cv"))),
                 lambda s: s["cv"],
             ).alias("cvec")
         )
-        .select(F.col("label").cast("int").alias("list_id"), "cvec")
     )
 
 
@@ -342,19 +351,7 @@ def ivf_centroids_kmeans(emb: DataFrame, iters: int = 1) -> DataFrame:
     cent = ivf_centroids(emb)
     for _ in range(iters):
         a = ivf_assign(emb, cent)
-        cent = (
-            emb.join(a, on="vec_id")
-            .select("list_id", F.posexplode("embedding").alias("dim", "x"))
-            .groupBy("list_id", "dim")
-            .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("cv"))
-            .groupBy("list_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("cvec")
-            )
-        )
+        cent = _mean_vectors(emb.join(a, on="vec_id"), "list_id")
     return cent
 
 
@@ -462,8 +459,4 @@ def ann_topk_ivf(
 def label_centroids(emb: DataFrame) -> DataFrame:
     """(label, dim, centroid): per-cluster mean vector, relationally —
     posexplode + groupBy, fully JVM-side, scales to any corpus size."""
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("centroid"))
-    )
+    return _dim_means(emb, "label", "centroid")

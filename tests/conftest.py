@@ -32,9 +32,11 @@ def spark():
 
 @pytest.fixture
 def gate_sides(monkeypatch):
-    """Iterate "driver", then "distributed": graph's BFS, shortest-path
-    and toposort gate (cc.DRIVER_EDGE_LIMIT) is at 0 rows for the second
-    pass, so `for side in gate_sides:` runs its body on both sides."""
+    """Iterate "driver", then "distributed": the one driver gate
+    (cc.driver_edges at cc.DRIVER_EDGE_LIMIT rows), which connected
+    components and graph's BFS, shortest path and toposort all pass
+    through, is at 0 rows for the second pass, so `for side in
+    gate_sides:` runs its body on both sides."""
     from guac_spark import cc
 
     def sides():
@@ -47,8 +49,8 @@ def gate_sides(monkeypatch):
 
 @pytest.fixture
 def distributed(monkeypatch):
-    """Every non-empty edge relation takes graph's distributed traversal
-    path."""
+    """Every non-empty edge relation takes the distributed side of the
+    driver gate: graph's frontier joins and cc's label rounds."""
     from guac_spark import cc
 
     monkeypatch.setattr(cc, "DRIVER_EDGE_LIMIT", 0)
