@@ -9,8 +9,8 @@ rewrite every triple endpoint to its component's canonical id.
 
 An edge relation that fits the driver skips the rounds below: the one
 driver gate (driver_edges, shared with graph's BFS, shortest-path and
-toposort) collects it in one Spark job and union-find solves it in
-process.
+toposort and with similarity's embedding searches) collects it in one
+Spark job and union-find solves it in process.
 
 Algorithm: min-label edge propagation interleaved with pointer-doubling
 tree contraction (the alternating-star / hash-to-min family, cf. Kiveris
@@ -70,10 +70,12 @@ from pyspark.sql import functions as F
 
 from .session import checkpoint_nostats
 
-# Edge relations of at most this many rows are solved on the driver, by
-# connected_components and by graph's BFS, shortest-path and toposort,
-# all through driver_edges. One Arrow collect of 100k string pairs is a
-# fraction of one distributed round.
+# Relations of at most this many rows are solved on the driver, all
+# through driver_edges: edge relations by connected_components and by
+# graph's BFS, shortest-path and toposort, embedding relations by
+# similarity's brute-force, LSH and IVF top-k and LSH near-dup pairs.
+# One Arrow collect of 100k string pairs is a fraction of one distributed
+# round.
 DRIVER_EDGE_LIMIT = 100_000
 # a distributed round broadcast-joins its frontier while it has at most
 # this many rows
@@ -82,10 +84,11 @@ BROADCAST_LIMIT = 1_000_000
 
 def driver_edges(e: DataFrame, limit: int | None = None
                  ) -> pd.DataFrame | None:
-    """The driver gate: the edge relation `e` as pandas when it has at
-    most `limit` rows (None: DRIVER_EDGE_LIMIT, read at call time), else
-    None. One Spark job both decides the side and fetches the rows: `e`
-    is limited to `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default)
+    """The driver gate: the relation `e` (an edge relation, or an
+    embedding relation for similarity's searches) as pandas when it has
+    at most `limit` rows (None: DRIVER_EDGE_LIMIT, read at call time),
+    else None. One Spark job both decides the side and fetches the rows:
+    `e` is limited to `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default)
     and collected through Arrow."""
     if limit is None:
         limit = DRIVER_EDGE_LIMIT

@@ -5,17 +5,30 @@ aggregate fold, no Python); the LSH-bucketed variant is the 100 TB path —
 random-hyperplane signatures block the corpus so each query probes only its
 bucket (and optional neighboring buckets), turning O(n·q) into
 O(n/2^bits · q) with recall controlled by the number of probe tables.
+
+Driver side: ann_topk_bruteforce, ann_topk_lsh, ann_topk_ivf (with its own
+quantizer) and cosine_near_pairs_lsh first pass their embedding relation
+through the one driver gate (cc.driver_edges, cc.DRIVER_EDGE_LIMIT rows).
+A relation that fits is searched in process from the gate's one Arrow
+collect, with the same output as the Spark plan below it: the same md5
+hyperplanes and probe masks (one bucket kernel, _bucket_ids), every dot
+product and norm folded over the dimensions in _dot's order (_dot_fold),
+6-dp rounding as F.round rounds (_round6), and the same tie-breaks. A
+relation past the limit runs the distributed plans unchanged.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from decimal import ROUND_HALF_UP, Decimal
 from itertools import combinations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .. import cc
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,14 +111,126 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+# --- driver side (relations that pass cc.driver_edges' gate) ----------------
+
+def _on_driver(emb: DataFrame, cols: list[str],
+               solve: Callable[[pd.DataFrame], pd.DataFrame],
+               schema: str) -> DataFrame | None:
+    """`solve` run on the driver over `emb`'s `cols` when they pass the
+    one driver gate (cc.driver_edges), its pandas result returned as a
+    DataFrame of `schema`; None past the gate. An empty relation gives an
+    empty result without calling `solve`."""
+    pdf = cc.driver_edges(emb.select(*cols))
+    if pdf is None:
+        return None
+    return emb.sparkSession.createDataFrame(
+        solve(pdf) if len(pdf) else [], schema
+    )
+
+
+def _id_type(emb: DataFrame) -> str:
+    return emb.schema["vec_id"].dataType.simpleString()
+
+
+def _topk_schema(emb: DataFrame) -> str:
+    t = _id_type(emb)
+    return f"query_id {t}, neighbor_id {t}, rank int, cos double"
+
+
+def _vectors(pdf: pd.DataFrame) -> np.ndarray:
+    """The `embedding` column of a pandas batch as an [n, dim] float64
+    matrix (float32 -> float64 is exact, as Spark's cast is)."""
+    return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+
+
+def _dot_fold(xs, ys):
+    """Σ x·y over paired per-dimension arrays, summed left to right from
+    0.0 — the order of _dot's and _norm's aggregate fold, so every dot
+    product and norm equals the Spark side's double bit for bit."""
+    acc = 0.0
+    for x, y in zip(xs, ys):
+        acc = acc + x * y
+    return acc
+
+
+def _norms(vt: np.ndarray) -> np.ndarray:
+    """_norm per column of a dim-first [dim, n] matrix."""
+    return np.sqrt(_dot_fold(vt, vt))
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """F.round(x, 6): HALF_UP on each double's shortest decimal repr (what
+    BigDecimal.valueOf sees), not np.round's half-even on x·1e6. Only a
+    value whose x·1e6 lies within float error of a half goes through
+    Decimal; `+ 0.0` turns a -0.0 into BigDecimal's 0."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.abs(x) * 1e6
+    out = np.copysign(np.floor(y + 0.5), x) / 1e6 + 0.0
+    for i in np.flatnonzero(
+        np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(y, 1.0)
+    ):
+        out.flat[i] = float(Decimal(repr(float(x.flat[i]))).quantize(
+            Decimal("1e-6"), ROUND_HALF_UP)) + 0.0
+    return out
+
+
+def _desc(x: np.ndarray) -> np.ndarray:
+    """Ascending sort key for `x` descending, NaN first (Spark orders NaN
+    above every number)."""
+    return np.where(np.isnan(x), -np.inf, -x)
+
+
+def _split(pdf: pd.DataFrame, query_ids: list[int]):
+    """(ids, query row indices, corpus row indices)."""
+    ids = pdf["vec_id"].to_numpy()
+    is_q = np.isin(ids, list(query_ids))
+    return ids, np.flatnonzero(is_q), np.flatnonzero(~is_q)
+
+
+def _local_topk(ids: np.ndarray, mat: np.ndarray, qi: np.ndarray,
+                ci: np.ndarray, k: int,
+                admit: np.ndarray | None = None) -> pd.DataFrame:
+    """_topk on the driver: query rows `qi` scored against corpus rows
+    `ci` (only the pairs set in the [len(qi), len(ci)] mask `admit`, all
+    when None) with _dot / (nq·nc); per query_id the k best, cos
+    descending, ties to the smaller neighbor_id, cos rounded by _round6."""
+    vt = mat.T
+    n = _norms(vt)
+    cos = (_dot_fold(vt[:, qi, None], vt[:, None, ci])
+           / (n[qi, None] * n[None, ci]))
+    qq, cx = np.nonzero(np.ones(cos.shape, bool) if admit is None else admit)
+    qid, nid, cos = ids[qi][qq], ids[ci][cx], cos[qq, cx]
+    order = np.lexsort((nid, _desc(cos), qid))
+    qid, nid, cos = qid[order], nid[order], cos[order]
+    pos = np.arange(len(qid))
+    first = np.ones(len(qid), bool)
+    first[1:] = qid[1:] != qid[:-1]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= k
+    return pd.DataFrame({
+        "query_id": qid[keep], "neighbor_id": nid[keep],
+        "rank": rank[keep].astype(np.int32), "cos": _round6(cos[keep]),
+    })
+
+
 def ann_topk_bruteforce(
     emb: DataFrame, query_ids: list[int], k: int = 5
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cos).
 
-    Queries broadcast against the corpus — one scan of the corpus total,
-    not one per query; rank via window with deterministic tie-break.
+    A relation that passes cc.driver_edges' gate is scored on the driver
+    (_local_topk over every query × corpus pair). Past it, queries
+    broadcast against the corpus — one scan of the corpus total, not one
+    per query; rank via window with deterministic tie-break.
     """
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, qi, ci = _split(pdf, query_ids)
+        return _local_topk(ids, _vectors(pdf), qi, ci, k)
+
+    local = _on_driver(emb, ["vec_id", "embedding"], solve,
+                       _topk_schema(emb))
+    if local is not None:
+        return local
     q = _normed(emb.filter(F.col("vec_id").isin(query_ids)), "query_id", "q")
     c = _normed(
         emb.filter(~F.col("vec_id").isin(query_ids)), "neighbor_id", "c"
@@ -144,20 +269,25 @@ def hyperplane_buckets(
     computed in one Arrow pass. Sign boundaries are robust: |dot| is
     O(1000·sqrt(dim)) against ~1e-9 float error.
     """
-    planes = hyperplane_planes(n_bits, seed, dim).astype(np.float64)
+    planes = hyperplane_planes(n_bits, seed, dim)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (mat @ planes.T) > 0  # [n, n_bits]
-            bucket = bits @ (1 << np.arange(n_bits))
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "bucket": bucket.astype(np.int64)}
-            )
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"],
+                "bucket": _bucket_ids(_vectors(pdf), planes),
+            })
 
     return emb.select("vec_id", "embedding").mapInPandas(
         gen, "vec_id long, bucket long"
     )
+
+
+def _bucket_ids(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """The bucket kernel of both sides: bit i of a row's bucket is set
+    when the row lies on the positive side of plane i."""
+    bits = (mat @ planes.T.astype(np.float64)) > 0  # [n, n_bits]
+    return (bits @ (1 << np.arange(len(planes)))).astype(np.int64)
 
 
 def _probe_masks(n_bits: int, hamming: int) -> list[int]:
@@ -206,21 +336,68 @@ def cosine_near_pairs_lsh(
     identical at n_bits 8/12/13/14 on every driver SF).
 
     n_bits=None (default) sizes the signature to the corpus
-    (_adaptive_n_bits) — one count() job, the snapshot-summary lookup at
-    cluster scale.
+    (_adaptive_n_bits).
 
-    Physical shape (r7, guide §2.3/§8): candidate (a, b) ID pairs are
-    generated and deduplicated from the bucket table alone — the r6
-    shape ran dropDuplicates on rows still carrying BOTH 64-float
-    embeddings plus norms, shuffling ~1 KB/row of payload to compare 16
-    bytes of ids — and the embeddings are attached to the surviving
-    pairs afterwards (two joins against the embedding relation;
-    broadcast at bench scale, a plain id-keyed hash join at 100 TB).
     Requires unique vec_ids (every driver SF; GUAC ids are unique by
-    construction) — under duplicate ids the old payload dedup silently
-    picked an arbitrary embedding per pair, which is strictly worse."""
+    construction) and raises ValueError otherwise: a duplicated id would
+    pair an arbitrary one of its embeddings.
+
+    Driver side (the relation passes cc.driver_edges' gate): the same
+    buckets from _bucket_ids, then per probe mask a bucket sort plus
+    searchsorted finds every (a, b) whose buckets differ by that mask;
+    with unique ids each pair comes from exactly one mask, so no dedup.
+
+    Distributed side: one aggregate of count(*) and count(DISTINCT
+    vec_id) checks the ids and sizes the signature — one job, the
+    snapshot-summary lookup at cluster scale. Physical shape (r7, guide
+    §2.3/§8): candidate (a, b) ID pairs are generated and deduplicated
+    from the bucket table alone — the r6 shape ran dropDuplicates on rows
+    still carrying BOTH 64-float embeddings plus norms, shuffling ~1
+    KB/row of payload to compare 16 bytes of ids — and the embeddings are
+    attached to the surviving pairs afterwards (two joins against the
+    embedding relation; broadcast at bench scale, a plain id-keyed hash
+    join at 100 TB)."""
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["vec_id"].to_numpy()
+        if len(np.unique(ids)) != len(ids):
+            raise ValueError("cosine_near_pairs_lsh needs unique vec_ids")
+        bits = _adaptive_n_bits(len(ids)) if n_bits is None else n_bits
+        mat = _vectors(pdf)
+        bucket = _bucket_ids(mat, hyperplane_planes(bits))
+        order = np.argsort(bucket, kind="stable")
+        sorted_b = bucket[order]
+        ls, rs = [], []
+        for m in _probe_masks(bits, probe_hamming):
+            want = bucket ^ m
+            lo = np.searchsorted(sorted_b, want, "left")
+            cnt = np.searchsorted(sorted_b, want, "right") - lo
+            r = np.repeat(np.arange(len(ids)), cnt)
+            l = order[np.arange(cnt.sum())
+                      + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
+            keep = ids[l] < ids[r]
+            ls.append(l[keep])
+            rs.append(r[keep])
+        l, r = np.concatenate(ls), np.concatenate(rs)
+        vt = mat.T
+        n = _norms(vt)
+        cos = (_dot_fold((x[l] for x in vt), (x[r] for x in vt))
+               / (n[l] * n[r]))
+        hit = cos >= threshold
+        return pd.DataFrame({"a": ids[l[hit]], "b": ids[r[hit]],
+                             "cos": _round6(cos[hit])})
+
+    t = _id_type(emb)
+    local = _on_driver(emb, ["vec_id", "embedding"], solve,
+                       f"a {t}, b {t}, cos double")
+    if local is not None:
+        return local
+    n_rows, n_ids = emb.agg(
+        F.count(F.lit(1)), F.count_distinct("vec_id")
+    ).first()
+    if n_rows != n_ids:
+        raise ValueError("cosine_near_pairs_lsh needs unique vec_ids")
     if n_bits is None:
-        n_bits = _adaptive_n_bits(emb.count())
+        n_bits = _adaptive_n_bits(n_rows)
     b = hyperplane_buckets(emb, n_bits=n_bits)
     masks = _probe_masks(n_bits, probe_hamming)
     l_ids = b.select(F.col("vec_id").alias("a"), "bucket")
@@ -256,8 +433,22 @@ def ann_topk_lsh(
     probes per query (9 at n_bits=8/multiprobe=1, 37 at multiprobe=2), vs
     scanning the full corpus for brute force. Recall increases
     monotonically with `multiprobe`; ann_topk_bruteforce is the
-    correctness baseline.
+    correctness baseline. A relation that passes cc.driver_edges' gate is
+    searched on the driver: _bucket_ids buckets, the probe masks as a
+    query × corpus pair mask, then _local_topk.
     """
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, qi, ci = _split(pdf, query_ids)
+        mat = _vectors(pdf)
+        bucket = _bucket_ids(mat, hyperplane_planes(n_bits))
+        admit = np.isin(bucket[qi, None] ^ bucket[None, ci],
+                        _probe_masks(n_bits, multiprobe))
+        return _local_topk(ids, mat, qi, ci, k, admit)
+
+    local = _on_driver(emb, ["vec_id", "embedding"], solve,
+                       _topk_schema(emb))
+    if local is not None:
+        return local
     b = hyperplane_buckets(emb, n_bits=n_bits)
     with_b = emb.join(b, on="vec_id")
     q0 = _normed(
@@ -426,7 +617,37 @@ def ann_topk_ivf(
     and reused across every query batch instead of re-assigning the
     corpus per search — scripts/ann_scale_evidence.py measures exactly
     that split (build once, probe per nprobe).
+
+    With neither given, a relation that passes cc.driver_edges' gate is
+    searched on the driver: per-label means rounded by _round6, cosine
+    argmax assignment (ties to the smallest list_id), the top-`nprobe`
+    lists per query (ties to the smaller list_id), then _local_topk over
+    the probed lists.
     """
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, qi, ci = _split(pdf, query_ids)
+        mat = _vectors(pdf)
+        # lists in ascending list_id order, so the first best is the
+        # smallest list_id
+        lists, row_list = np.unique(pdf["label"].to_numpy(),
+                                    return_inverse=True)
+        sums = np.zeros((len(lists), mat.shape[1]))
+        np.add.at(sums, row_list, mat)
+        ct = _round6(sums / np.bincount(row_list)[:, None]).T
+        vt = mat.T
+        ccos = (_dot_fold(vt[:, :, None], ct[:, None, :])
+                / (_norms(vt)[:, None] * _norms(ct)[None, :]))
+        assign = np.argmax(ccos, axis=1)
+        probes = np.argsort(_desc(ccos[qi]), axis=1, kind="stable")
+        probed = np.zeros((len(qi), len(lists)), bool)
+        np.put_along_axis(probed, probes[:, :nprobe], True, axis=1)
+        return _local_topk(ids, mat, qi, ci, k, probed[:, assign[ci]])
+
+    if centroids is None and assigned is None:
+        local = _on_driver(emb, ["vec_id", "embedding", "label"], solve,
+                           _topk_schema(emb))
+        if local is not None:
+            return local
     cent = ivf_centroids(emb) if centroids is None else centroids
     if assigned is None:
         assigned = ivf_assign(emb, cent)

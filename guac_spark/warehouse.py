@@ -296,18 +296,11 @@ class Warehouse:
             for p in sorted(pendings, key=lambda x: (x["table"], x["snap"])):
                 table = p["table"]
                 paths = [p["path"]]
-                rows: int | None = p["new_rows"]
+                rows = p["new_rows"]
                 if p["append"] and log["tables"].get(table) is not None:
                     entry = log["tables"][table]
                     paths = entry["paths"] + paths
-                    # a legacy entry without a row count (reachable only
-                    # through a direct caller: _write refuses an entry
-                    # without ddl) makes the total unknowable — propagate
-                    # None rather than a silently-wrong total (ADVICE r2)
-                    rows = (
-                        rows + entry["rows"]
-                        if entry.get("rows") is not None else None
-                    )
+                    rows += entry["rows"]
                 prev_entry = log["tables"].get(table)
                 entry = {
                     "snapshot_id": max(
@@ -352,10 +345,9 @@ class Warehouse:
     def committed_rows(self, table: str) -> int | None:
         """Row count of the committed snapshot from the commit log (the
         Iceberg snapshot-summary total-records analog); None for a table
-        with no commit, or for an append a caller committed straight onto
-        a pre-count entry (the total is unknowable)."""
+        with no commit."""
         entry = self._read_log()["tables"].get(table)
-        return None if entry is None else entry.get("rows")
+        return None if entry is None else entry["rows"]
 
     def _append_metrics(self, spark: SparkSession, rows: list[tuple]) -> None:
         # tiny control-plane append — written with pyarrow directly (no

@@ -83,29 +83,6 @@ def test_concurrent_same_table_writers_get_distinct_snapshots(spark):
     assert wh.read(spark, "t").count() == 7
 
 
-def test_append_onto_unknown_rows_propagates_none():
-    """A legacy entry without a row count makes the append total unknown
-    — committed_rows must return None, not the new rows alone."""
-    import json
-    import os
-    import tempfile as tf
-
-    root = tf.mkdtemp(prefix="wh_legacyrows_")
-    wh = Warehouse(root)
-    os.makedirs(os.path.join(root, "t", "snap-1"), exist_ok=True)
-    with open(wh._log_path, "w") as f:
-        json.dump({"tables": {"t": {
-            "snapshot_id": 1, "paths": [wh.table_path("t", 1)],
-            "committed_at": 0.0, "stage": "t",
-        }}}, f)
-    wh.commit_pending([{
-        "table": "t", "snap": 2, "path": wh.table_path("t", 2),
-        "new_rows": 10, "append": True, "stage": "t",
-        "catalog_table": None, "ddl": "v BIGINT", "committed_at": 1.0,
-    }])
-    assert wh.committed_rows("t") is None
-
-
 def test_evidence_appends_are_o_of_new(spark):
     """Each enrichment round writes only its new rows; the evidence table
     snapshot accumulates directories instead of rewriting."""

@@ -57,6 +57,15 @@ def test_traversal_matches_oracle_distributed(spark, duck_small,
     _check_oracle(spark, duck_small, name)
 
 
+@pytest.mark.parametrize("name", ["q_ann_topk", "q_ann_lsh", "q_ann_ivf",
+                                  "q_embed_neardup"])
+def test_vector_query_matches_oracle_distributed(spark, duck_small,
+                                                 distributed, name):
+    """The embedding searches past the same driver gate (every test-scale
+    embedding relation passes it)."""
+    _check_oracle(spark, duck_small, name)
+
+
 def test_rows_only_queries_run(spark):
     """Queries without an oracle still must run and return sane rows."""
     qs = entry_mod.queries()

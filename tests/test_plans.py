@@ -71,9 +71,10 @@ def test_neighbors_seed_filter_is_pushed(spark):
     assert "PushedFilters" in plan and "src" in plan
 
 
-def test_embed_neardup_lsh_has_no_cartesian(spark):
-    """The shipped near-dup query must never cross-join the corpus
-    (VERDICT r1 wrong #1): candidates come from the bucket equi-join."""
+def test_embed_neardup_lsh_has_no_cartesian(spark, distributed):
+    """Past the driver gate, the near-dup query must never cross-join the
+    corpus (VERDICT r1 wrong #1): candidates come from the bucket
+    equi-join."""
     from guac_spark.textops import similarity
 
     emb = similarity.load_embeddings(spark, SF_SMALL)
@@ -81,6 +82,7 @@ def test_embed_neardup_lsh_has_no_cartesian(spark):
         similarity.staged_embeddings(emb), 0.99
     )
     plan = _plan(q)
+    assert "Join" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

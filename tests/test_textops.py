@@ -2,10 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from guac_spark.textops import dedup, similarity
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, group_jobs, job_group
 
 
 def test_minhash_equals_relational(spark):
@@ -108,22 +109,24 @@ def test_simhash_exact_copy_distance_zero(spark):
     assert exact_copies <= got
 
 
-def test_ann_lsh_recall_vs_bruteforce(spark):
+def test_ann_lsh_recall_vs_bruteforce(spark, gate_sides):
     emb = similarity.load_embeddings(spark, SF_SMALL)
     qids = [0, 1, 2, 3, 4]
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ann_topk_bruteforce(emb, qids, 5).collect()
-    }
-    lsh = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ann_topk_lsh(emb, qids, 5, n_bits=4).collect()
-    }
-    # approximate: require non-trivial recall, exactness not expected
-    recall = len(brute & lsh) / len(brute)
-    assert recall > 0.1, recall
-    # every LSH hit must be a real corpus vector with a valid rank
-    assert all(q in qids for q, _ in lsh)
+    for side in gate_sides:
+        brute = {
+            (r["query_id"], r["neighbor_id"])
+            for r in similarity.ann_topk_bruteforce(emb, qids, 5).collect()
+        }
+        lsh = {
+            (r["query_id"], r["neighbor_id"])
+            for r in similarity.ann_topk_lsh(
+                emb, qids, 5, n_bits=4).collect()
+        }
+        # approximate: require non-trivial recall, exactness not expected
+        recall = len(brute & lsh) / len(brute)
+        assert recall > 0.1, (side, recall)
+        # every LSH hit must be a real corpus vector with a valid rank
+        assert all(q in qids for q, _ in lsh), side
 
 
 def test_ivf_assignment_is_a_partition(spark):
@@ -139,38 +142,82 @@ def test_ivf_assignment_is_a_partition(spark):
     assert {r["list_id"] for r in assigned.collect()} <= lists
 
 
-def test_ivf_full_probe_equals_bruteforce(spark):
+def test_ivf_full_probe_equals_bruteforce(spark, gate_sides):
     """nprobe = nlist degrades IVF to an exact scan — output must be
     row-identical to the brute-force baseline (rank ties included)."""
     emb = similarity.load_embeddings(spark, SF_SMALL)
     qids = [0, 1, 2, 3, 4]
     nlist = similarity.ivf_centroids(emb).count()
-    brute = sorted(
-        map(tuple, similarity.ann_topk_bruteforce(emb, qids, 5).collect())
-    )
-    ivf = sorted(
-        map(
+    for side in gate_sides:
+        brute = sorted(map(
+            tuple, similarity.ann_topk_bruteforce(emb, qids, 5).collect()
+        ))
+        ivf = sorted(map(
             tuple,
             similarity.ann_topk_ivf(emb, qids, 5, nprobe=nlist).collect(),
-        )
-    )
-    assert ivf == brute
+        ))
+        assert ivf == brute, side
 
 
-def test_ivf_recall_vs_bruteforce(spark):
+def test_ivf_recall_vs_bruteforce(spark, gate_sides):
     emb = similarity.load_embeddings(spark, SF_SMALL)
     qids = [0, 1, 2, 3, 4]
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ann_topk_bruteforce(emb, qids, 5).collect()
-    }
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ann_topk_ivf(emb, qids, 5, nprobe=3).collect()
-    }
-    recall = len(brute & ivf) / len(brute)
-    assert recall > 0.1, recall
-    assert all(q in qids for q, _ in ivf)
+    for side in gate_sides:
+        brute = {
+            (r["query_id"], r["neighbor_id"])
+            for r in similarity.ann_topk_bruteforce(emb, qids, 5).collect()
+        }
+        ivf = {
+            (r["query_id"], r["neighbor_id"])
+            for r in similarity.ann_topk_ivf(
+                emb, qids, 5, nprobe=3).collect()
+        }
+        recall = len(brute & ivf) / len(brute)
+        assert recall > 0.1, (side, recall)
+        assert all(q in qids for q, _ in ivf), side
+
+
+def test_driver_ann_topk_ivf_runs_one_job(spark):
+    """Below the gate, an IVF search is the one collect of its embedding
+    relation, and the caller's action adds one job for the local
+    result."""
+    emb = similarity.load_embeddings(spark, SF_SMALL)
+    with job_group(spark, "ivf-driver"):
+        out = similarity.ann_topk_ivf(emb, [0, 1, 2, 3, 4], 5, nprobe=3)
+        assert group_jobs(spark, "ivf-driver") == 1
+        out.write.format("noop").mode("overwrite").save()
+        assert group_jobs(spark, "ivf-driver") == 2
+    assert out.count() == 25
+
+
+def test_round6_matches_spark_round(spark):
+    """The driver side rounds output cos and IVF centroids as F.round
+    does: HALF_UP on each double's shortest decimal repr, including the
+    values that sit exactly on a half at the 7th decimal."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vals = [float(f"{sign}0.{i:06d}5") for sign in ("", "-")
+            for i in range(0, 10**6, 997)]
+    vals += [0.0, -1e-7, 5e-7, 2.5e-6, 0.9999995, 1234.5675]
+    vals += rng.uniform(-2.0, 2.0, 2000).tolist()
+    df = spark.createDataFrame(list(enumerate(vals)), "i long, x double")
+    want = [r["r"] for r in
+            df.orderBy("i").select(F.round("x", 6).alias("r")).collect()]
+    assert similarity._round6(np.array(vals)).tolist() == want
+    # a matrix (IVF centroids) rounds element by element
+    got = similarity._round6(np.array(vals).reshape(2, -1))
+    assert got.ravel().tolist() == want
+
+
+def test_near_pairs_lsh_rejects_duplicate_ids(spark, gate_sides):
+    emb = similarity.load_embeddings(spark, SF_SMALL)
+    dup = emb.unionByName(emb.filter("vec_id = 7"))
+    for side in gate_sides:
+        with pytest.raises(ValueError, match="unique vec_ids"):
+            similarity.cosine_near_pairs_lsh(dup, 0.99)
+        with pytest.raises(ValueError, match="unique vec_ids"):
+            similarity.cosine_near_pairs_lsh(dup, 0.99, n_bits=8)
 
 
 def test_minhash_banding_recall_vs_independent_exact(spark):
@@ -212,17 +259,15 @@ def test_minhash_banding_recall_vs_independent_exact(spark):
     assert got == want
 
 
-def test_ivf_kmeans_full_probe_equals_bruteforce(spark):
+def test_ivf_kmeans_full_probe_equals_bruteforce(spark, gate_sides):
     """Search exactness is independent of the quantizer: with the
     k-means-refined centroids and nprobe = nlist, IVF must still
-    reproduce the brute-force baseline row-identically."""
+    reproduce the brute-force baseline row-identically (IVF with given
+    centroids always runs in Spark; brute force runs on both sides)."""
     emb = similarity.load_embeddings(spark, SF_SMALL)
     qids = [0, 1, 2, 3, 4]
     kc = similarity.ivf_centroids_kmeans(emb, iters=1)
     nlist = kc.count()
-    brute = sorted(
-        map(tuple, similarity.ann_topk_bruteforce(emb, qids, 5).collect())
-    )
     ivf = sorted(
         map(
             tuple,
@@ -231,7 +276,11 @@ def test_ivf_kmeans_full_probe_equals_bruteforce(spark):
             ).collect(),
         )
     )
-    assert ivf == brute
+    for side in gate_sides:
+        brute = sorted(map(
+            tuple, similarity.ann_topk_bruteforce(emb, qids, 5).collect()
+        ))
+        assert ivf == brute, side
 
 
 def test_ivf_kmeans_assignment_stays_a_partition(spark):
