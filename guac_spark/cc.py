@@ -9,8 +9,8 @@ rewrite every triple endpoint to its component's canonical id.
 
 An edge relation that fits the driver skips the rounds below: the one
 driver gate (driver_edges, shared with graph's BFS, shortest-path and
-toposort and with similarity's embedding searches) collects it in one
-Spark job and union-find solves it in process.
+toposort, with similarity's embedding searches and with dedup's MinHash
+pairs) collects it in one Spark job and union-find solves it in process.
 
 Algorithm: min-label edge propagation interleaved with pointer-doubling
 tree contraction (the alternating-star / hash-to-min family, cf. Kiveris
@@ -73,9 +73,9 @@ from .session import checkpoint_nostats
 # Relations of at most this many rows are solved on the driver, all
 # through driver_edges: edge relations by connected_components and by
 # graph's BFS, shortest-path and toposort, embedding relations by
-# similarity's brute-force, LSH and IVF top-k and LSH near-dup pairs.
-# One Arrow collect of 100k string pairs is a fraction of one distributed
-# round.
+# similarity's brute-force, LSH and IVF top-k and LSH near-dup pairs, and
+# document shingle relations by dedup's MinHash near-dup pairs. One Arrow
+# collect of 100k string pairs is a fraction of one distributed round.
 DRIVER_EDGE_LIMIT = 100_000
 # a distributed round broadcast-joins its frontier while it has at most
 # this many rows
@@ -84,16 +84,18 @@ BROADCAST_LIMIT = 1_000_000
 
 def driver_edges(e: DataFrame, limit: int | None = None
                  ) -> pd.DataFrame | None:
-    """The driver gate: the relation `e` (an edge relation, or an
-    embedding relation for similarity's searches) as pandas when it has
-    at most `limit` rows (None: DRIVER_EDGE_LIMIT, read at call time),
-    else None. One Spark job both decides the side and fetches the rows:
-    `e` is limited to `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default)
-    and collected through Arrow."""
+    """The driver gate: the relation `e` (an edge relation, an embedding
+    relation for similarity's searches, or a (doc_id, shingles) relation
+    for dedup's MinHash pairs) as pandas when it has at most `limit` rows
+    (None: DRIVER_EDGE_LIMIT, read at call time), else None. One Spark
+    job both decides the side and fetches the rows: `e` is limited to
+    `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default) and collected as
+    one Arrow table, which becomes pandas only on the driver side, so a
+    relation past the gate costs the collect but no pandas conversion."""
     if limit is None:
         limit = DRIVER_EDGE_LIMIT
-    pdf = e.limit(limit + 1).toPandas()
-    return pdf if len(pdf) <= limit else None
+    tbl = e.limit(limit + 1).toArrow()
+    return tbl.to_pandas() if tbl.num_rows <= limit else None
 
 
 def _union_find_local(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:

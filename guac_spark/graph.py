@@ -333,7 +333,7 @@ def bfs_distances(edges: DataFrame, seed: str, max_hops: int = 4,
         return edges.sparkSession.createDataFrame(
             pd.DataFrame({"node": list(seen),
                           "dist": [d for _, d in seen.values()]}),
-            "node string, dist int",
+            "node string, dist int NOT NULL",
         )
     layers = _bfs_layers(edges, seed, max_hops, using_only)
     out = layers[0].select("node", "dist")

@@ -9,6 +9,15 @@ Five dedup families, each a distinct scale strategy:
   * SimHash       — 64-bit sketch + banded Hamming blocking;
   * embedding cos — vector near-dup via normalized dot product.
 
+Driver side: minhash_pairs (and near_dup_clusters through it) first
+passes its shingle relation, minhash.bigram_sets, through the one driver
+gate (cc.driver_edges, cc.DRIVER_EDGE_LIMIT rows). A relation that fits
+is banded, bucketed and verified in process from the gate's one Arrow
+collect, with the Spark plan's rows, doubles and schema: the same
+band_frame keys, the same bucket pairs, integer set sizes divided once
+(minhash.jaccard's double) and F.round's rounding (similarity._round6).
+A relation past the limit runs the distributed plan unchanged.
+
 The driver corpus has no natural duplicates, so `staged_documents` adds
 deterministic exact and near copies (SQL-expressible, mirrored by the
 DuckDB oracle) — the analog of GUAC's fixture corpus with known-duplicate
@@ -21,11 +30,14 @@ import hashlib
 import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cc
 from . import minhash
+from .similarity import _round6
 
 EXACT_COPY_OFFSET = 20000
 NEAR_COPY_OFFSET = 10000
@@ -114,6 +126,77 @@ def jaccard_pairs_relational(
     )
 
 
+def _bucket_pairs(ids: np.ndarray, band: np.ndarray,
+                  key: np.ndarray) -> pd.DataFrame:
+    """(a, b): the distinct (least, greatest) id pairs of every
+    (band, band_key) bucket — what minhash_pairs' bucket explode emits.
+    Rows sorted by (band, band_key, id) put each bucket's ids in one
+    ascending run; every row pairs with each later row of its run."""
+    order = np.lexsort((ids, key, band))
+    ids, band, key = ids[order], band[order], key[order]
+    new = np.ones(len(ids), bool)
+    new[1:] = (band[1:] != band[:-1]) | (key[1:] != key[:-1])
+    starts = np.flatnonzero(new)
+    ends = np.append(starts[1:], len(ids))
+    pos = np.arange(len(ids))
+    later = np.repeat(ends, np.diff(ends, prepend=0)) - pos - 1
+    left = np.repeat(pos, later)
+    right = left + 1 + (np.arange(len(left))
+                        - np.repeat(np.cumsum(later) - later, later))
+    return pd.DataFrame({"a": ids[left], "b": ids[right]}).drop_duplicates()
+
+
+def _pairs_on_driver(sets: pd.DataFrame, threshold: float,
+                     batch: int) -> pd.DataFrame:
+    """minhash_pairs over the gate's (doc_id, shingles) rows, vectorized
+    over documents: band_frame's band keys, `batch` documents per call as
+    the distributed side bands one Arrow batch per call (the kernel's
+    [n_hashes, distinct shingles] matrix grows with the call),
+    _bucket_pairs' candidates joined back to their rows as the Spark plan
+    joins them to `sets`, then |A∩B| / |A∪B| over the distinct arrays —
+    integer set sizes and one IEEE division, so each score is
+    minhash.jaccard's double. The threshold applies to the raw score,
+    _round6 to the output. A `batch` <= 0 means no limit, as in Spark."""
+    ids = sets["doc_id"].to_numpy()
+    shingles = sets["shingles"].to_numpy()
+    batch = batch if batch > 0 else len(ids)
+    a, b = minhash.hash_family(minhash.N_HASHES)
+    bands = pd.concat([
+        minhash.band_frame("doc_id", ids[i:i + batch],
+                           shingles[i:i + batch], a, b, minhash.N_BANDS,
+                           minhash.shingle_hash)
+        for i in range(0, len(ids), batch)
+    ])
+    rows = pd.DataFrame({"id": ids, "row": np.arange(len(ids))})
+    cand = (
+        _bucket_pairs(bands["doc_id"].to_numpy(), bands["band"].to_numpy(),
+                      bands["band_key"].to_numpy())
+        .merge(rows.rename(columns={"id": "a", "row": "l"}), on="a")
+        .merge(rows.rename(columns={"id": "b", "row": "r"}), on="b")
+    )
+    # |A∩B|: each pair's shorter array probes the sorted (row, shingle
+    # code) keys of its other side
+    sizes = np.fromiter(map(len, shingles), np.int64, len(shingles))
+    codes, vocab = pd.factorize(np.concatenate(shingles))
+    keys = np.sort(np.repeat(np.arange(len(ids)), sizes) * len(vocab)
+                   + codes)
+    l, r = cand["l"].to_numpy(), cand["r"].to_numpy()
+    short = np.where(sizes[l] <= sizes[r], l, r)
+    other = l + r - short
+    n = sizes[short]
+    pair = np.repeat(np.arange(len(cand)), n)
+    occ = (np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+           + np.repeat(np.cumsum(sizes)[short] - n, n))
+    probe = other[pair] * len(vocab) + codes[occ]
+    at = np.minimum(np.searchsorted(keys, probe), len(keys) - 1)
+    inter = np.bincount(pair[keys[at] == probe], minlength=len(cand))
+    jacc = inter / (sizes[l] + sizes[r] - inter)
+    hit = jacc >= threshold
+    return pd.DataFrame({"a": cand["a"].to_numpy()[hit],
+                         "b": cand["b"].to_numpy()[hit],
+                         "jacc": _round6(jacc[hit])})
+
+
 def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Near-dup pairs via MinHash-LSH banding + exact-Jaccard verification.
 
@@ -125,12 +208,32 @@ def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     contract is "banded candidates, exactly verified", and the DuckDB
     oracle mirrors the banding bit-for-bit (entries._minhash_banded_ctes),
     so the driver compare is deterministic equality, not a recall bet.
-    Candidates come from (band, band_key) buckets; each is verified by
-    joining both ids to their distinct-bigram arrays
-    (minhash.bigram_sets, documents with >= 2 tokens — the oracle's
-    shingle relation) and taking minhash.jaccard JVM-side: two joins on
+    The shingle relation is minhash.bigram_sets (per-document distinct
+    word-bigram arrays of the documents with >= 2 tokens — the oracle's
+    shingle relation, tokenized JVM-side on both sides).
+
+    Driver side (bigram_sets passes cc.driver_edges' gate): the gate's
+    one Arrow collect is the whole Spark work; _pairs_on_driver bands,
+    buckets and verifies it in numpy. Output rows, doubles and schema
+    (a long NOT NULL, b long NOT NULL, jacc double) equal the
+    distributed side's, including a candidate with no shared shingle at
+    a threshold <= 0.
+
+    Distributed side: candidates come from (band, band_key) buckets of
+    minhash.band_rows_df; each is verified by joining both ids to their
+    bigram_sets arrays and taking minhash.jaccard JVM-side: two joins on
     candidate ids, no shingle explode.
     """
+    spark = docs.sparkSession
+    sets = minhash.bigram_sets(docs, "doc_id", "text")
+    local = cc.driver_edges(sets)
+    if local is not None:
+        batch = int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch"))
+        return spark.createDataFrame(
+            _pairs_on_driver(local, threshold, batch) if len(local) else [],
+            "a long NOT NULL, b long NOT NULL, jacc double",
+        )
     # candidates via bucket grouping, not a two-sided self-join: a
     # self-join would recompute the signature mapInPandas once per side
     # (no exchange reuse across differently-aliased scans), and shuffle
@@ -160,7 +263,6 @@ def minhash_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
         .select("p.a", "p.b")
         .distinct()
     )
-    sets = minhash.bigram_sets(docs, "doc_id", "text")
     sa = sets.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sb"))
     # the score is a generator output: Catalyst keeps a filter on it
@@ -187,9 +289,9 @@ def near_dup_clusters(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     lexicographic min == numeric min — padded to 19 digits (full positive
     int64 width, ADVICE r2) with a guard against negatives, so the
     invariant holds for any valid doc_id. Documents in no cluster are
-    absent (callers treat missing as keep-self)."""
-    from ..cc import connected_components
-
+    absent (callers treat missing as keep-self). A shingle relation that
+    passes minhash_pairs' driver gate gives a driver-side pair relation,
+    whose few edges then pass the same gate into cc's union-find."""
     def _padded(c: str):
         return F.when(
             F.col(c) < 0,
@@ -199,7 +301,7 @@ def near_dup_clusters(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     pairs = minhash_pairs(docs, threshold).select(
         _padded("a").alias("src"), _padded("b").alias("dst")
     )
-    m = connected_components(pairs)
+    m = cc.connected_components(pairs)
     return m.select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("keeper_doc_id"),

@@ -1,6 +1,9 @@
 """The one MinHash-LSH kernel: document dedup and entity linking both band
 with it, and both verify their candidates with its exact JVM Jaccard
 (`jaccard` over `char_grams` or `bigram_sets` arrays — no Python verify).
+Document dedup's driver side (dedup.minhash_pairs, a shingle relation
+within cc.driver_edges' gate) bands the collected `bigram_sets` arrays
+with the same `band_frame` and takes the same integer set sizes in numpy.
 
 Frozen hash family (seeded), identical across runs and parallelism levels.
 Callers pass the token hash: word-bigram document shingles use the
@@ -104,10 +107,12 @@ def signatures_batch(
     min over a multiset equals min over its set, so duplicate shingles
     need no dedup; empty lists hash the sentinel token '' exactly like
     `signature`. Shingles repeat heavily across documents (natural
-    vocab), so token_hash runs once per DISTINCT shingle batch-wide.
+    vocab), so token_hash runs once per DISTINCT shingle batch-wide. A
+    list may be any sized iterable, the numpy arrays of an Arrow list
+    column included.
     """
     counts = np.fromiter(
-        (len(s) if s else 1 for s in shingle_lists), dtype=np.int64,
+        (len(s) or 1 for s in shingle_lists), dtype=np.int64,
         count=len(shingle_lists),
     )
     # index occurrences into the DISTINCT shingle vocabulary: the costly
@@ -121,7 +126,8 @@ def signatures_batch(
     from itertools import chain
 
     flat_occ = np.fromiter(
-        chain.from_iterable((s if s else ("",)) for s in shingle_lists),
+        chain.from_iterable((s if len(s) else ("",))
+                            for s in shingle_lists),
         dtype=object, count=int(counts.sum()),
     )
     flat_idx, vocab = pd.factorize(flat_occ, sort=False)
@@ -236,8 +242,7 @@ def band_rows_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             if len(pdf):
                 yield band_frame(
                     id_col, pdf[id_col].to_numpy(),
-                    [list(s) for s in pdf["shingles"]], a, b, N_BANDS,
-                    shingle_hash,
+                    pdf["shingles"].to_numpy(), a, b, N_BANDS, shingle_hash,
                 )
 
     return bigram_sets(df, id_col, text_col).mapInPandas(gen, schema)

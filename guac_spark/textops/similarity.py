@@ -134,7 +134,7 @@ def _id_type(emb: DataFrame) -> str:
 
 def _topk_schema(emb: DataFrame) -> str:
     t = _id_type(emb)
-    return f"query_id {t}, neighbor_id {t}, rank int, cos double"
+    return f"query_id {t}, neighbor_id {t}, rank int NOT NULL, cos double"
 
 
 def _vectors(pdf: pd.DataFrame) -> np.ndarray:

@@ -34,9 +34,10 @@ def spark():
 def gate_sides(monkeypatch):
     """Iterate "driver", then "distributed": the one driver gate
     (cc.driver_edges at cc.DRIVER_EDGE_LIMIT rows), which connected
-    components, graph's BFS, shortest path and toposort, and the
-    embedding searches (similarity's brute-force, LSH and IVF top-k and
-    LSH near-dup pairs) all pass through, is at 0 rows for the second
+    components, graph's BFS, shortest path and toposort, the embedding
+    searches (similarity's brute-force, LSH and IVF top-k and LSH
+    near-dup pairs) and document dedup's MinHash pairs (and near-dup
+    clusters through them) all pass through, is at 0 rows for the second
     pass, so `for side in gate_sides:` runs its body on both sides."""
     from guac_spark import cc
 
@@ -51,8 +52,8 @@ def gate_sides(monkeypatch):
 @pytest.fixture
 def distributed(monkeypatch):
     """Every non-empty relation takes the distributed side of the driver
-    gate: graph's frontier joins, cc's label rounds and similarity's
-    Spark plans."""
+    gate: graph's frontier joins, cc's label rounds, similarity's Spark
+    plans and dedup's MinHash bucket plan."""
     from guac_spark import cc
 
     monkeypatch.setattr(cc, "DRIVER_EDGE_LIMIT", 0)

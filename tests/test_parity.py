@@ -58,11 +58,13 @@ def test_traversal_matches_oracle_distributed(spark, duck_small,
 
 
 @pytest.mark.parametrize("name", ["q_ann_topk", "q_ann_lsh", "q_ann_ivf",
-                                  "q_embed_neardup"])
+                                  "q_embed_neardup", "q_doc_minhash_pairs",
+                                  "q_doc_dedup_clusters"])
 def test_vector_query_matches_oracle_distributed(spark, duck_small,
                                                  distributed, name):
-    """The embedding searches past the same driver gate (every test-scale
-    embedding relation passes it)."""
+    """The embedding searches and the MinHash near-dup queries past the
+    same driver gate (every test-scale embedding and shingle relation
+    passes it)."""
     _check_oracle(spark, duck_small, name)
 
 
@@ -78,3 +80,24 @@ def test_rows_only_queries_run(spark):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_gate_sides_return_one_schema(spark, gate_sides):
+    """Every op behind the one driver gate (cc.driver_edges) returns the
+    same schema on both sides: names, types and nullability."""
+    from guac_spark import cc
+
+    qs = entry_mod.queries()
+    ops = {
+        name: (lambda name=name: qs[name](spark, SF_SMALL))
+        for name in ("q_bfs", "q_path", "q_toposort", "q_ann_topk",
+                     "q_ann_lsh", "q_ann_ivf", "q_embed_neardup",
+                     "q_doc_minhash_pairs", "q_doc_dedup_clusters")
+    }
+    ops["connected_components"] = lambda: cc.connected_components(
+        entry_mod._ctx(spark, SF_SMALL)["edges"])
+    schemas = {}
+    for side in gate_sides:
+        schemas[side] = {name: op().schema for name, op in ops.items()}
+    for name in ops:
+        assert schemas["driver"][name] == schemas["distributed"][name], name

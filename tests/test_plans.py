@@ -99,14 +99,16 @@ def test_minhash_shingling_is_jvm_side(spark):
     assert "MapInPandas" in plan
 
 
-def test_minhash_pairs_scores_each_candidate_once(spark):
+def test_minhash_pairs_scores_each_candidate_once(spark, distributed):
     """The near-dup verify evaluates the Jaccard once per candidate: the
     threshold filter must not be pushed into the candidate join with its
-    own copy of the array intersect."""
+    own copy of the array intersect. Past the driver gate only: the
+    driver side's plan is a local relation."""
     from guac_spark.textops import dedup
 
     docs = dedup.staged_documents(dedup.load_documents(spark, SF_SMALL))
     plan = _optimized(dedup.minhash_pairs(docs, 0.7))
+    assert "Join" in plan, plan
     assert plan.count("array_intersect") == 1, plan
 
 

@@ -9,16 +9,18 @@ from guac_spark.textops import dedup, similarity
 from tests.conftest import SF_SMALL, group_jobs, job_group
 
 
-def test_minhash_equals_relational(spark):
+def test_minhash_equals_relational(spark, gate_sides):
     docs = dedup.staged_documents(dedup.load_documents(spark, SF_SMALL))
-    lsh = {
-        (r["a"], r["b"]) for r in dedup.minhash_pairs(docs, 0.7).collect()
-    }
     exact = {
         (r["a"], r["b"])
         for r in dedup.jaccard_pairs_relational(docs, 0.7, n=2).collect()
     }
-    assert lsh == exact
+    for side in gate_sides:
+        lsh = {
+            (r["a"], r["b"])
+            for r in dedup.minhash_pairs(docs, 0.7).collect()
+        }
+        assert lsh == exact, side
     # the staged near-copies (id+10000) must all be found
     staged = {r["doc_id"] for r in docs.filter("doc_id >= 20000").collect()}
     near = {a for a, b in exact if b >= 10000 and b < 20000} | {
@@ -27,7 +29,9 @@ def test_minhash_equals_relational(spark):
     assert len(near) > 0
 
 
-def test_vectorized_minhash_matches_scalar_signature():
+def test_vectorized_minhash_matches_scalar_signature(spark, gate_sides):
+    import itertools
+
     import numpy as np
 
     from guac_spark.textops import minhash as mh
@@ -70,6 +74,41 @@ def test_vectorized_minhash_matches_scalar_signature():
     for i, g in enumerate(grams):
         want = mh.signature(g, a, b, link._gram_hash)
         assert np.array_equal(batch[i], want), surfs[i]
+
+    # both sides of minhash_pairs' gate band with the batch kernel, one
+    # Arrow batch of documents per call: at threshold 0, whole or in
+    # batches of 2, they return exactly the pairs whose scalar
+    # signatures share a band key, scored by the scalar set Jaccard
+    a, b = mh.hash_family(mh.N_HASHES)
+    docs = texts + [
+        "the quick brown fox jumps over the lazy dog again",
+        "a b c d e f g h i j k x",
+        "repeat repeat token repeat",
+    ]
+    # bigram_sets keeps the documents with at least two tokens
+    sets = {i: mh.word_bigrams(t) for i, t in enumerate(docs)
+            if len(t.split()) >= 2}
+    keys = {i: mh.band_keys(mh.signature(s, a, b, mh.shingle_hash)[None],
+                            mh.N_BANDS)[0] for i, s in sets.items()}
+    want = {
+        (i, j): round(len(sets[i] & sets[j]) / len(sets[i] | sets[j]), 6)
+        for i, j in itertools.combinations(sorted(sets), 2)
+        if (keys[i] == keys[j]).any()
+    }
+    assert len(want) >= 3
+    df = spark.createDataFrame(list(enumerate(docs)),
+                               "doc_id long, text string")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(conf)
+    try:
+        for side in gate_sides:
+            for batch in (default, "2"):
+                spark.conf.set(conf, batch)
+                got = {(r["a"], r["b"]): r["jacc"]
+                       for r in dedup.minhash_pairs(df, 0.0).collect()}
+                assert got == want, (side, batch)
+    finally:
+        spark.conf.set(conf, default)
 
 
 def test_vectorized_simhash_matches_scalar():
@@ -190,6 +229,19 @@ def test_driver_ann_topk_ivf_runs_one_job(spark):
     assert out.count() == 25
 
 
+def test_driver_minhash_pairs_runs_one_job(spark):
+    """Below the gate, MinHash near-dup pairs are the one collect of the
+    shingle relation (no Python-worker stage, no bucket or verify job),
+    and the caller's action adds one job for the local result."""
+    docs = dedup.staged_documents(dedup.load_documents(spark, SF_SMALL))
+    with job_group(spark, "minhash-driver"):
+        out = dedup.minhash_pairs(docs, 0.7)
+        assert group_jobs(spark, "minhash-driver") == 1
+        out.write.format("noop").mode("overwrite").save()
+        assert group_jobs(spark, "minhash-driver") == 2
+    assert out.count() > 0
+
+
 def test_round6_matches_spark_round(spark):
     """The driver side rounds output cos and IVF centroids as F.round
     does: HALF_UP on each double's shortest decimal repr, including the
@@ -220,7 +272,7 @@ def test_near_pairs_lsh_rejects_duplicate_ids(spark, gate_sides):
             similarity.cosine_near_pairs_lsh(dup, 0.99, n_bits=8)
 
 
-def test_minhash_banding_recall_vs_independent_exact(spark):
+def test_minhash_banding_recall_vs_independent_exact(spark, gate_sides):
     """ADVICE r3: the DuckDB oracle renders the implementation's own hash
     family into SQL, so a recall bug in hash_family/band_keys would cancel
     out in the driver compare. This test bounds banded recall against an
@@ -245,7 +297,6 @@ def test_minhash_banding_recall_vs_independent_exact(spark):
         rows.append((i * 2, t))
         rows.append((i * 2 + 1, " ".join(t.split()[:-1])))  # drop last word
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r["a"], r["b"]) for r in dedup.minhash_pairs(df, 0.7).collect()}
 
     sets = {i: mh.word_bigrams(t) for i, t in rows}
     want = set()
@@ -256,7 +307,10 @@ def test_minhash_banding_recall_vs_independent_exact(spark):
     assert len(want) == len(base)  # each base pairs with its variant only
     # recall: nothing the independent exact truth finds is dropped by
     # banding; precision: the exact verify keeps nothing below threshold
-    assert got == want
+    for side in gate_sides:
+        got = {(r["a"], r["b"])
+               for r in dedup.minhash_pairs(df, 0.7).collect()}
+        assert got == want, side
 
 
 def test_ivf_kmeans_full_probe_equals_bruteforce(spark, gate_sides):
