@@ -75,7 +75,8 @@ from .session import checkpoint_nostats
 # graph's BFS, shortest-path and toposort, embedding relations by
 # similarity's brute-force, LSH and IVF top-k and LSH near-dup pairs, and
 # document shingle relations by dedup's MinHash near-dup pairs. One Arrow
-# collect of 100k string pairs is a fraction of one distributed round.
+# collect of 100k string pairs is a fraction of one distributed round, and
+# past the limit the gate's one task stops after 100,001 rows.
 DRIVER_EDGE_LIMIT = 100_000
 # a distributed round broadcast-joins its frontier while it has at most
 # this many rows
@@ -88,13 +89,20 @@ def driver_edges(e: DataFrame, limit: int | None = None
     relation for similarity's searches, or a (doc_id, shingles) relation
     for dedup's MinHash pairs) as pandas when it has at most `limit` rows
     (None: DRIVER_EDGE_LIMIT, read at call time), else None. One Spark
-    job both decides the side and fetches the rows: `e` is limited to
-    `limit` + 1 rows (DRIVER_EDGE_LIMIT + 1 by default) and collected as
-    one Arrow table, which becomes pandas only on the driver side, so a
-    relation past the gate costs the collect but no pandas conversion."""
+    job of one stage both decides the side and fetches the rows: `e` is
+    coalesced to one partition, limited to `limit` + 1 rows
+    (DRIVER_EDGE_LIMIT + 1 by default) and collected as one Arrow table,
+    which becomes pandas only on the driver side, so a relation past the
+    gate costs the collect but no pandas conversion. The coalesce is what
+    keeps it one stage: over more than one partition the limit plans a
+    single-partition shuffle of every partition's first `limit` + 1 rows,
+    while the one task stops reading once it holds them. That task also
+    computes `e`'s rows alone, so a relation whose rows are costly to
+    build near the limit (bigram_sets' tokenizing of ~100k documents)
+    collects slower than through the shuffle's parallel tasks."""
     if limit is None:
         limit = DRIVER_EDGE_LIMIT
-    tbl = e.limit(limit + 1).toArrow()
+    tbl = e.coalesce(1).limit(limit + 1).toArrow()
     return tbl.to_pandas() if tbl.num_rows <= limit else None
 
 

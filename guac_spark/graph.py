@@ -5,9 +5,10 @@ assembler/backends/backends.go:27-185) and client-side analytics
 (/root/reference/pkg/guacanalytics/) as declarative Spark plans:
 
   * point/batch lookup, filtered scans, keyset pagination, substring search
-    — single-table filters Catalyst pushes into the parquet/Iceberg scan;
-  * neighbor expansion — two hash joins instead of GUAC's per-node
-    adjacency backlinks;
+    — single-table filters Catalyst pushes into the parquet/Iceberg scan; a
+    connection page is one top-k job whose scan also counts the relation;
+  * neighbor expansion — one filtered edge scan and one hash join instead
+    of GUAC's per-node adjacency backlinks;
   * path/BFS/toposort — an edge relation of at most cc.DRIVER_EDGE_LIMIT
     rows is collected in one Arrow job by cc.driver_edges, the one driver
     gate connected components uses too, and traversed in process, as GUAC
@@ -26,6 +27,9 @@ from collections import defaultdict, deque
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, LongType, StructField, StructType,
+)
 
 from . import cc
 from .assemble import attrs_col
@@ -157,11 +161,17 @@ def page_vertices_connection(
     (package.graphql:219-239: totalCount, hasNextPage, endCursor), all as
     columns so the result is one flat relation. totalCount is the
     cursor-independent full count (reference semantics); hasNextPage
-    comes from fetching first+1 keys and keeping first. An EMPTY page
-    (cursor past the end, empty table) still returns one sentinel row —
-    null vertex columns, has_next_page=false, the real total_count — so
-    the connection metadata the reference always reports survives
-    (ADVICE r2: the old crossJoin dropped it with the rows)."""
+    comes from fetching first+1 keys and keeping first, so first=0 still
+    reports whether rows lie past the cursor; a negative first raises
+    ValueError. An EMPTY page (cursor past the end, empty table, first=0)
+    still returns one sentinel row — null vertex columns, the real
+    has_next_page and total_count — so the connection metadata the
+    reference always reports survives (ADVICE r2: the old crossJoin
+    dropped it with the rows).
+
+    The page is fetched when this is called, in one Spark job, and
+    returned as a local relation (_page_connection).
+    """
     return _page_connection(vertices, "vertex_id", after, first)
 
 
@@ -169,32 +179,39 @@ def _page_connection(
     rel: DataFrame, key: str, after: str | None, first: int
 ) -> DataFrame:
     """Keyset connection page over `rel` ordered by `key` (the contract
-    page_vertices_connection documents)."""
-    total = rel.agg(F.count("*").cast("long").alias("total_count"))
-    filtered = rel
+    page_vertices_connection documents), in one Spark job run at call
+    time: an Observation counts `rel` on the scan that also takes the
+    first+1 smallest keys past the cursor (a top-k, so at most first+1
+    rows reach the driver), and the page, its pageInfo and totalCount are
+    composed on the driver. Every row field is nullable (the sentinel
+    row's are null), has_next_page and total_count are NOT NULL."""
+    if first < 0:
+        raise ValueError(f"first must be >= 0, got {first}")
+    obs = Observation()
+    filtered = rel.observe(obs, F.count(F.lit(1)).alias("n"))
     if after is not None:
         filtered = filtered.filter(F.col(key) > after)
-    w = Window.orderBy(key)
-    probe = (
-        filtered.orderBy(key).limit(first + 1)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(Window.partitionBy(F.lit(1))))
+    # collect, not toArrow: toArrow runs the top-k through a
+    # single-partition shuffle
+    rows = filtered.orderBy(key).limit(first + 1).collect()
+    page = rows[:first]
+    # ascending with nulls first: the last key is the page's max
+    meta = {"has_next_page": len(rows) > first,
+            "end_cursor": page[-1][key] if page else None,
+            "total_count": obs.get["n"]}
+    # object columns: a long column holding a null stays exact, not float
+    pdf = pd.DataFrame(
+        [tuple(r) for r in page] or [(None,) * len(rel.columns)],
+        columns=rel.columns, dtype=object,
+    ).assign(**meta)
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in rel.schema.fields] + [
+            StructField("has_next_page", BooleanType(), False),
+            StructField("end_cursor", rel.schema[key].dataType),
+            StructField("total_count", LongType(), False),
+        ]
     )
-    page = (
-        probe.filter(F.col("_rn") <= first)
-        .withColumn("has_next_page", F.col("_n") > first)
-        .withColumn("end_cursor", F.max(key).over(
-            Window.partitionBy(F.lit(1))))
-        .drop("_rn", "_n")
-    )
-    row_cols = [c for c in page.columns
-                if c not in ("has_next_page", "end_cursor")]
-    return total.join(page, F.lit(True), "left").select(
-        *row_cols,
-        F.coalesce("has_next_page", F.lit(False)).alias("has_next_page"),
-        "end_cursor",
-        "total_count",
-    )
+    return rel.sparkSession.createDataFrame(pdf, schema)
 
 
 def filter_edges_spec(
@@ -255,20 +272,21 @@ def neighbors(edges: DataFrame, vertices: DataFrame, canonical: str,
               using_only: list[str] | None = None) -> DataFrame:
     """All adjacent vertices of `canonical`, optionally pred-filtered.
 
-    Two directed halves unioned, then one join to vertices. The seed filter
-    prunes the edge scan (pushdown); vertices join is a hash join on the
-    canonical key.
+    One scan of the edges: the seed filter (src = c OR dst = c, the
+    pushed Or filter `known` uses too) prunes it, each edge's other
+    endpoint is its neighbour, and one hash join on the canonical key
+    attaches the vertices.
     """
     e = edges
     if using_only:
         e = e.filter(F.col("pred").isin(using_only))
-    fwd = e.filter(F.col("src") == canonical).select(
-        F.col("dst").alias("nbr"), "pred"
+    src, dst = F.col("src"), F.col("dst")
+    adj = (
+        e.filter((src == canonical) | (dst == canonical))
+        .select(F.when(src == canonical, dst).otherwise(src).alias("nbr"),
+                "pred")
+        .distinct()
     )
-    rev = e.filter(F.col("dst") == canonical).select(
-        F.col("src").alias("nbr"), "pred"
-    )
-    adj = fwd.unionByName(rev).distinct()
     return (
         adj.join(vertices, adj["nbr"] == vertices["canonical"])
         .select("vertex_id", "kind", "canonical", "pred")

@@ -49,20 +49,25 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def staged_documents(docs: DataFrame) -> DataFrame:
-    """documents ∪ exact copies (id%10==0) ∪ near copies (id%7==0)."""
-    base = docs.select("doc_id", "text")
-    exact = (
-        base.filter(F.col("doc_id") % 10 == 0)
-        .select((F.col("doc_id") + EXACT_COPY_OFFSET).alias("doc_id"), "text")
+    """documents ∪ exact copies (id%10==0) ∪ near copies (id%7==0), in
+    one scan: each document row explodes into itself and the copies its
+    id calls for (a null array slot for the others, filtered out)."""
+    d, text = F.col("doc_id"), F.col("text")
+
+    def row(doc_id, txt):
+        return F.struct(doc_id.alias("doc_id"), txt.alias("text"))
+
+    rows = F.array(
+        row(d, text),
+        F.when(d % 10 == 0, row(d + EXACT_COPY_OFFSET, text)),
+        F.when(d % 7 == 0,
+               row(d + NEAR_COPY_OFFSET, F.concat(text, F.lit(NEAR_SUFFIX)))),
     )
-    near = (
-        base.filter(F.col("doc_id") % 7 == 0)
-        .select(
-            (F.col("doc_id") + NEAR_COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(NEAR_SUFFIX)).alias("text"),
-        )
+    return (
+        docs.select(F.explode(rows).alias("r"))
+        .filter(F.col("r").isNotNull())
+        .select("r.doc_id", "r.text")
     )
-    return base.unionByName(exact).unionByName(near)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:

@@ -68,15 +68,23 @@ def _normed(emb: DataFrame, ident: str, side: str, *extra: str) -> DataFrame:
 def staged_embeddings(emb: DataFrame) -> DataFrame:
     """embeddings ∪ scaled copies (vec_id%10==0, ×1.001) — deterministic
     near-duplicates (cosine ≈ 1.0) for the near-dup oracle, since the
-    natural corpus is near-orthogonal (max pairwise cosine ≈ 0.51)."""
-    base = emb.select("vec_id", "embedding")
-    near = base.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
+    natural corpus is near-orthogonal (max pairwise cosine ≈ 0.51). One
+    scan: each row explodes into itself and, when its id calls for one,
+    its copy (a null array slot otherwise, filtered out)."""
+    v = F.col("vec_id")
+    copy = F.struct(
+        (v + 10000).alias("vec_id"),
         F.transform(
             "embedding", lambda x: (x.cast("double") * 1.001).cast("float")
         ).alias("embedding"),
     )
-    return base.unionByName(near)
+    rows = F.array(F.struct("vec_id", "embedding"),
+                   F.when(v % 10 == 0, copy))
+    return (
+        emb.select(F.explode(rows).alias("r"))
+        .filter(F.col("r").isNotNull())
+        .select("r.vec_id", "r.embedding")
+    )
 
 
 def cosine_near_pairs(emb: DataFrame, threshold: float = 0.99) -> DataFrame:

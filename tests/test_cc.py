@@ -7,7 +7,9 @@ import random
 
 from pyspark.sql import functions as F
 
-from guac_spark.cc import _union_find_local, connected_components
+from guac_spark.cc import (
+    _union_find_local, connected_components, driver_edges,
+)
 from tests.conftest import group_jobs, job_group
 
 
@@ -44,6 +46,25 @@ def test_driver_side_runs_one_job(spark, tmp_path):
         assert group_jobs(spark, "cc-driver") == 1
     assert sorted(map(tuple, m.collect())) == [
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+
+
+def test_gate_collects_in_one_stage(spark):
+    """The gate's collect is one job of one stage on a relation of several
+    partitions, on both sides of the gate: no single-partition shuffle
+    gathers the partitions' first rows before the collect."""
+    e = spark.range(0, 200, numPartitions=4).select(
+        F.col("id").cast("string").alias("src"),
+        (F.col("id") + 1).cast("string").alias("dst"),
+    )
+    sc = spark.sparkContext
+    for limit, n_rows in ((None, 200), (50, None)):
+        group = f"gate-{limit}"
+        with job_group(spark, group):
+            pairs = driver_edges(e, limit)
+            assert group_jobs(spark, group) == 1
+        assert (None if pairs is None else len(pairs)) == n_rows
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1
 
 
 def test_long_chain_converges(spark, distributed):

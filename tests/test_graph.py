@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, LongType, StringType, StructField, StructType,
+)
 
 from guac_spark import graph
 from tests.conftest import group_jobs, job_group
@@ -236,6 +239,52 @@ def test_page_connection_total_and_next(spark):
         assert erows[0]["total_count"] == 25
         assert erows[0]["has_next_page"] is False
         assert erows[0]["end_cursor"] is None
+        # no cursor: the page starts at the smallest key
+        head = connection(rel, after=None, first=3).collect()
+        assert [r[key] for r in head] == ["000", "001", "002"]
+        assert all(r["has_next_page"] and r["end_cursor"] == "002"
+                   for r in head)
+        # first=0 fetches one key: rows past the cursor mean a next page
+        zero = connection(rel, after="004", first=0).collect()
+        assert len(zero) == 1 and zero[0][key] is None
+        assert zero[0]["has_next_page"] is True
+        assert zero[0]["total_count"] == 25
+        assert connection(rel, after="024", first=0).collect()[0][
+            "has_next_page"] is False
+        with pytest.raises(ValueError, match="first"):
+            connection(rel, after=None, first=-1)
+        # empty relation: one sentinel row with total_count 0
+        nothing = connection(rel.filter(F.lit(False)), None, 10).collect()
+        assert len(nothing) == 1 and nothing[0][key] is None
+        assert nothing[0]["total_count"] == 0
+        assert nothing[0]["has_next_page"] is False
+    # the left-join schema: row fields nullable, page info NOT NULL
+    # except the cursor
+    assert graph.page_vertices_connection(verts, None, 5).schema == (
+        StructType([
+            StructField("vertex_id", StringType(), True),
+            StructField("kind", StringType(), True),
+            StructField("canonical", StringType(), True),
+            StructField("has_next_page", BooleanType(), False),
+            StructField("end_cursor", StringType(), True),
+            StructField("total_count", LongType(), False),
+        ]))
+
+
+def test_page_connection_runs_one_job(spark):
+    """A connection page is one Spark job at call time (the top-k that
+    also counts the relation), and the caller's action adds one job for
+    the local result."""
+    verts = spark.createDataFrame(
+        [(f"{i:03d}", "k", f"c{i}") for i in range(25)],
+        "vertex_id string, kind string, canonical string",
+    )
+    with job_group(spark, "page"):
+        page = graph.page_vertices_connection(verts, after="004", first=10)
+        assert group_jobs(spark, "page") == 1
+        page.write.format("noop").mode("overwrite").save()
+        assert group_jobs(spark, "page") == 2
+    assert page.count() == 10
 
 
 def test_keep_latest_deterministic_ties(spark):
